@@ -8,6 +8,15 @@ import org.apache.spark.sql.SparkSession
   * prints one JSON line for the driver.
   */
 object Bench {
+  /** `cpus` as REQUESTED (the env contract value), as a JSON value: a
+    * number, or an escaped JSON string for a non-numeric override (e.g.
+    * "*"), so no value can make the bench line invalid JSON.
+    */
+  private[graft] def cpusJson(cpus: String): String =
+    cpus.trim.toIntOption.map(_.toString).getOrElse(
+      org.json4s.jackson.JsonMethods.compact(
+        org.json4s.jackson.JsonMethods.render(org.json4s.JString(cpus))))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -253,14 +262,10 @@ object Bench {
     val probe = probeNames.flatMap(n => resultMap.get(n).filter(_ >= 0)
         .map(v => "\"" + n + "\":" + f"$v%.3f"))
       .mkString("{", ",", "}")
-    // read before stop(): defaultParallelism needs a live scheduler. cpus
-    // as REQUESTED (the env contract value); a non-numeric override (e.g.
-    // "*") must not produce invalid JSON
+    // read before stop(): defaultParallelism needs a live scheduler
     val effPar = spark.sparkContext.defaultParallelism
-    val cpusJson = scala.util.Try(cpus.trim.toInt).toOption
-      .map(_.toString).getOrElse("\"" + cpus + "\"")
     val scalingJson =
-      f""""cpus":$cpusJson,"effective_parallelism":$effPar,"scaling_probe":$probe"""
+      f""""cpus":${cpusJson(cpus)},"effective_parallelism":$effPar,"scaling_probe":$probe"""
     // FULL per-query map (240+ entries, ~7 KB) goes to a FILE: the driver
     // captures only a bounded tail of stdout, and r11/r12 both came back
     // `parsed: null` because the single 7 KB line lost its head to that

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.MaskFunctions
 import graft.plans.{DataMaskRule, DmlSecurityRewrite, RowFilterRule, TableScope}
-import graft.policy.PolicyManager
+import graft.policy.{PolicyManager, PolicyView}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.GraftSqlShims
@@ -142,9 +142,9 @@ final class SecurityContext(
     * user's plan BEFORE any rewrite, in every rewrite entry point.
     */
   private def enforceColumnDeny(user: String, api: String, sql: String,
-      plan: LogicalPlan): Unit = {
+      plan: LogicalPlan, policies: PolicyView): Unit = {
     val violations =
-      graft.plans.ColumnDenyCheck.violations(plan, user, policyManager, scope)
+      graft.plans.ColumnDenyCheck.violations(plan, user, policies, scope)
     if (violations.nonEmpty) {
       auditBuf.synchronized {
         auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
@@ -163,26 +163,33 @@ final class SecurityContext(
   /** Parse + analyze + column-deny gate — the shared front of every rewrite
     * entry point (deny beats both rewrites, so it runs first).
     */
-  private def checkedPlan(user: String, api: String, sql: String): LogicalPlan = {
+  private def checkedPlan(user: String, api: String, sql: String,
+      policies: PolicyView): LogicalPlan = {
     val base = analyzed(parseSql(sql))
-    enforceColumnDeny(user, api, sql, base)
+    enforceColumnDeny(user, api, sql, base, policies)
     base
   }
 
-  // --- rewrite-only API (reference SecurityContext.java:126-167) ---
+  // --- rewrite-only API (reference SecurityContext.java:126-167). Each
+  // entry point takes ONE policy view and decides the whole query against
+  // it: a concurrent policy write or a window closing mid-rewrite cannot
+  // split the query's decisions between two policy sets. ---
 
-  def rewriteRowFilter(user: String, sql: String): LogicalPlan =
+  def rewriteRowFilter(user: String, sql: String): LogicalPlan = {
+    val policies = policyManager.view()
     recordAudit(user, "row_filter", sql,
-      analyzed(RowFilterRule(spark, user, policyManager, scope)(
-        checkedPlan(user, "row_filter", sql))))
+      analyzed(RowFilterRule(spark, user, policies, scope)(
+        checkedPlan(user, "row_filter", sql, policies))))
+  }
 
   def rewriteDataMask(user: String, sql: String): LogicalPlan = {
+    val policies = policyManager.view()
     // deny gate (denyOnly row-filter pass): the mask-only entry point must
     // never return rows of a DENIED table — without it, dfDataMask alone
     // would be fail-open relative to Ranger semantics
-    val denyGated = RowFilterRule(spark, user, policyManager, scope,
-      denyOnly = true)(checkedPlan(user, "data_mask", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, auditIdentity = true)
+    val denyGated = RowFilterRule(spark, user, policies, scope,
+      denyOnly = true)(checkedPlan(user, "data_mask", sql, policies))
+    val rule = DataMaskRule(spark, user, policies, scope, auditIdentity = true)
     recordAudit(user, "data_mask", sql,
       analyzed(rule(denyGated)), rule.identityAudit.toSeq)
   }
@@ -191,9 +198,10 @@ final class SecurityContext(
     * (SecurityContext.java:154-167).
     */
   def mixedRewrite(user: String, sql: String): LogicalPlan = {
-    val filtered = RowFilterRule(spark, user, policyManager, scope)(
-      checkedPlan(user, "mixed", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, auditIdentity = true)
+    val policies = policyManager.view()
+    val filtered = RowFilterRule(spark, user, policies, scope)(
+      checkedPlan(user, "mixed", sql, policies))
+    val rule = DataMaskRule(spark, user, policies, scope, auditIdentity = true)
     recordAudit(user, "mixed", sql,
       analyzed(rule(filtered)), rule.identityAudit.toSeq)
   }
@@ -204,9 +212,10 @@ final class SecurityContext(
     * reference's filter-sees-masked-values quirk is not wanted.
     */
   def mixedRewriteRawFilter(user: String, sql: String): LogicalPlan = {
-    val filtered = RowFilterRule(spark, user, policyManager, scope)(
-      checkedPlan(user, "mixed_raw_filter", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, filterOnRaw = true,
+    val policies = policyManager.view()
+    val filtered = RowFilterRule(spark, user, policies, scope)(
+      checkedPlan(user, "mixed_raw_filter", sql, policies))
+    val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw = true,
       auditIdentity = true)
     recordAudit(user, "mixed_raw_filter", sql,
       analyzed(rule(filtered)), rule.identityAudit.toSeq)
@@ -252,7 +261,7 @@ final class SecurityContext(
     * denied tables/columns (after auditing the denial).
     */
   def rewriteDml(user: String, sql: String): LogicalPlan = {
-    val rule = DmlSecurityRewrite(spark, user, policyManager, scope)
+    val rule = DmlSecurityRewrite(spark, user, policyManager.view(), scope)
     def crumbs(): Seq[(String, String)] = rule.dmlAudit.toSeq.map { c =>
       val Array(action, rest) = c.split("\\|", 2)
       (action, rest)

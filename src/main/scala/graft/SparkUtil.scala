@@ -4,6 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 object SparkUtil {
 
+  /** Cores for a tool's `local[N]` master and shuffle partitions:
+    * `SPARK_GRAFT_CPUS` when it is a number, else the JVM's
+    * `availableProcessors` (which honours CPU affinity and quotas).
+    */
+  def localCpus(): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** One lock per session (weakly keyed — must not outlive the session):
     * `spark.sql.shuffle.partitions` is session-global mutable state, so two
     * threads interleaving save/set/restore can permanently strand the conf

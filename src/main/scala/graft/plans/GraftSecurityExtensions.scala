@@ -35,11 +35,13 @@ class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
           case Some(u) =>
             ensureFunctions(session)
             val s = scopeOf(session)
-            val filtered = RowFilterRule(session, u, policies, s, postAnalysis = false)(plan)
+            // one policy snapshot for both rules of this pass
+            val view = policies.view()
+            val filtered = RowFilterRule(session, u, view, s, postAnalysis = false)(plan)
             // Masking needs resolved outputs to propagate fresh exprIds; wait
             // for the fixed point to resolve everything (incl. the filter
             // conditions injected above), then the next pass masks.
-            if (filtered.resolved) DataMaskRule(session, u, policies, s)(filtered)
+            if (filtered.resolved) DataMaskRule(session, u, view, s)(filtered)
             else filtered
           case None => plan
         }
@@ -51,7 +53,7 @@ class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
     // instead of rewriting: a denied column read fails closed, never nulls.
     e.injectCheckRule { session => plan =>
       currentUser(session).foreach { u =>
-        val vs = ColumnDenyCheck.violations(plan, u, policies, scopeOf(session))
+        val vs = ColumnDenyCheck.violations(plan, u, policies.view(), scopeOf(session))
         if (vs.nonEmpty) throw new graft.ColumnAccessDeniedException(
           s"user '$u' is denied column(s) " +
             vs.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +

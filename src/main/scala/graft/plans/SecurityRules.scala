@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.policy.PolicyManager
+import graft.policy.PolicyView
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -36,6 +36,11 @@ import org.apache.spark.sql.types.Metadata
   *
   * Re-entrancy (the reference's javassist `custom` flag hack,
   * SecurityContext.java:67-90) is a plain TreeNodeTag here.
+  *
+  * The rules read policies through a [[graft.policy.PolicyView]]. Callers
+  * pass one [[graft.policy.PolicyManager.view]] per query (or per analyzer
+  * pass in extension mode), so every scan of it is decided against the same
+  * policy snapshot and the same instant.
   *
   * Scale note: rules run once per query on the driver; the injected Filter
   * sits directly above the scan, so Catalyst pushes predicates into the
@@ -165,11 +170,11 @@ object ColumnDenyCheck {
     * regardless of the select list — touching the column is reading it,
     * the fail-closed reading Hive's column authorization uses).
     */
-  def violations(plan: LogicalPlan, user: String, policies: PolicyManager,
+  def violations(plan: LogicalPlan, user: String, policies: PolicyView,
       scope: TableScope): Seq[(String, Seq[String])] = {
     // fast path: no column-deny policies at all -> skip the plan walk
     // (driver-side and plan-sized either way, but this runs per query)
-    if (policies.columnDenyPolicies.isEmpty) return Nil
+    if (!policies.hasColumnDenies) return Nil
     val scans = plan.collectWithSubqueries {
       case SubqueryAlias(id, child) if injectedChain(child).isDefined =>
         (PlanShapes.tableParts(id, scope), injectedChain(child).get)
@@ -356,7 +361,7 @@ trait SecurityRuleSupport {
 final case class RowFilterRule(
     spark: SparkSession,
     user: String,
-    policies: PolicyManager,
+    policies: PolicyView,
     override val scope: TableScope,
     postAnalysis: Boolean = true,
     /** true: inject ONLY deny decisions (condition `false` on denied
@@ -435,7 +440,7 @@ final case class RowFilterRule(
 final case class DataMaskRule(
     spark: SparkSession,
     user: String,
-    policies: PolicyManager,
+    policies: PolicyView,
     override val scope: TableScope,
     /** false (default): reference semantics — injected row filters sit above
       * the mask and evaluate over MASKED values (SecurityContext.java:154-167).
@@ -661,7 +666,7 @@ final case class DataMaskRule(
 final case class DmlSecurityRewrite(
     spark: SparkSession,
     user: String,
-    policies: PolicyManager,
+    policies: PolicyView,
     override val scope: TableScope
 ) extends SecurityRuleSupport {
 

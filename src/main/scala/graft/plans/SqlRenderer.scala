@@ -32,6 +32,8 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *  - Analyzer-inserted casts are stripped; literals print in Calcite style
   *    (booleans uppercase, decimals plain); `count(1)` prints `COUNT(*)`.
   *  - `INSERT INTO sink (SELECT ...)` with Calcite's automatic parentheses.
+  *  - IN / EXISTS / scalar subqueries render their own plan by the same
+  *    rules, so the filters and masks injected inside them show in the text.
   */
 object SqlRenderer {
 
@@ -260,6 +262,13 @@ object SqlRenderer {
       case LessThan(l, r) => s"${t(l)} < ${t(r)}"
       case LessThanOrEqual(l, r) => s"${t(l)} <= ${t(r)}"
       case Not(EqualTo(l, r)) => s"${t(l)} <> ${t(r)}"
+      // subquery expressions render their plan, injected policies included
+      case OuterReference(a) => t(a)
+      case i: InSubquery => s"${inLhs(i)} IN ( ${renderSelect(i.query.plan)} )"
+      case Not(i: InSubquery) => s"${inLhs(i)} NOT IN ( ${renderSelect(i.query.plan)} )"
+      case e: Exists => s"EXISTS ( ${renderSelect(e.plan)} )"
+      case Not(e: Exists) => s"NOT EXISTS ( ${renderSelect(e.plan)} )"
+      case sq: ScalarSubquery => s"( ${renderSelect(sq.plan)} )"
       case ae: AggregateExpression => ae.aggregateFunction match {
         case Count(Seq(Literal(1, _))) if !ae.isDistinct => "COUNT(*)"
         case Count(args) =>
@@ -269,6 +278,8 @@ object SqlRenderer {
       }
       case other => other.sql
     }
+    def inLhs(i: InSubquery): String =
+      if (i.values.length == 1) t(i.values.head) else i.values.map(t).mkString("(", ", ", ")")
     t(e)
   }
 }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.ConfAB <query,...> [dir]
   * Env:   SPARK_GRAFT_AB_CONFS  k=v;k=v — the B arm (required)
   *        SPARK_GRAFT_AB_PAIRS  interleaved pairs per query (default 3)
+  *        SPARK_GRAFT_CPUS      local[N] and shuffle partitions (default:
+  *                              the JVM's available processors)
   */
 object ConfAB {
   def main(args: Array[String]): Unit = {
@@ -22,8 +24,9 @@ object ConfAB {
       sys.error("SPARK_GRAFT_AB_CONFS required")).split(";").toSeq
       .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
     val pairs = sys.env.getOrElse("SPARK_GRAFT_AB_PAIRS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = graft.SparkUtil.localCpus()
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -453,4 +453,38 @@ class SqlGoldenSpec extends SparkFunSuite {
           "WHERE orders.region = 'beijing' AND p.name = 'hammer'")
     }
   }
+
+  test("IN, EXISTS and scalar subqueries render with their injected filters and masks") {
+    withCtx(mixedPolicies) { c =>
+      val got = c.mixedRewriteSql(USER_A,
+        "SELECT id, name FROM products WHERE id IN " +
+          "(SELECT product_id FROM orders WHERE price > 45.0) " +
+          "AND EXISTS (SELECT o.order_id FROM orders AS o WHERE o.product_id = products.id)")
+      assertGolden(got,
+        s"SELECT products.id, products.name FROM $maskedProducts AS products " +
+          "WHERE products.id IN (SELECT orders.product_id " +
+          s"FROM $maskedOrders AS orders " +
+          "WHERE orders.price > 45.0 AND orders.region = 'beijing') " +
+          "AND EXISTS (SELECT o.order_id " +
+          s"FROM $maskedOrders AS o " +
+          "WHERE o.product_id = products.id AND o.region = 'beijing') " +
+          "AND products.name = 'hammer'")
+      // the text is SQL again, not a `listquery()` / `exists()` stub
+      spark.sessionState.sqlParser.parsePlan(got)
+      val negated = c.mixedRewriteSql(USER_A,
+        "SELECT id FROM products WHERE id NOT IN (SELECT product_id FROM orders) " +
+          "AND NOT EXISTS (SELECT s.order_id FROM shipments AS s WHERE s.order_id = products.id) " +
+          "AND id < (SELECT max(product_id) AS m FROM orders)")
+      assertGolden(negated,
+        s"SELECT products.id FROM $maskedProducts AS products " +
+          "WHERE products.id NOT IN (SELECT orders.product_id " +
+          s"FROM $maskedOrders AS orders WHERE orders.region = 'beijing') " +
+          "AND NOT EXISTS (SELECT s.order_id FROM hive.default.shipments AS s " +
+          "WHERE s.order_id = products.id) " +
+          "AND products.id < (SELECT MAX(orders.product_id) AS m " +
+          s"FROM $maskedOrders AS orders WHERE orders.region = 'beijing') " +
+          "AND products.name = 'hammer'")
+      spark.sessionState.sqlParser.parsePlan(negated)
+    }
+  }
 }
