@@ -1219,6 +1219,10 @@ object Dedup {
     * Every stage is a linear shuffle of (hash, count) shaped rows — the word
     * arrays themselves ride a shuffle only for the final verify of actual
     * candidates.
+    *
+    * The returned DataFrame is an eager local checkpoint, and the caller
+    * owns it: release its blocks with `GraftSqlShims.unpersistCheckpoint`
+    * when done (`Dataset.unpersist` is a no-op on a local checkpoint).
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double,

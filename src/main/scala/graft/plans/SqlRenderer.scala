@@ -28,7 +28,8 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *    `(SELECT ..., CAST(fn(col) AS TYPE) AS col, ... FROM cat.db.t) AS a`
   *    with UNQUALIFIED inner columns and the policy's transformer text
   *    verbatim (recorded on the Alias by DataMaskRule under [[MaskSqlTag]]
-  *    — the composed Catalyst expression has no faithful inverse).
+  *    — the built expression keeps only normalized arguments). Mask calls
+  *    in the user's own query render as the registered call.
   *  - Analyzer-inserted casts are stripped; literals print in Calcite style
   *    (booleans uppercase, decimals plain); `count(1)` prints `COUNT(*)`.
   *  - `INSERT INTO sink (SELECT ...)` with Calcite's automatic parentheses.
@@ -269,6 +270,9 @@ object SqlRenderer {
       case e: Exists => s"EXISTS ( ${renderSelect(e.plan)} )"
       case Not(e: Exists) => s"NOT EXISTS ( ${renderSelect(e.plan)} )"
       case sq: ScalarSubquery => s"( ${renderSelect(sq.plan)} )"
+      // the mask kernel renders as the registered call it was built from
+      case m: graft.functions.MaskRegion =>
+        s"${m.prettyName}(${m.callArgs.map(t).mkString(", ")})"
       case ae: AggregateExpression => ae.aggregateFunction match {
         case Count(Seq(Literal(1, _))) if !ae.isDistinct => "COUNT(*)"
         case Count(args) =>

@@ -83,6 +83,23 @@ class MaskFunctionsSpec extends SparkFunSuite {
     assert(sql1("select mask(cast(null as int))") == null)
   }
 
+  test("negative n counts as 0, as Hive clamps charCount < 0") {
+    assert(sql1("select mask_first_n('abcdef', -2)") == "abcdef")
+    assert(sql1("select mask_last_n('abcdef', -2)") == "abcdef")
+    assert(sql1("select mask_show_first_n('abcdef', -2)") == "xxxxxx")
+    assert(sql1("select mask_show_last_n('abcdef', -2)") == "xxxxxx")
+    assert(sql1("select mask_first_n(123456, -3)") == 123456)
+    assert(sql1("select mask_last_n(123456, -3)") == 123456)
+    assert(sql1("select mask_show_first_n(-123456, -3)") == -111111)
+    assert(sql1("select mask_show_last_n(-123456, -3)") == -111111)
+  }
+
+  test("a NULL n gives NULL, never the unmasked value") {
+    assert(sql1("select mask_show_last_n(12345, NULL)") == null)
+    assert(sql1("select mask_first_n(12345, cast(null as int))") == null)
+    assert(sql1("select mask_show_first_n('abc', NULL)") == null)
+  }
+
   test("date variant MASK_DATE_SHOW_YEAR keeps year, resets month/day") {
     assert(sql1("select mask(date'2020-07-30', 'x', 'x', 'x', -1, '1', 1, 0, -1)")
       .toString == "2020-01-01")

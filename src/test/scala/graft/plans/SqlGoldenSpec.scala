@@ -487,4 +487,28 @@ class SqlGoldenSpec extends SparkFunSuite {
       spark.sessionState.sqlParser.parsePlan(negated)
     }
   }
+  test("a user query calling mask functions over a filtered, masked table renders SQL that re-runs") {
+    withCtx(mixedPolicies) { c =>
+      spark.sql("""INSERT INTO hive.default.orders VALUES
+        (101, TIMESTAMP'2020-07-30 10:08:22', 'Jack Smith', 10, 50.5, false, 'beijing'),
+        (102, TIMESTAMP'2020-07-30 10:11:09', 'Sally-Ann 42', 11, 15.0, true, 'beijing'),
+        (-1003, TIMESTAMP'2020-07-30 12:00:30', 'Zoë', 12, 25.5, false, 'beijing'),
+        (104, TIMESTAMP'2020-07-30 12:00:30', 'Edward', 12, 25.5, false, 'hangzhou')""")
+      try {
+        val query = "SELECT order_id, mask_show_last_n(customer_name, 3) AS tail, " +
+          "mask_first_n(order_id, 2) AS id2 FROM orders WHERE product_id > 10"
+        val got = c.mixedRewriteSql(USER_A, query)
+        assertGolden(got,
+          "SELECT orders.order_id, " +
+            "mask_show_last_n(orders.customer_name, 3, 'X', 'x', 'n', NULL) AS tail, " +
+            "mask_first_n(orders.order_id, 2, NULL, NULL, NULL, NULL, '1') AS id2 " +
+            s"FROM $maskedOrders AS orders " +
+            "WHERE orders.product_id > 10 AND orders.region = 'beijing'")
+        val want = c.dfMixed(USER_A, query).collect().toSet
+        assert(want.map(_.toSeq) == Set(Seq(102, "Xxxxx-Xxx nn", 112), Seq(-1003, "Xxx", -1103)))
+        assert(spark.sql(got).collect().toSet == want)
+      } finally spark.sql(
+        "INSERT OVERWRITE hive.default.orders SELECT * FROM hive.default.orders WHERE false")
+    }
+  }
 }
