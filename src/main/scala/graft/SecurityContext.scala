@@ -1,8 +1,8 @@
 package graft
 
 import graft.functions.MaskFunctions
-import graft.plans.{DataMaskRule, DmlSecurityRewrite, RowFilterRule, TableScope}
-import graft.policy.{PolicyManager, PolicyView}
+import graft.plans.{DmlSecurityRewrite, Enforcement, TableScope}
+import graft.policy.PolicyManager
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.GraftSqlShims
@@ -25,14 +25,27 @@ case class AuditEntry(seq: Long, principal: String, action: String,
   */
 class ColumnAccessDeniedException(message: String) extends RuntimeException(message)
 
+object ColumnAccessDeniedException {
+  /** The one wording of a column denial: `what` ("the query", "the DML
+    * statement") references the (cat.db.table, columns) `violations`.
+    */
+  def apply(user: String, violations: Seq[(String, Seq[String])],
+      what: String): ColumnAccessDeniedException =
+    new ColumnAccessDeniedException(s"user '$user' is denied column(s) " +
+      violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
+      s" — $what references them and fails closed")
+}
+
 /** User-facing facade — the Spark-native equivalent of the reference's
   * SecurityContext (SecurityContext.java:126-242).
   *
-  * Lifecycle per query: parse -> analyze -> inject (RowFilterRule then
-  * DataMaskRule) -> re-analyze -> execute. The re-analysis replaces the
+  * Lifecycle per query: parse -> analyze -> enforce (column-deny gate,
+  * RowFilterRule, DataMaskRule: [[graft.plans.Enforcement]], the path the
+  * auto-enforcement extension runs too) -> checkAnalysis -> execute. The
+  * rules emit resolved nodes, so the rewritten plan is checked once and
+  * marked analyzed instead of analyzed a second time; that replaces the
   * reference's SQL-string round trip (toString + Flink re-parse,
-  * SecurityContext.java:134) and gives name resolution, star expansion and
-  * type coercion of injected policy expressions for free.
+  * SecurityContext.java:134).
   */
 final class SecurityContext(
     val spark: SparkSession,
@@ -78,38 +91,35 @@ final class SecurityContext(
 
   private val auditBuf = scala.collection.mutable.ArrayBuffer.empty[AuditEntry]
 
-  /** Record the submission plus every policy application found in the
-    * rewritten plan (the rules leave `SecurityTags.*Audit` breadcrumbs at
-    * each injection site; collectWithSubqueries also reaches plans inside
-    * EXISTS/IN/scalar subquery expressions), plus any identity-only mask
-    * decisions the rule reported out-of-band (MASK_NONE-only scans build no
-    * Project to tag — [[graft.plans.DataMaskRule.identityAudit]]); those
-    * follow the plan-collected rows. Driver-side, bounded by the number of
-    * policied scans in the plan — never data-sized. Appends take one
-    * monitor so concurrent rewrites through a shared context cannot corrupt
-    * the buffer or duplicate seq values (seq derives from size at append).
+  /** Record one submission (action QUERY) and the access decisions it
+    * produced, each an (action, "cat.db.table|detail") crumb. Driver-side,
+    * bounded by the number of policied scans in the plan — never
+    * data-sized. Appends take one monitor so concurrent rewrites through a
+    * shared context cannot corrupt the buffer or duplicate seq values (seq
+    * derives from size at append).
     */
-  private def recordAudit(user: String, api: String, sql: String,
-      plan: LogicalPlan, identityMasks: Seq[String] = Nil): LogicalPlan = {
-    val decisions = plan.collectWithSubqueries {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).isDefined =>
-        ("ROW_FILTER", f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).get)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowDenyAudit).isDefined =>
-        ("ROW_DENY", f.getTagValue(graft.plans.SecurityTags.RowDenyAudit).get)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project
-          if p.getTagValue(graft.plans.SecurityTags.MaskAudit).isDefined =>
-        ("DATA_MASK", p.getTagValue(graft.plans.SecurityTags.MaskAudit).get)
-    } ++ identityMasks.map(("DATA_MASK", _))
-    auditBuf.synchronized {
-      auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
-      decisions.foreach { case (action, crumb) =>
-        val Array(obj, detail) = crumb.split("\\|", 2)
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-      }
+  private def audit(user: String, api: String, sql: String,
+      decisions: Seq[(String, String)]): Unit = auditBuf.synchronized {
+    auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
+    decisions.foreach { case (action, crumb) =>
+      val Array(obj, detail) = crumb.split("\\|", 2)
+      auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
     }
-    plan
+  }
+
+  /** The policy applications the rules tagged in a rewritten plan
+    * (`SecurityTags.*Audit` breadcrumbs at each injection site;
+    * collectWithSubqueries also reaches plans inside EXISTS/IN/scalar
+    * subquery expressions).
+    */
+  private def planDecisions(plan: LogicalPlan): Seq[(String, String)] = {
+    import graft.plans.SecurityTags._
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    plan.collectWithSubqueries {
+      case f: Filter => f.getTagValue(RowFilterAudit).map("ROW_FILTER" -> _)
+        .orElse(f.getTagValue(RowDenyAudit).map("ROW_DENY" -> _))
+      case p: Project => p.getTagValue(MaskAudit).map("DATA_MASK" -> _)
+    }.flatten
   }
 
   /** The audit trail as a DataFrame (seq, principal, action, obj, detail),
@@ -127,99 +137,54 @@ final class SecurityContext(
   /** Catalog schema lookup (reference getTable, SecurityContext.java:253-292). */
   def getTable(table: String): StructType = spark.table(table).schema
 
-  // --- column-deny enforcement (Ranger column-level deny) ---
-
-  /** Fail CLOSED when the analyzed plan references a column an active
-    * [[graft.policy.ColumnDenyPolicy]] denies to `user`: record the denial
-    * (audit action COLUMN_DENY, after the submission's QUERY row) and throw
-    * [[ColumnAccessDeniedException]] — an analysis-time error, never a
-    * silent null or a mask (deny beats mask at any specificity). References
-    * are collected from the plan ABOVE each base-table scan only (a temp
-    * view's INTERNAL projections don't count as the user reading a column),
-    * including subquery expressions; `SELECT *` expands to every column
-    * during analysis, so a star over a denied column fails too. A query
-    * touching only the table's other columns passes untouched. Runs on the
-    * user's plan BEFORE any rewrite, in every rewrite entry point.
+  /** The one read rewrite behind every entry point: parse, analyze, then
+    * [[graft.plans.Enforcement]] against ONE policy view — a concurrent
+    * policy write or a window closing mid-rewrite cannot split the query's
+    * decisions between two policy sets. A column denial records the
+    * submission and its COLUMN_DENY rows, then throws
+    * [[ColumnAccessDeniedException]]. The rewritten plan is checked once
+    * and marked analyzed; the audit then records the submission, the
+    * decisions tagged in the plan, and any identity-only mask decisions
+    * (MASK_NONE-only scans build no Project to tag —
+    * [[graft.plans.DataMaskRule.identityAudit]]) after them.
     */
-  private def enforceColumnDeny(user: String, api: String, sql: String,
-      plan: LogicalPlan, policies: PolicyView): Unit = {
-    val violations =
-      graft.plans.ColumnDenyCheck.violations(plan, user, policies, scope)
-    if (violations.nonEmpty) {
-      auditBuf.synchronized {
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
-        violations.foreach { case (obj, cols) =>
-          auditBuf += AuditEntry(auditBuf.size.toLong, user, "COLUMN_DENY",
-            obj, cols.mkString(","))
-        }
-      }
-      throw new ColumnAccessDeniedException(
-        s"user '$user' is denied column(s) " +
-          violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-          " — the query references them and fails closed")
-    }
+  private def rewrite(user: String, api: String, sql: String,
+      rowFilters: Boolean = true, masks: Boolean = true,
+      filterOnRaw: Boolean = false): LogicalPlan = {
+    val (plan, identityMasks) = Enforcement(spark, user, policyManager.view(), scope,
+      analyzed(parseSql(sql)), rowFilters = rowFilters, masks = masks,
+      filterOnRaw = filterOnRaw,
+      onDeny = vs => audit(user, api, sql,
+        vs.map { case (obj, cols) => "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}" }))
+    GraftSqlShims.checkedAnalyzed(spark, plan)
+    audit(user, api, sql, planDecisions(plan) ++ identityMasks.map("DATA_MASK" -> _))
+    plan
   }
 
-  /** Parse + analyze + column-deny gate — the shared front of every rewrite
-    * entry point (deny beats both rewrites, so it runs first).
+  // --- rewrite-only API (reference SecurityContext.java:126-167) ---
+
+  def rewriteRowFilter(user: String, sql: String): LogicalPlan =
+    rewrite(user, "row_filter", sql, masks = false)
+
+  /** Masks behind the deny gate (deny decisions only, no allow-filters):
+    * the mask-only entry point must never return rows of a DENIED table —
+    * without it, dfDataMask alone would be fail-open relative to Ranger.
     */
-  private def checkedPlan(user: String, api: String, sql: String,
-      policies: PolicyView): LogicalPlan = {
-    val base = analyzed(parseSql(sql))
-    enforceColumnDeny(user, api, sql, base, policies)
-    base
-  }
-
-  // --- rewrite-only API (reference SecurityContext.java:126-167). Each
-  // entry point takes ONE policy view and decides the whole query against
-  // it: a concurrent policy write or a window closing mid-rewrite cannot
-  // split the query's decisions between two policy sets. ---
-
-  def rewriteRowFilter(user: String, sql: String): LogicalPlan = {
-    val policies = policyManager.view()
-    recordAudit(user, "row_filter", sql,
-      analyzed(RowFilterRule(spark, user, policies, scope)(
-        checkedPlan(user, "row_filter", sql, policies))))
-  }
-
-  def rewriteDataMask(user: String, sql: String): LogicalPlan = {
-    val policies = policyManager.view()
-    // deny gate (denyOnly row-filter pass): the mask-only entry point must
-    // never return rows of a DENIED table — without it, dfDataMask alone
-    // would be fail-open relative to Ranger semantics
-    val denyGated = RowFilterRule(spark, user, policies, scope,
-      denyOnly = true)(checkedPlan(user, "data_mask", sql, policies))
-    val rule = DataMaskRule(spark, user, policies, scope, auditIdentity = true)
-    recordAudit(user, "data_mask", sql,
-      analyzed(rule(denyGated)), rule.identityAudit.toSeq)
-  }
+  def rewriteDataMask(user: String, sql: String): LogicalPlan =
+    rewrite(user, "data_mask", sql, rowFilters = false)
 
   /** Row filter BEFORE mask — fixed order, filters see masked values
     * (SecurityContext.java:154-167).
     */
-  def mixedRewrite(user: String, sql: String): LogicalPlan = {
-    val policies = policyManager.view()
-    val filtered = RowFilterRule(spark, user, policies, scope)(
-      checkedPlan(user, "mixed", sql, policies))
-    val rule = DataMaskRule(spark, user, policies, scope, auditIdentity = true)
-    recordAudit(user, "mixed", sql,
-      analyzed(rule(filtered)), rule.identityAudit.toSeq)
-  }
+  def mixedRewrite(user: String, sql: String): LogicalPlan = rewrite(user, "mixed", sql)
 
   /** Ranger-style composition (the divergence switch of SURVEY §7.3): row
     * filters evaluate over RAW column values; masking applies to the output
     * only. Use when a policy filters on a column that is also masked and the
     * reference's filter-sees-masked-values quirk is not wanted.
     */
-  def mixedRewriteRawFilter(user: String, sql: String): LogicalPlan = {
-    val policies = policyManager.view()
-    val filtered = RowFilterRule(spark, user, policies, scope)(
-      checkedPlan(user, "mixed_raw_filter", sql, policies))
-    val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw = true,
-      auditIdentity = true)
-    recordAudit(user, "mixed_raw_filter", sql,
-      analyzed(rule(filtered)), rule.identityAudit.toSeq)
-  }
+  def mixedRewriteRawFilter(user: String, sql: String): LogicalPlan =
+    rewrite(user, "mixed_raw_filter", sql, filterOnRaw = true)
 
   // --- rewrite-to-SQL API (best-effort text, for diffing/goldens; the
   // reference returns SQL strings, SecurityContext.java:126-167) ---
@@ -262,43 +227,19 @@ final class SecurityContext(
     */
   def rewriteDml(user: String, sql: String): LogicalPlan = {
     val rule = DmlSecurityRewrite(spark, user, policyManager.view(), scope)
-    def crumbs(): Seq[(String, String)] = rule.dmlAudit.toSeq.map { c =>
-      val Array(action, rest) = c.split("\\|", 2)
-      (action, rest)
-    }
     val rewritten =
       try rule(parseSql(sql))
       catch { case e: ColumnAccessDeniedException =>
-        auditBuf.synchronized {
-          auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", "dml", sql)
-          crumbs().foreach { case (action, crumb) =>
-            val Array(obj, detail) = crumb.split("\\|", 2)
-            auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-          }
-        }
+        audit(user, "dml", sql, rule.dmlAudit.toSeq)
         throw e
       }
     // source-side rule applications carry the ordinary plan tags; the
     // target-side constraint (a condition rewrite, no plan node to tag)
-    // arrives through the rule's crumb buffer
+    // arrives through the rule's crumb buffer. The merge rewrite replays the
+    // source subtree into several plan positions (join leg, cardinality
+    // check) — one policy decision, one audit row.
     val plan = analyzed(rewritten)
-    val tagged = plan.collectWithSubqueries {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).isDefined =>
-        ("ROW_FILTER", f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).get)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project
-          if p.getTagValue(graft.plans.SecurityTags.MaskAudit).isDefined =>
-        ("DATA_MASK", p.getTagValue(graft.plans.SecurityTags.MaskAudit).get)
-    }.distinct // the merge rewrite replays the source subtree into several
-               // plan positions (join leg, cardinality check) — one policy
-               // decision, one audit row
-    auditBuf.synchronized {
-      auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", "dml", sql)
-      (crumbs() ++ tagged).foreach { case (action, crumb) =>
-        val Array(obj, detail) = crumb.split("\\|", 2)
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-      }
-    }
+    audit(user, "dml", sql, rule.dmlAudit.toSeq ++ planDecisions(plan).distinct)
     plan
   }
 

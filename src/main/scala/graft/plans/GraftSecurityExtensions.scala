@@ -20,47 +20,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *   spark.sql("SELECT * FROM orders")              // filtered + masked
   * }}}
   *
-  * The rules run inside the analyzer's resolution fixed point: filters are
-  * injected unresolved and resolved by the surrounding batch; masks resolve
-  * eagerly. An unset/empty `spark.graft.user` disables enforcement (internal
-  * queries, admin sessions).
+  * One post-hoc resolution rule runs [[Enforcement]], the path
+  * [[graft.SecurityContext]] runs, once per analysis: after the analyzer's
+  * fixed point and after `DataSourceAnalysis`, so INSERT bodies are already
+  * write commands whose query the rules reach. Subquery and view bodies get
+  * it from their own nested analyses. An unset/empty `spark.graft.user`
+  * disables enforcement (internal queries, admin sessions).
   */
 class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftSecurityExtensions._
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectResolutionRule { session =>
-      new Rule[LogicalPlan] {
-        override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
-          case Some(u) =>
-            ensureFunctions(session)
-            val s = scopeOf(session)
-            // one policy snapshot for both rules of this pass
-            val view = policies.view()
-            val filtered = RowFilterRule(session, u, view, s, postAnalysis = false)(plan)
-            // Masking needs resolved outputs to propagate fresh exprIds; wait
-            // for the fixed point to resolve everything (incl. the filter
-            // conditions injected above), then the next pass masks.
-            if (filtered.resolved) DataMaskRule(session, u, view, s)(filtered)
-            else filtered
-          case None => plan
-        }
-      }
-    }
-    // column-level deny: analysis-time check over the fully-analyzed plan
-    // (the rules above have already injected their nodes — ColumnDenyCheck
-    // skips tagged machinery, so only the USER's references count). Throws
-    // instead of rewriting: a denied column read fails closed, never nulls.
-    e.injectCheckRule { session => plan =>
-      currentUser(session).foreach { u =>
-        val vs = ColumnDenyCheck.violations(plan, u, policies.view(), scopeOf(session))
-        if (vs.nonEmpty) throw new graft.ColumnAccessDeniedException(
-          s"user '$u' is denied column(s) " +
-            vs.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-            " — the query references them and fails closed")
-      }
-    }
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    e.injectPostHocResolutionRule(new GraftSecurityExtensions.Enforce(_))
 }
 
 object GraftSecurityExtensions {
@@ -73,6 +42,20 @@ object GraftSecurityExtensions {
   val UserKey = "spark.graft.user"
   val CatalogKey = "spark.graft.catalog"
   val DatabaseKey = "spark.graft.database"
+
+  /** The extension's one analyzer rule: [[Enforcement]] for the session's
+    * user against one policy view, skipping subtrees analyzed before this
+    * query (`postAnalysis = false`). A column denial throws out of analysis.
+    */
+  final class Enforce(session: SparkSession) extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
+      case Some(u) =>
+        ensureFunctions(session)
+        Enforcement(session, u, policies.view(), scopeOf(session), plan,
+          postAnalysis = false)._1
+      case None => plan
+    }
+  }
 
   private def currentUser(spark: SparkSession): Option[String] =
     Option(spark.conf.get(UserKey, "")).filter(_.nonEmpty)

@@ -29,18 +29,19 @@ import org.apache.spark.sql.types.Metadata
   * equals its child's output and the optimizer's RemoveNoopOperators strips
   * the mask away.)
   *
-  * Injected conditions/transformers are left unresolved; the caller re-runs
-  * the analyzer (SecurityContext) or the surrounding analyzer fixed point
-  * (extension mode) resolves names, functions and type coercion — this is
-  * what replaces the reference's string re-parse round trip.
+  * Both rules emit resolved nodes: an injected condition is analyzed against
+  * its scan alone (names, functions, subqueries, type coercion), and a mask
+  * is built resolved. That replaces the reference's string re-parse round
+  * trip, and the plan they return needs one `checkAnalysis`, not a second
+  * analysis. [[Enforcement]] composes them for both enforcement modes.
   *
   * Re-entrancy (the reference's javassist `custom` flag hack,
   * SecurityContext.java:67-90) is a plain TreeNodeTag here.
   *
   * The rules read policies through a [[graft.policy.PolicyView]]. Callers
-  * pass one [[graft.policy.PolicyManager.view]] per query (or per analyzer
-  * pass in extension mode), so every scan of it is decided against the same
-  * policy snapshot and the same instant.
+  * pass one [[graft.policy.PolicyManager.view]] per query (per analysis in
+  * extension mode), so every scan of it is decided against the same policy
+  * snapshot and the same instant.
   *
   * Scale note: rules run once per query on the driver; the injected Filter
   * sits directly above the scan, so Catalyst pushes predicates into the
@@ -98,7 +99,7 @@ object PlanShapes {
     // NOT a plain LeafNode match: `(VALUES ...) AS t` puts a LocalRelation
     // under the alias, and an inline alias must never collide with a policy
     // on a real table of the same name. Unresolved relations (also leaves)
-    // must not match while the rules run inside the analyzer's fixed point.
+    // must not match while the rules run inside the analyzer.
     case _ => false
   }
 
@@ -116,9 +117,8 @@ object PlanShapes {
     }
 }
 
-/** Column-level deny violation scan, shared by [[graft.SecurityContext]]
-  * (pre-rewrite, audited) and the auto-enforcement extension's check rule
-  * (post-analysis): which base-table scans have an active
+/** Column-level deny violation scan, the gate [[Enforcement]] runs before
+  * either rule: which base-table scans have an active
   * [[graft.policy.ColumnDenyPolicy]] column that the query READS.
   *
   * References are collected from the plan ABOVE each scan only — a temp
@@ -127,8 +127,8 @@ object PlanShapes {
   * injected (tagged Filter/mask Project) don't count as reads either: a
   * policy's filter condition or a full-width mask projection touching the
   * denied column is engine machinery, not the principal's query — without
-  * this, extension mode (where the check runs AFTER injection) would deny
-  * every masked table outright.
+  * this, extension mode (where nested subquery and view analyses have
+  * already injected theirs) would deny every masked table outright.
   */
 object ColumnDenyCheck {
   import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId, SubqueryExpression}
@@ -302,7 +302,6 @@ object ColumnDenyCheck {
 
 trait SecurityRuleSupport {
   def scope: TableScope
-  def spark: SparkSession
 
   /** V1 leaf commands (CTAS, save, insert-into-dir, ...) embed their query as
     * an innerChild, NOT a child — tree traversals never see it, so without
@@ -316,17 +315,13 @@ trait SecurityRuleSupport {
       isPolicied: (String, String, String) => Boolean): Option[LogicalPlan] = {
     import org.apache.spark.sql.execution.command.{CreateDataSourceTableAsSelectCommand, InsertIntoDataSourceDirCommand}
     import org.apache.spark.sql.execution.datasources.{InsertIntoDataSourceCommand, SaveIntoDataSourceCommand}
-    // these command constructors assert query.resolved, and the row-filter
-    // rule leaves injected conditions unresolved — re-analyze before rebuild
-    def rw(q: LogicalPlan): LogicalPlan = {
-      val r = rewrite(q)
-      if (r.resolved) r else spark.sessionState.executePlan(r).analyzed
-    }
+    // these command constructors assert query.resolved; the rules emit
+    // resolved nodes, so the rewritten query goes in as it is
     plan match {
-      case c: CreateDataSourceTableAsSelectCommand => Some(c.copy(query = rw(c.query)))
-      case c: InsertIntoDataSourceCommand => Some(c.copy(query = rw(c.query)))
-      case c: SaveIntoDataSourceCommand => Some(c.copy(query = rw(c.query)))
-      case c: InsertIntoDataSourceDirCommand => Some(c.copy(query = rw(c.query)))
+      case c: CreateDataSourceTableAsSelectCommand => Some(c.copy(query = rewrite(c.query)))
+      case c: InsertIntoDataSourceCommand => Some(c.copy(query = rewrite(c.query)))
+      case c: SaveIntoDataSourceCommand => Some(c.copy(query = rewrite(c.query)))
+      case c: InsertIntoDataSourceDirCommand => Some(c.copy(query = rewrite(c.query)))
       case leaf if leaf.children.isEmpty =>
         val policied = leaf.innerChildren.collect { case p: LogicalPlan => p }
           .flatMap(_.collect {
@@ -356,13 +351,21 @@ trait SecurityRuleSupport {
 }
 
 /** Injects row-level-security filters for `user` (reference:
-  * RowFilterVisitor.java:45-125).
+  * RowFilterVisitor.java:45-125). Each injected `Filter(cond, scan)` is
+  * analyzed on its own — the scan is already analyzed, so this costs
+  * O(condition), not O(query) — and goes in resolved, IN/EXISTS/scalar
+  * subqueries, functions and type coercion included.
   */
 final case class RowFilterRule(
     spark: SparkSession,
     user: String,
     policies: PolicyView,
     override val scope: TableScope,
+    /** true: rewrite every subtree, subquery plans included. false
+      * (extension mode): skip subtrees analyzed before this query, so a
+      * DataFrame handle taken before a policy keeps its plan; subquery
+      * plans get the rule from their own nested analysis.
+      */
     postAnalysis: Boolean = true,
     /** true: inject ONLY deny decisions (condition `false` on denied
       * tables), skipping allow-filters — the deny gate the mask-only entry
@@ -403,7 +406,8 @@ final case class RowFilterRule(
               }
             }
             .reduceLeft[Expression](And(_, _))
-          val filter = Filter(cond, child)
+          val filter = spark.sessionState.executePlan(Filter(cond, child)).analyzed
+            .asInstanceOf[Filter]
           filter.setTagValue(SecurityTags.RowFilterApplied, true)
           if (denied)
             filter.setTagValue(SecurityTags.RowDenyAudit, s"$cat.$db.$table|DENY")
@@ -423,7 +427,7 @@ final case class RowFilterRule(
       // transformUpWithSubqueries also reaches plans inside EXISTS/IN/scalar
       // subquery expressions — a policied table referenced there must be
       // filtered too. (In extension mode the analyzer's nested subquery
-      // resolution re-enters the injected rules, so resolveOperatorsUp on the
+      // resolution runs the extension's rule, so resolveOperatorsUp on the
       // outer plan suffices.)
       if (postAnalysis) plan.transformUpWithSubqueries(pf)
       else plan.resolveOperatorsUp(pf)
@@ -433,7 +437,7 @@ final case class RowFilterRule(
 /** Injects masking projections for `user` (reference:
   * DataMaskVisitor.java:54-157). For each scan of a policied table, builds a
   * full-width Project where masked columns become
-  * `CAST(transformer(col) AS originalType) AS col` with the original exprId,
+  * `CAST(transformer(col) AS originalType) AS col` with a fresh exprId,
   * other columns pass through. MASK_NULL -> typed null, MASK_NONE ->
   * passthrough (the reference would NPE on these, DataMaskVisitor.java:97-98).
   */
@@ -450,8 +454,8 @@ final case class DataMaskRule(
       */
     filterOnRaw: Boolean = false,
     /** Collect identity-only access decisions into [[identityAudit]]. Off by
-      * default so long-lived rule instances (the auto-enforcement extension,
-      * where nobody drains the buffer) never accumulate.
+      * default so a rule instance that is kept and never drained does not
+      * accumulate.
       */
     auditIdentity: Boolean = false
 ) extends Rule[LogicalPlan] with SecurityRuleSupport {
@@ -505,9 +509,15 @@ final case class DataMaskRule(
     // identityAudit side channel instead)
     val audited = Seq.newBuilder[String]
     var any = false
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     def aliasAs(attr: Attribute, e: Expression): NamedExpression = {
       any = true
-      val a = Alias(Cast(e, attr.dataType), attr.name)(qualifier = attr.qualifier)
+      // the session time zone on every cast that needs one (the cast back,
+      // and a template's own, e.g. TIMESTAMP -> DATE): resolved as built
+      val cast = Cast(e, attr.dataType).transform {
+        case z: TimeZoneAwareExpression if z.timeZoneId.isEmpty => z.withTimeZone(tz)
+      }
+      val a = Alias(cast, attr.name)(qualifier = attr.qualifier)
       mapping += attr -> a.toAttribute
       a
     }
@@ -557,10 +567,8 @@ final case class DataMaskRule(
 
   /** Descend through filters already injected above the scan (row-filter rule
     * runs first) and wrap the base relation itself, so filters evaluate over
-    * masked values — the reference's fixed composition order. Resolved
-    * references in those filters are remapped onto the masked output; the
-    * row-filter rule's still-unresolved conditions later resolve by name
-    * against the masked Project, with the same effect.
+    * masked values — the reference's fixed composition order. References in
+    * those filters are remapped onto the masked output.
     */
   private def injectUnderFilters(p: LogicalPlan, cat: String, db: String,
       table: String): Option[(LogicalPlan, Seq[(Attribute, Attribute)])] = p match {
@@ -577,18 +585,11 @@ final case class DataMaskRule(
       if (bottomIsBase(f)) maskedProject(f, cat, db, table) else None
     case f: Filter =>
       injectUnderFilters(f.child, cat, db, table).map { case (nc, mapping) =>
-        val remapped = f.condition.transform {
-          case a: AttributeReference =>
-            mapping.collectFirst { case (from, to) if from.exprId == a.exprId => to }.getOrElse(a)
-        }
-        val nf = Filter(remapped, nc)
-        f.getTagValue(SecurityTags.RowFilterApplied)
-          .foreach(v => nf.setTagValue(SecurityTags.RowFilterApplied, v))
-        f.getTagValue(SecurityTags.RowFilterAudit)
-          .foreach(v => nf.setTagValue(SecurityTags.RowFilterAudit, v))
-        f.getTagValue(SecurityTags.RowDenyAudit)
-          .foreach(v => nf.setTagValue(SecurityTags.RowDenyAudit, v))
-        (nf, mapping)
+        // copies keep the filter's tags
+        val masked = AttributeMap(mapping)
+        (f.withNewChildren(Seq(nc)).transformExpressions {
+          case a: AttributeReference => masked.getOrElse(a, a)
+        }, mapping)
       }
     case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) =>
       None // re-entrancy guard
@@ -609,13 +610,47 @@ final case class DataMaskRule(
       case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
         s.withNewPlan(apply(s.plan))
     }
-    withSubqueries.transformUpWithNewOutput {
+    val masked = withSubqueries.transformUpWithNewOutput {
       case sa @ SubqueryAlias(id, child) =>
         val (cat, db, table) = tableParts(id)
         injectUnderFilters(child, cat, db, table) match {
           case Some((newChild, mapping)) => (SubqueryAlias(id, newChild), mapping)
           case None => (sa, Nil)
         }
+    }
+    // references remapped above a mask keep the raw column's nullability;
+    // bring them in line with their producers, as the analyzer's own
+    // nullability pass would (a MASK_NULL of a NOT NULL column is nullable)
+    org.apache.spark.sql.catalyst.analysis.UpdateAttributeNullability(masked)
+  }
+}
+
+/** The one enforcement path, run on an analyzed plan by both modes —
+  * [[graft.SecurityContext]]'s read entry points and the
+  * [[GraftSecurityExtensions]] analyzer rule: the column-deny gate
+  * (`onDeny` sees the violations before the throw), then row filters (or,
+  * with `rowFilters = false`, only the deny decisions), then masks in the
+  * reference order or over raw filter values. The modes differ only in
+  * where the principal, the policy view and the scope come from, and in
+  * `postAnalysis` (see [[RowFilterRule]]). Returns the rewritten plan and
+  * the identity-only mask decisions ([[DataMaskRule.identityAudit]]).
+  */
+object Enforcement {
+  def apply(spark: SparkSession, user: String, policies: PolicyView,
+      scope: TableScope, plan: LogicalPlan, postAnalysis: Boolean = true,
+      rowFilters: Boolean = true, masks: Boolean = true, filterOnRaw: Boolean = false,
+      onDeny: Seq[(String, Seq[String])] => Unit = _ => ()): (LogicalPlan, Seq[String]) = {
+    val denied = ColumnDenyCheck.violations(plan, user, policies, scope)
+    if (denied.nonEmpty) {
+      onDeny(denied)
+      throw graft.ColumnAccessDeniedException(user, denied, "the query")
+    }
+    val filtered = RowFilterRule(spark, user, policies, scope, postAnalysis,
+      denyOnly = !rowFilters)(plan)
+    if (!masks) (filtered, Nil)
+    else {
+      val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
+      (rule(filtered), rule.identityAudit.toSeq)
     }
   }
 }
@@ -650,12 +685,12 @@ final case class DataMaskRule(
   *     resolve to either side checks against both — a fail-closed
   *     over-approximation, never fail-open.
   *
-  * The injection happens on the PARSED plan (conditions stay unresolved and
-  * the caller re-analyzes), because Catalyst's analyzer rewrites these
-  * commands into `ReplaceData` group-replacement plans during analysis —
-  * after that the action structure is gone. Injected target conditions are
-  * qualified with the target's alias so they can never capture a
-  * same-named source column.
+  * The injection happens on the PARSED plan (target conditions stay
+  * unresolved until the caller analyzes the statement), because Catalyst's
+  * analyzer rewrites these commands into `ReplaceData` group-replacement
+  * plans during analysis — after that the action structure is gone.
+  * Injected target conditions are qualified with the target's alias so they
+  * can never capture a same-named source column.
   *
   * Scale note: the rewritten statement plans exactly like the unsecured
   * one plus a pushed-down predicate per action — group-based MERGE is one
@@ -672,11 +707,11 @@ final case class DmlSecurityRewrite(
 
   import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 
-  /** Audit crumbs ("action|cat.db.table|detail") for decisions that have no
-    * plan node to tag (the target-side constraint rewrites CONDITIONS, not
-    * plans). Drained by [[graft.SecurityContext]] after the rewrite.
+  /** Audit crumbs (action, "cat.db.table|detail") for decisions that have
+    * no plan node to tag (the target-side constraint rewrites CONDITIONS,
+    * not plans). Drained by [[graft.SecurityContext]] after the rewrite.
     */
-  val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[String]
+  val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
   private def parts(rel: UnresolvedRelation): (String, String, String) =
     rel.multipartIdentifier match {
@@ -706,7 +741,7 @@ final case class DmlSecurityRewrite(
   private def targetConstraint(cat: String, db: String, table: String,
       qualifier: String): Option[Expression] = {
     if (policies.isDenied(user, cat, db, table)) {
-      dmlAudit += s"ROW_DENY|$cat.$db.$table|DENY"
+      dmlAudit += "ROW_DENY" -> s"$cat.$db.$table|DENY"
       throw new graft.ColumnAccessDeniedException(
         s"user '$user' is denied rows of $cat.$db.$table — row-level DML " +
           "against a denied table fails closed")
@@ -722,7 +757,7 @@ final case class DmlSecurityRewrite(
               s"an unparseable condition: $c", e)
         }
       }
-      dmlAudit += s"ROW_FILTER|$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
+      dmlAudit += "ROW_FILTER" -> s"$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
       Some(parsed.map(qualify(qualifier, _)).reduceLeft[Expression](And(_, _)))
     }
   }
@@ -766,12 +801,9 @@ final case class DmlSecurityRewrite(
     }
     if (violations.nonEmpty) {
       violations.foreach { case (obj, cols) =>
-        dmlAudit += s"COLUMN_DENY|$obj|${cols.mkString(",")}"
+        dmlAudit += "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}"
       }
-      throw new graft.ColumnAccessDeniedException(
-        s"user '$user' is denied column(s) " +
-          violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }
-            .mkString("; ") + " — the DML statement references them and fails closed")
+      throw graft.ColumnAccessDeniedException(user, violations, "the DML statement")
     }
   }
 
@@ -787,16 +819,14 @@ final case class DmlSecurityRewrite(
     }
 
   /** Source subtree through the ordinary read rewrite: analyze standalone,
-    * inject row filters then masks, re-analyze if needed, splice back. The
-    * surrounding (still-parsed) statement resolves around the already-
+    * inject row filters then masks (both emit resolved nodes), splice back.
+    * The surrounding (still-parsed) statement resolves around the already-
     * analyzed subtree.
     */
   private def secureSource(plan: LogicalPlan): LogicalPlan = {
     val analyzed = spark.sessionState.executePlan(plan).analyzed
-    val filtered = RowFilterRule(spark, user, policies, scope)(analyzed)
-    val masked = DataMaskRule(spark, user, policies, scope)(filtered)
-    if (masked.resolved) masked
-    else spark.sessionState.executePlan(masked).analyzed
+    DataMaskRule(spark, user, policies, scope)(
+      RowFilterRule(spark, user, policies, scope)(analyzed))
   }
 
   /** Rewrite one parsed row-level DML statement. Returns the modified

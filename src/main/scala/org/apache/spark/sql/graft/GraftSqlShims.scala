@@ -12,6 +12,17 @@ object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
+  /** Check a plan that is already resolved once, and mark it analyzed so
+    * `ofRows` (and any later analysis) takes it as it is instead of running
+    * the analyzer's fixed point over it again. Throws the analyzer's own
+    * error for an invalid plan: nothing unchecked is returned.
+    */
+  def checkedAnalyzed(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    spark.sessionState.analyzer.checkAnalysis(plan)
+    plan.setAnalyzed()
+    plan
+  }
+
   /** Column <-> Catalyst bridges (Spark 4 split the public Column from its
     * expression; these go through the classic session's converters).
     */

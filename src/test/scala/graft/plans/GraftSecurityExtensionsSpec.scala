@@ -205,4 +205,99 @@ class GraftSecurityExtensionsSpec extends SparkFunSuite {
       SparkSession.setActiveSession(spark)
     }
   }
+
+  /** A sibling session with the extension (same SparkContext); `body` runs
+    * with it, and the shared test session is restored afterwards.
+    */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
+    spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val sec = SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new GraftSecurityExtensions)
+      .getOrCreate()
+    try body(sec)
+    finally {
+      sec.conf.unset(GraftSecurityExtensions.UserKey)
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("INSERT INTO ... SELECT and insertInto write filtered, masked rows in extension mode") {
+    withExtensionSession { sec =>
+      import sec.implicits._
+      Seq((1, "Jack", "beijing"), (2, "Sally", "hangzhou"))
+        .toDF("id", "customer_name", "region")
+        .createOrReplaceTempView("pr_orders")
+      GraftSecurityExtensions.policies.addPolicy(
+        RowFilterPolicy("ext_ins", "spark_catalog", "default", "pr_orders", "region = 'beijing'"))
+      GraftSecurityExtensions.policies.addPolicy(
+        DataMaskPolicy("ext_ins", "spark_catalog", "default", "pr_orders", "customer_name", "MASK"))
+      sec.sql("DROP TABLE IF EXISTS pr_sink")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("spark-warehouse/pr_sink"))
+      sec.sql("CREATE TABLE pr_sink (id INT, customer_name STRING, region STRING) USING parquet")
+      try {
+        sec.conf.set(GraftSecurityExtensions.UserKey, "ext_ins")
+        sec.sql("INSERT INTO pr_sink SELECT id, customer_name, region FROM pr_orders")
+        sec.table("pr_orders").write.insertInto("pr_sink")
+        sec.conf.unset(GraftSecurityExtensions.UserKey) // read the raw sink
+        val sunk = sec.table("pr_sink").collect().map(_.toSeq).toSeq
+        assert(sunk == Seq(Seq(1, "Xxxx", "beijing"), Seq(1, "Xxxx", "beijing")))
+      } finally sec.sql("DROP TABLE IF EXISTS pr_sink")
+    }
+  }
+
+  test("extension mode: IN and scalar subqueries, CREATE VIEW, INSERT OVERWRITE DIRECTORY, deny in a subquery") {
+    withExtensionSession { sec =>
+      import sec.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_cov").toString
+      sec.sql("DROP VIEW IF EXISTS cov_view")
+      sec.sql("DROP TABLE IF EXISTS cov_orders")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("spark-warehouse/cov_orders"))
+      // a catalog table: a persistent view may not reference a temp view
+      Seq((1, "Jack", 50.5, "beijing"), (2, "Sally", 15.0, "hangzhou"))
+        .toDF("id", "customer_name", "price", "region")
+        .write.saveAsTable("cov_orders")
+      Seq(1, 2).toDF("id").createOrReplaceTempView("cov_ids")
+      GraftSecurityExtensions.policies.addPolicy(
+        RowFilterPolicy("ext_cov", "spark_catalog", "default", "cov_orders", "region = 'beijing'"))
+      GraftSecurityExtensions.policies.addPolicy(
+        DataMaskPolicy("ext_cov", "spark_catalog", "default", "cov_orders", "customer_name", "MASK"))
+      GraftSecurityExtensions.policies.addPolicy(graft.policy.ColumnDenyPolicy(
+        "ext_cov", "spark_catalog", "default", "cov_orders", "price"))
+      try {
+        sec.conf.set(GraftSecurityExtensions.UserKey, "ext_cov")
+        // IN subquery: id 2 exists in the raw table but not under the filter
+        val in = sec.sql("SELECT id FROM cov_ids WHERE id IN (SELECT id FROM cov_orders)")
+          .collect().map(_.getInt(0)).toSeq
+        assert(in == Seq(1))
+        // scalar subquery: filtered and masked
+        val scalar = sec.sql("SELECT (SELECT max(customer_name) FROM cov_orders) AS n")
+          .collect().map(_.getString(0)).toSeq
+        assert(scalar == Seq("Xxxx"))
+        // a persistent view over the policied table reads enforced
+        sec.sql("CREATE VIEW cov_view AS SELECT id, customer_name, region FROM cov_orders")
+        val viewed = sec.sql("SELECT * FROM cov_view").collect().map(_.toSeq).toSeq
+        assert(viewed == Seq(Seq(1, "Xxxx", "beijing")))
+        // INSERT OVERWRITE DIRECTORY writes filtered, masked files
+        sec.sql(s"INSERT OVERWRITE DIRECTORY '$dir' USING parquet " +
+          "SELECT id, customer_name, region FROM cov_orders")
+        // a denied column read inside a subquery fails closed
+        intercept[graft.ColumnAccessDeniedException] {
+          sec.sql("SELECT id FROM cov_ids WHERE id IN (SELECT id FROM cov_orders WHERE price > 10)")
+            .collect()
+        }
+        sec.conf.unset(GraftSecurityExtensions.UserKey) // read the raw files
+        val written = sec.read.parquet(dir).collect().map(_.toSeq).toSeq
+        assert(written == Seq(Seq(1, "Xxxx", "beijing")))
+      } finally {
+        sec.conf.unset(GraftSecurityExtensions.UserKey)
+        sec.sql("DROP VIEW IF EXISTS cov_view")
+        sec.sql("DROP TABLE IF EXISTS cov_orders")
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
+    }
+  }
 }
