@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full evaluation through the noop sink
   * (count() would let Catalyst skip computing masked/derived columns), and
@@ -20,14 +18,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkUtil.localSession(cpus, "spark.sql.adaptive.enabled" -> "true")
 
     def once(name: String, dir: String = sfDir): Double = {
       val t0 = System.nanoTime()
@@ -39,22 +30,7 @@ object Bench {
           return -1.0
       }
       val t = (System.nanoTime() - t0) / 1e9
-      // between queries (outside the timed section): drop the finished
-      // query's localCheckpoint blocks explicitly — the ContextCleaner only
-      // reclaims them after a GC notices the dead references, and pending
-      // blocks distort later timings at larger scale factors (dedup_groups
-      // measured 3x slower in-suite than solo before this). BLOCKING
-      // unpersist: with the async form the next query starts while eviction
-      // is still queued, and at sf1 the leftover blocks push the 8g heap to
-      // its ceiling (q1_agg measured 19 s in-suite vs 2.8 s solo before
-      // this)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-      // the noop write above fully consumed any table-routed stream drain,
-      // so its parquet sink table is dead weight from here — drop it (an
-      // sf10 sweep otherwise accumulates 280+ tables of warehouse residue)
-      graft.streaming.StreamOps.dropDrainResidue(spark)
-      System.gc()
+      SparkUtil.release(spark) // between queries, outside the timed section
       t
     }
 

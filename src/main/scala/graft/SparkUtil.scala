@@ -12,6 +12,40 @@ object SparkUtil {
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** The one session factory of the mains and tools: master `local[cpus]`,
+    * as many shuffle partitions, UTC, no UI and WARN logging, plus `confs`.
+    * `cpus` goes in as given: Bench passes its `SPARK_GRAFT_CPUS` contract
+    * value through unparsed.
+    */
+  def localSession(cpus: String, confs: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Untimed release after one measured query run. BLOCKING unpersist of
+    * every persisted RDD, localCheckpoint blocks included: the
+    * ContextCleaner reclaims those only after a GC notices the dead
+    * references, and with the async form the next run starts while
+    * eviction is still queued (pending blocks distorted later timings:
+    * dedup_groups read 3x slower in-suite than solo, and at sf1 q1_agg read
+    * 19 s in-suite vs 2.8 s solo as leftover blocks pushed the 8g heap to
+    * its ceiling). Then the cache, and the sink table of a table-routed
+    * stream drain, which the run's noop write fully consumed (an sf10 sweep
+    * otherwise accumulates 280+ tables of warehouse residue).
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sharedState.cacheManager.clearCache()
+    graft.streaming.StreamOps.dropDrainResidue(spark)
+    System.gc()
+  }
+
   /** One lock per session (weakly keyed — must not outlive the session):
     * `spark.sql.shuffle.partitions` is session-global mutable state, so two
     * threads interleaving save/set/restore can permanently strand the conf

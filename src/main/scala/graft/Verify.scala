@@ -13,13 +13,7 @@ object Verify {
     // small jobs, where scheduler overhead dominates past ~8 tasks/stage.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(8, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkUtil.localSession(cpus)
     // the dump re-reads documents/events/embeddings per query; cache the
     // shared inputs once for the run (content identical, plan shape not
     // asserted here — the plan-shape specs run the uncached path)

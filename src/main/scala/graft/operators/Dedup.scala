@@ -1269,7 +1269,7 @@ object Dedup {
     // probe and merge sorted token arrays, so their compute cost is orders
     // of magnitude above their shuffle BYTES — and AQE's byte-based
     // coalescing collapsed them to a single 2.5 s task at sf0.1 while 31
-    // cores idled (r19 JobProfile: the whole candidate+verify pipeline ran
+    // cores idled (r19 per-job profile: the whole candidate+verify pipeline ran
     // as ONE task over the 1-partition `ranked` checkpoint). A smaller
     // coalescing minPartitionSize keeps the post-shuffle partition count
     // tracking max(bytes/defaultParallelism, 64k) — core-count-adaptive on
@@ -1279,7 +1279,9 @@ object Dedup {
     // below — it is the FIRST action, so it materializes the `ranked` and
     // `withSet` checkpoints, freezing their partition counts for every
     // downstream stage. Interleaved same-JVM A/B at sf0.1: 3.84 -> 2.28 s
-    // median (ConfAB, r19).
+    // median (r19; `graft.tools.Probe dedup_jaccard <dir> 3
+    // spark.graft.densePartitionMinBytes=1m` reruns it with B as the old
+    // behavior).
     // parameterised (session conf, local default 64k) so deployments can
     // retune and A/B harnesses can toggle the old behavior (1m = AQE's
     // default, i.e. scope becomes a no-op)
@@ -1382,7 +1384,7 @@ object Dedup {
     // convergence fingerprints and at least one pointer-jumping round
     // (several jobs). Matters per MICRO-BATCH in the streaming funnel,
     // where clean batches are the common case and every per-batch job is
-    // pure fixed cost (StreamTrioProbe measures the floor).
+    // pure fixed cost (the r12 streaming-trio floor, PLANS.md).
     if (pairCount == 0L) {
       org.apache.spark.sql.graft.GraftSqlShims.unpersistCheckpoint(p)
       // built from `pairs` (not the unpersisted checkpoint); LIMIT 0

@@ -510,13 +510,14 @@ final case class DataMaskRule(
     val audited = Seq.newBuilder[String]
     var any = false
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    def aliasAs(attr: Attribute, e: Expression): NamedExpression = {
-      any = true
-      // the session time zone on every cast that needs one (the cast back,
-      // and a template's own, e.g. TIMESTAMP -> DATE): resolved as built
-      val cast = Cast(e, attr.dataType).transform {
+    // the session time zone on every cast that needs one (the cast back,
+    // and a template's own, e.g. TIMESTAMP -> DATE): resolved as built
+    def castBack(attr: Attribute, e: Expression): Expression =
+      Cast(e, attr.dataType).transform {
         case z: TimeZoneAwareExpression if z.timeZoneId.isEmpty => z.withTimeZone(tz)
       }
+    def aliasAs(attr: Attribute, cast: Expression): NamedExpression = {
+      any = true
       val a = Alias(cast, attr.name)(qualifier = attr.qualifier)
       mapping += attr -> a.toAttribute
       a
@@ -528,7 +529,7 @@ final case class DataMaskRule(
           attr
         case Some(t) if t.name.equalsIgnoreCase("MASK_NULL") =>
           audited += s"${attr.name}=${t.name}"
-          val a = aliasAs(attr, Literal(null, attr.dataType))
+          val a = aliasAs(attr, castBack(attr, Literal(null, attr.dataType)))
           // renderer text: keep the CAST-back-to-declared-type convention
           // (DataMaskVisitor.java:131) — exprText strips casts otherwise
           a.setTagValue(SqlRenderer.MaskSqlTag,
@@ -538,8 +539,15 @@ final case class DataMaskRule(
           t.transformerFor(s"`${attr.name}`") match {
             case Some(tpl) =>
               audited += s"${attr.name}=${t.name}"
-              val a = aliasAs(attr,
+              val cast = castBack(attr,
                 resolveMaskExpr(spark.sessionState.sqlParser.parseExpression(tpl), base))
+              // no analyzer pass runs over the template, so one that needs
+              // implicit coercion (`{col} + 0.5` over INT) stays unresolved
+              if (!cast.resolved) throw new IllegalArgumentException(
+                s"mask ${t.name} for user '$user' on $cat.$db.$table column ${attr.name}: " +
+                  s"template `${t.transformer.mkString}` does not resolve without " +
+                  "implicit type coercion; cast its operands explicitly")
+              val a = aliasAs(attr, cast)
               // the reference-exact output text for SqlRenderer's golden
               // parity: the policy's transformer template verbatim, CAST
               // back to the declared type (DataMaskVisitor.java:131)
@@ -676,9 +684,11 @@ object Enforcement {
   *     duplicate rather than protect.) Inserted values are not gated by the
   *     target's row filter, matching the reference's INSERT handling.
   *   - DENY on the target: the statement fails closed before planning.
-  *   - ROW FILTER / MASK on the SOURCE (MERGE): the source subtree is a
-  *     read like any other — both rules run on it, so a policied source
-  *     feeds only visible rows and masked values into the merge.
+  *   - ROW FILTER / MASK / COLUMN DENY on the SOURCE (MERGE): the source
+  *     subtree is a read like any other and goes through [[Enforcement]],
+  *     so a policied source feeds only visible rows and masked values into
+  *     the merge, and a source subquery reading a denied column fails
+  *     closed.
   *   - COLUMN DENY: any reference to a denied column of the target (or of
   *     a source base table) in the statement's expressions fails closed.
   *     References are collected pre-resolution, so a BARE name that could
@@ -818,15 +828,20 @@ final case class DmlSecurityRewrite(
         val (c, d, t) = parts(r); (c, d, t, r.multipartIdentifier.last)
     }
 
-  /** Source subtree through the ordinary read rewrite: analyze standalone,
-    * inject row filters then masks (both emit resolved nodes), splice back.
-    * The surrounding (still-parsed) statement resolves around the already-
-    * analyzed subtree.
+  /** Source subtree through the read path, [[Enforcement]]: analyze it
+    * standalone, then the column-deny gate, row filters and masks (all emit
+    * resolved nodes), and splice it back. The surrounding (still-parsed)
+    * statement resolves around the already-analyzed subtree. Denials and
+    * identity-only mask decisions go into [[dmlAudit]].
     */
   private def secureSource(plan: LogicalPlan): LogicalPlan = {
-    val analyzed = spark.sessionState.executePlan(plan).analyzed
-    DataMaskRule(spark, user, policies, scope)(
-      RowFilterRule(spark, user, policies, scope)(analyzed))
+    val (secured, identityMasks) = Enforcement(spark, user, policies, scope,
+      spark.sessionState.executePlan(plan).analyzed,
+      onDeny = _.foreach { case (obj, cols) =>
+        dmlAudit += "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}"
+      })
+    dmlAudit ++= identityMasks.map("DATA_MASK" -> _)
+    secured
   }
 
   /** Rewrite one parsed row-level DML statement. Returns the modified

@@ -198,7 +198,7 @@ object PipelineQueries {
   /** Append independent Kafka-shaped log segments CONCURRENTLY (guide §2.6
     * "overlap independent jobs"): each [[graft.sources.KafkaShapedLog.appendSegment]]
     * is a single-file write that is mostly fixed commit latency (~0.3-0.9 s
-    * apiece measured at sf0.1, JobProfile r18), and segment file NAMES and
+    * apiece measured at sf0.1, r18 per-job profile), and segment file NAMES and
     * MTIMES derive from the segment number alone — write order is
     * irrelevant to the file source's segment ordering, which is the
     * fixture's arrival-order contract. Callers must hand over either
@@ -357,7 +357,7 @@ object PipelineQueries {
   private def mrlIndex(s: SparkSession, dir: String, p: Int): String =
     mrlIndexBuilt.getOrElse((dir, p), mrlIndexLock.synchronized {
       mrlIndexBuilt.getOrElseUpdate((dir, p), {
-        // dir lands in the name: a multi-dir sweep (QueryProbe) must not
+        // dir lands in the name: a multi-dir sweep (Probe) must not
         // probe one dir's codes with another dir's queries. MD5 prefix, not
         // String.hashCode: a 32-bit hash collision between two dirs would
         // silently cross-contaminate the very thing the name exists to keep

@@ -142,15 +142,7 @@ object SessionizeProcessor {
   * (clamped above the current watermark); re-armed on every fold and every
   * fire, so a quiet key still drains as the watermark advances.
   */
-class WatermarkSessionizeProcessor(gapSeconds: Long,
-    /** PROBE-ONLY off-switch: false forces the pre-trim flush (state
-      * rewritten on every firing) so [[graft.tools.TwsSessProbe]] can A/B
-      * the quiet-firing write amplification in one run. Production call
-      * sites always use the default — the toggle is a constructor argument
-      * (not mutable global state) so a probe's choice is pinned at plan
-      * build time and serialized with the processor.
-      */
-    trimQuietFlush: Boolean = true)
+class WatermarkSessionizeProcessor(gapSeconds: Long)
     extends StatefulProcessor[Long, (Long, Long, java.sql.Timestamp),
       (Long, Long, Long, Long)] {
   @transient private var ivls: ListState[(Long, Long, Long)] = _
@@ -164,7 +156,7 @@ class WatermarkSessionizeProcessor(gapSeconds: Long,
     * stored list (no new events folded in). When additionally nothing
     * sealed, the clear-and-put would rewrite an identical interval list,
     * so it is skipped and only the consumed timer re-armed. MEASURED
-    * (TwsSessProbe A/B, r17): under the arming invariant below this quiet
+    * (r17 A/B, PLANS.md): under the arming invariant below this quiet
     * case is structurally absent — the single timer sits at the EARLIEST
     * unflushed end+gap clamped above the watermark, so by the time it
     * fires the watermark has passed that seal point and the firing always
@@ -181,7 +173,7 @@ class WatermarkSessionizeProcessor(gapSeconds: Long,
       stateHoldsMerged: Boolean): Iterator[(Long, Long, Long)] = {
     val (closed, kept) = merged.partition { case (_, e, _) =>
       WatermarkSessionizeProcessor.isSealed(e, gapSeconds, wmMs) }
-    if (!(closed.isEmpty && stateHoldsMerged && trimQuietFlush)) {
+    if (!(closed.isEmpty && stateHoldsMerged)) {
       ivls.clear()
       if (kept.nonEmpty) ivls.put(kept.toArray)
     }
@@ -451,6 +443,12 @@ object StreamOps {
       * replays — exactly the window the old mid-commit crash left. The
       * table stays the source of truth and stays readable as a normal
       * parquet table (the restart gates assert its ROWS).
+      *
+      * ASSUMPTION: `FileSystem.rename` is atomic, as on the local
+      * filesystem and HDFS. On an object store (S3A renames by copy then
+      * delete) a crash mid-rename can leave a partial record visible,
+      * which breaks "a crash leaves no record"; a ledger there needs the
+      * `saveAsTable` path for every record.
       */
     def record(spark: SparkSession, table: String, batchId: Long): Unit = {
       import spark.implicits._
@@ -639,11 +637,7 @@ object StreamOps {
         * dropped — the regime [[SessionizeProcessor.foldBatch]]'s
         * interval sweep exists for.
         */
-      watermarkDelay: String = "0 seconds",
-      /** Pass-through to [[WatermarkSessionizeProcessor]]'s probe-only A/B
-        * switch; only meaningful with a nonzero delay.
-        */
-      trimQuietFlush: Boolean = true): DataFrame = {
+      watermarkDelay: String = "0 seconds"): DataFrame = {
     import spark.implicits._
     val ev = events
       .withColumn("_ets", col("ts").cast("timestamp"))
@@ -657,7 +651,7 @@ object StreamOps {
     // WatermarkSessionizeProcessor
     val proc =
       if (watermarkDelay == "0 seconds") new SessionizeProcessor(gapSeconds)
-      else new WatermarkSessionizeProcessor(gapSeconds, trimQuietFlush)
+      else new WatermarkSessionizeProcessor(gapSeconds)
     ev.groupByKey(_._1)
       .transformWithState(proc,
         TimeMode.EventTime(), OutputMode.Append())
@@ -763,7 +757,7 @@ object StreamOps {
     * streaming input the memory sink's DRIVER-side accumulation outgrows
     * the default heap, so big dirs route streaming drains through the
     * parquet table sink. Sets `spark.graft.stream.drain` accordingly;
-    * both QueryProbe (per probed dir) and Bench (once per suite dir) call
+    * both Probe (per probed dir) and Bench (once per suite dir) call
     * this so measurement harnesses can run any scale factor on the
     * default heap. Small dirs keep the memory sink for reading-parity
     * with prior rounds' artifacts.
@@ -971,7 +965,7 @@ object StreamOps {
     // inside the job) and arrival order is pinned by NAME + MTIME computed
     // from the slice INDEX, never by write completion order — submit them
     // concurrently (guide §2.6): the sequential loop measured ~8.5 s per
-    // staging at ScaleUp-sf10 (r16 TwsSessProbe), dominated by N back-to-
+    // staging at ScaleUp-sf10 (r16 probe, PLANS.md), dominated by N back-to-
     // back one-task jobs the scheduler can overlap
     graft.SparkUtil.concurrently(parts.head.sparkSession,
       parts.zipWithIndex.map { case (df, i) =>
@@ -998,7 +992,7 @@ object StreamOps {
   /** Staged-fixture memo: one PHYSICAL staging per (variant, dir, params)
     * per JVM. The fixture write is repartition(1) — one file per
     * micro-batch, so single-threaded — and at ScaleUp-sf10 costs ~8.5 s per
-    * call, which the r16 TwsSessProbe attribution showed DOMINATING the
+    * call, which the r16 attribution (PLANS.md) showed DOMINATING the
     * sessionize family's decade-3 readings (the engine drain itself scales
     * 1.4x/decade). The staged files are immutable once written and every
     * reader gets its own checkpoint, so reuse is free. Driver-side PATH
@@ -1594,7 +1588,7 @@ object StreamOps {
       // the funnel's first execution materializes three exchanges under
       // AQE, each of whose single-task map stages recomputed the not-yet-
       // populated cache: measured three equal ~0.9 s jobs per batch at
-      // sf0.1 (JobProfile, r18); with the eager checkpoint the front end
+      // sf0.1 (r18 per-job profile); with the eager checkpoint the front end
       // is one ~0.9 s job and the map stages read blocks.
       val batchCk = batch0.localCheckpoint(eager = true)
       // every checkpoint the body creates, released together at body end
@@ -1869,7 +1863,7 @@ object StreamOps {
     // holds every emission on the DRIVER heap — millions of appended
     // session rows OOM an 8g driver, while the executors were never the
     // problem). When the harness sets spark.graft.stream.drain=table
-    // (QueryProbe flips it on input volume), Append/Update drains go
+    // (Bench and Probe set it by input volume), Append/Update drains go
     // through [[drainToTable]] into a parquet table instead — emissions
     // land distributed, the returned frame is a batch scan of the table.
     // Complete mode stays on the memory sink regardless: the memory sink

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Drives the codegen-implementing custom expressions (currently PqAdc)
@@ -11,12 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString,
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
     import spark.implicits._
     val corpus = Seq((1L, Array(1f,0f,0f,0f)), (2L, Array(0f,1f,0f,0f)),
       (3L, Array(0.9f,0.1f,0f,0f))).toDF("vec_id","embedding")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.{Dedup, Graph, Multimodal, Sampling, Similarity, Snapshot, TextAnalysis, Timeseries, Vocab}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The PLANS.md per-epoch operator runbook as ONE runnable main — proof the
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
 object EpochOps {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString)
     import spark.implicits._
 
     val docs = graft.queries.Tables.df(spark, dir, "documents")

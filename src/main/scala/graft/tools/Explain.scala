@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected SparkEntry queries — used to
   * audit pushdown (PushedFilters), broadcast choices, and WholeStageCodegen
   * spans while iterating on plans.
@@ -11,12 +9,7 @@ object Explain {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("sec_rls_basic", "sec_mixed", "q1_agg", "q_join3", "dedup_exact", "ann_brute_topk")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       println(graft.SparkEntry.queries(n)(spark, dir).queryExecution.explainString(

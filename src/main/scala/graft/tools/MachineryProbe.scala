@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decompose the per-micro-batch machinery floor (the r12 finding: ~1.6-2.3 s
@@ -14,13 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object MachineryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString)
     import spark.implicits._
 
     val nBatches = 6

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.queries.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds an N-fold scaled copy of a testdata dir (default sf0.1 -> /tmp/sf1)
@@ -34,11 +34,7 @@ object ScaleUp {
     // documents table (the realistic-vocabulary probes need nothing else)
     val mode = if (args.length > 3) args(3) else "permute"
     val zipfVocab = if (args.length > 4) args(4).toInt else 50000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString)
 
     val K = 100000000L // key offset stride per copy
 

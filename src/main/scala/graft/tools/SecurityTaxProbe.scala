@@ -185,16 +185,10 @@ object SecurityTaxProbe {
     val dirs = sys.env.get("SPARK_GRAFT_PROBE_DIRS").map(_.split(",").toSeq)
       .getOrElse(Seq("/root/testdata/sf0.1", "/tmp/sf1", "/tmp/sf10"))
     val policyLeg = args.headOption.contains("policies")
-    val cpus = graft.SparkUtil.localCpus()
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (policyLeg)
-      builder.config("spark.sql.extensions", classOf[graft.plans.GraftSecurityExtensions].getName)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val extensions = if (policyLeg)
+      Seq("spark.sql.extensions" -> classOf[graft.plans.GraftSecurityExtensions].getName)
+      else Nil
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString, extensions: _*)
     if (policyLeg) {
       policyCountLeg(spark)
       spark.stop()
@@ -246,10 +240,7 @@ object SecurityTaxProbe {
           (if (ss == ms) "MATCH" else "MISMATCH") +
           s"; joins sec=[${js.mkString(",")}] manual=[${mj.mkString(",")}] " +
           (if (js == mj) "MATCH" else "MISMATCH"))
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
+        graft.SparkUtil.release(spark)
       }
 
       // ---- 2. rewrite-only latency (driver side, no execution) ------------
@@ -277,11 +268,7 @@ object SecurityTaxProbe {
           graft.SparkEntry.queries(name)(spark, dir)
             .write.format("noop").mode("overwrite").save()
           val s = (System.nanoTime() - t) / 1e9
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          spark.sharedState.cacheManager.clearCache()
-          graft.streaming.StreamOps.dropDrainResidue(spark)
-          System.gc()
+          graft.SparkUtil.release(spark)
           s
         }
         println(f"[sectax] $dir $name cold=${times.head}%.2f s warm=${times.last}%.2f s")

@@ -1,17 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.MaskFunctions
 
 /** Scratch driver for manual end-to-end verification (not part of the API). */
 object VerifyDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkUtil.localSession(graft.SparkUtil.localCpus().toString)
     MaskFunctions.register(spark)
     spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
       .createOrReplaceTempView("customer")

@@ -275,6 +275,16 @@ class SecurityContextSpec extends SparkFunSuite {
     intercept[Exception](c.executeDataMask("user_Q2", baseSql, 1))
   }
 
+  test("CUSTOM transformer that needs implicit coercion fails with an error naming the policy") {
+    val c = ctx
+    c.policyManager.registerMaskType(graft.policy.DataMaskType(
+      102, "MASK_PLUS_HALF", "", "", Some("{col} + 0.5")))
+    c.policyManager.addPolicy(DataMaskPolicy("user_Q3", CAT, DB, "orders", "order_id", "MASK_PLUS_HALF"))
+    val e = intercept[IllegalArgumentException](c.executeDataMask("user_Q3", baseSql, 1))
+    Seq("user_Q3", "hive.default.orders", "order_id", "MASK_PLUS_HALF", "{col} + 0.5")
+      .foreach(s => assert(e.getMessage.contains(s), e.getMessage))
+  }
+
   test("INSERT INTO ... SELECT applies the rewrite inside the insert body") {
     val c = ctx
     spark.sql("DROP TABLE IF EXISTS order_sink")

@@ -249,6 +249,24 @@ class GraftSecurityExtensionsSpec extends SparkFunSuite {
     }
   }
 
+  test("extension mode: a CUSTOM transformer that needs implicit coercion fails with an error naming the policy") {
+    withExtensionSession { sec =>
+      import sec.implicits._
+      Seq((1, "beijing")).toDF("id", "region").createOrReplaceTempView("co_orders")
+      GraftSecurityExtensions.policies.registerMaskType(graft.policy.DataMaskType(
+        103, "MASK_PLUS_HALF_EXT", "", "", Some("{col} + 0.5")))
+      GraftSecurityExtensions.policies.addPolicy(DataMaskPolicy(
+        "ext_co", "spark_catalog", "default", "co_orders", "id", "MASK_PLUS_HALF_EXT"))
+      sec.conf.set(GraftSecurityExtensions.UserKey, "ext_co")
+      val e = intercept[Exception](sec.sql("SELECT id, region FROM co_orders").collect())
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+      assert(cause.nonEmpty, e)
+      Seq("ext_co", "spark_catalog.default.co_orders", "id", "MASK_PLUS_HALF_EXT", "{col} + 0.5")
+        .foreach(s => assert(cause.get.getMessage.contains(s), cause.get.getMessage))
+    }
+  }
+
   test("extension mode: IN and scalar subqueries, CREATE VIEW, INSERT OVERWRITE DIRECTORY, deny in a subquery") {
     withExtensionSession { sec =>
       import sec.implicits._

@@ -125,6 +125,28 @@ class SecurityDmlSpec extends SparkFunSuite {
     assert(rowsOf("dml_cdeny").map(_._3) == Seq(10L, 20L, 30L, 40L))
   }
 
+  test("a MERGE source subquery reading a denied column fails closed; a source not reading it merges") {
+    spark.sql("DROP TABLE IF EXISTS graft_mem.default.sm_t")
+    spark.sql("CREATE TABLE graft_mem.default.sm_t (k BIGINT, seg STRING, amt BIGINT)")
+    spark.sql("INSERT INTO graft_mem.default.sm_t VALUES (1,'A',10)")
+    spark.sql("DROP TABLE IF EXISTS graft_mem.default.sm_s")
+    spark.sql("CREATE TABLE graft_mem.default.sm_s (k BIGINT, seg STRING, bal BIGINT)")
+    spark.sql("INSERT INTO graft_mem.default.sm_s VALUES (9,'Z',900)")
+    val c = new SecurityContext(spark)
+    c.policyManager.addPolicy(ColumnDenyPolicy(USER, "graft_mem", "default", "sm_s", "bal"))
+    def merge(source: String, value: String): Unit = c.executeDml(USER,
+      s"""MERGE INTO graft_mem.default.sm_t t USING $source s ON t.k = s.k
+         |WHEN NOT MATCHED THEN INSERT (k, seg, amt) VALUES (s.k, s.seg, $value)""".stripMargin)
+    intercept[ColumnAccessDeniedException] {
+      merge("(SELECT k, seg, bal AS b FROM graft_mem.default.sm_s)", "s.b")
+    }
+    assert(rowsOf("sm_t") == Seq((1L, "A", 10L))) // nothing written
+    assert(c.auditLog.collect().exists(r =>
+      r.getString(2) == "COLUMN_DENY" && r.getString(3) == "graft_mem.default.sm_s"))
+    merge("graft_mem.default.sm_s", "0")
+    assert(rowsOf("sm_t") == Seq((1L, "A", 10L), (9L, "Z", 0L)))
+  }
+
   test("an unpolicied user has full DML access; audit records the decisions") {
     val c = freshTarget("dml_free")
     c.executeDml("admin", "DELETE FROM graft_mem.default.dml_free WHERE seg = 'B'")
