@@ -3,6 +3,7 @@ package graft.plans
 import graft.functions.MaskFunctions
 import graft.policy.PolicyManager
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.analysis.AnalysisContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -21,11 +22,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * }}}
   *
   * One post-hoc resolution rule runs [[Enforcement]], the path
-  * [[graft.SecurityContext]] runs, once per analysis: after the analyzer's
+  * [[graft.SecurityContext]] runs, once per statement: after the analyzer's
   * fixed point and after `DataSourceAnalysis`, so INSERT bodies are already
-  * write commands whose query the rules reach. Subquery and view bodies get
-  * it from their own nested analyses. An unset/empty `spark.graft.user`
-  * disables enforcement (internal queries, admin sessions).
+  * write commands whose query the rules reach; nested analyses defer to
+  * the outermost. An unset/empty `spark.graft.user` disables enforcement
+  * (internal queries, admin sessions).
   */
 class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
@@ -44,18 +45,21 @@ object GraftSecurityExtensions {
   val DatabaseKey = "spark.graft.database"
 
   /** The extension's one analyzer rule: [[Enforcement]] for the session's
-    * user against one policy view, skipping subtrees analyzed before this
-    * query (`postAnalysis = false`). A column denial throws out of analysis.
+    * user against one policy view, skipped in a nested analysis (a view
+    * body, a subquery plan, or one [[Enforcement]] started). A column
+    * denial throws out of analysis.
     */
   final class Enforce(session: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
-      case Some(u) =>
+      case Some(u) if !nested =>
         ensureFunctions(session)
-        Enforcement(session, u, policies.view(), scopeOf(session), plan,
-          postAnalysis = false)._1
-      case None => plan
+        Enforcement(session, u, policies.view(), scopeOf(session), plan)._1
+      case _ => plan
     }
   }
+
+  private def nested: Boolean = Enforcement.running ||
+    AnalysisContext.get.nestedViewDepth > 0 || AnalysisContext.get.outerPlan.isDefined
 
   private def currentUser(spark: SparkSession): Option[String] =
     Option(spark.conf.get(UserKey, "")).filter(_.nonEmpty)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.types.Metadata
 
 /** Plan-level equivalents of the reference's AST visitors.
   *
@@ -39,9 +38,9 @@ import org.apache.spark.sql.types.Metadata
   * SecurityContext.java:67-90) is a plain TreeNodeTag here.
   *
   * The rules read policies through a [[graft.policy.PolicyView]]. Callers
-  * pass one [[graft.policy.PolicyManager.view]] per query (per analysis in
-  * extension mode), so every scan of it is decided against the same policy
-  * snapshot and the same instant.
+  * pass one [[graft.policy.PolicyManager.view]] per statement, in both
+  * modes, so every scan of it is decided against the same policy snapshot
+  * and the same instant.
   *
   * Scale note: rules run once per query on the driver; the injected Filter
   * sits directly above the scan, so Catalyst pushes predicates into the
@@ -54,12 +53,18 @@ import org.apache.spark.sql.types.Metadata
   * reference to the table — joins, subqueries, EXISTS, UNION legs, CTAS/INSERT
   * bodies — and new queries stay enforced even when a scan is answered from a
   * cache populated before the policy existed (the injected nodes sit above the
-  * matched cache subtree). Outside it: a direct `spark.read.parquet(path)` of
-  * the table's files never passes through a catalog identifier and is NOT
-  * rewritten, and a DataFrame handle cached before a policy was added keeps
-  * serving its materialized raw rows. Both are storage/lifecycle concerns the
-  * engine cannot see — deployments must pair table policies with storage ACLs
-  * denying raw-path access, the same split Ranger documents for Hive.
+  * matched cache subtree). A Dataset's own actions keep the plan it was
+  * analyzed with; a query derived from it is enforced, but for the principal
+  * that first enforced the handle (the tags do not record it; ROADMAP item 1).
+  * Outside the boundary: a direct `spark.read.parquet(path)` of the table's
+  * files never passes through a catalog identifier and is NOT rewritten, and
+  * a DataFrame handle built or cached before a policy was added keeps serving
+  * its own raw rows. Both are storage/lifecycle concerns the engine cannot
+  * see — deployments must pair table policies with storage ACLs denying
+  * raw-path access, the same split Ranger documents for Hive. Policy
+  * conditions run with DEFINER RIGHTS in both modes: a table read inside an
+  * injected filter's condition gets no policies of its own (it is the policy
+  * author's code, not the principal's query, and cannot recurse into cycles).
   */
 object SecurityTags {
   val RowFilterApplied: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.rowFilterApplied")
@@ -103,6 +108,24 @@ object PlanShapes {
     case _ => false
   }
 
+  /** A node the security rules injected: a row filter or a mask projection. */
+  def isInjected(p: LogicalPlan): Boolean = p match {
+    case f: Filter => f.getTagValue(SecurityTags.RowFilterApplied).contains(true)
+    case pr: Project => pr.getTagValue(SecurityTags.MaskApplied).contains(true)
+    case _ => false
+  }
+
+  /** `f` applied to every subquery plan in `plan` outside injected nodes:
+    * the one way both rules reach subqueries, so a policy condition, new or
+    * from a reused handle, keeps definer rights.
+    */
+  def mapSubqueryPlans(plan: LogicalPlan)(f: LogicalPlan => LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case p if !isInjected(p) => p.transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(f(s.plan))
+      }
+    }
+
   /** (catalog, db, table) of a SubqueryAlias identifier; empty qualifiers
     * get the scope's defaults, like Flink's validator qualifying bare names.
     * Shared by the rules (via [[SecurityRuleSupport.tableParts]]) and the
@@ -126,19 +149,11 @@ object PlanShapes {
   * from inside subquery expressions. Nodes the security rules themselves
   * injected (tagged Filter/mask Project) don't count as reads either: a
   * policy's filter condition or a full-width mask projection touching the
-  * denied column is engine machinery, not the principal's query — without
-  * this, extension mode (where nested subquery and view analyses have
-  * already injected theirs) would deny every masked table outright.
+  * denied column is engine machinery, not the principal's query (definer
+  * rights). Injected nodes reach this check only from a reused handle that
+  * was already enforced: nested analyses do not enforce.
   */
 object ColumnDenyCheck {
-  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId, SubqueryExpression}
-
-  private def isInjected(p: LogicalPlan): Boolean = p match {
-    case f: Filter => f.getTagValue(SecurityTags.RowFilterApplied).contains(true)
-    case pr: Project => pr.getTagValue(SecurityTags.MaskApplied).contains(true)
-    case _ => false
-  }
-
   /** The scan chain under a SubqueryAlias once engine-injected nodes are
     * stripped: Some(nodes from alias child down to the base table, base
     * included) when a base table is at the bottom. The chain's outputs
@@ -148,7 +163,7 @@ object ColumnDenyCheck {
     * every node in the chain so both resolve.
     */
   private def injectedChain(p: LogicalPlan): Option[Seq[LogicalPlan]] = p match {
-    case n if isInjected(n) => injectedChain(n.children.head).map(n +: _)
+    case n if PlanShapes.isInjected(n) => injectedChain(n.children.head).map(n +: _)
     case b if PlanShapes.isBaseTable(b) => Some(Seq(b))
     case _ => None
   }
@@ -198,7 +213,7 @@ object ColumnDenyCheck {
       case _ => ()
     }
     def walk(p: LogicalPlan): Unit = {
-      if (!isInjected(p)) p.expressions.foreach(_.foreach {
+      if (!PlanShapes.isInjected(p)) p.expressions.foreach(_.foreach {
         case a: AttributeReference => ids += a.exprId; ()
         case s: SubqueryExpression => walk(s.plan)
         case _ => ()
@@ -325,7 +340,7 @@ trait SecurityRuleSupport {
       case leaf if leaf.children.isEmpty =>
         val policied = leaf.innerChildren.collect { case p: LogicalPlan => p }
           .flatMap(_.collect {
-            case SubqueryAlias(id, child) if isBaseTable(child) =>
+            case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
               tableParts(id)
           })
           .filter((isPolicied.apply _).tupled)
@@ -338,14 +353,7 @@ trait SecurityRuleSupport {
     }
   }
 
-  /** A scan of a named table — the ONE shared predicate (also used by
-    * [[SqlRenderer]]); see [[PlanShapes.isBaseTable]].
-    */
-  protected def isBaseTable(p: LogicalPlan): Boolean = PlanShapes.isBaseTable(p)
-
-  /** (catalog, db, table) of a SubqueryAlias identifier; empty qualifiers get
-    * the context's defaults, like Flink's validator qualifying bare names.
-    */
+  /** [[PlanShapes.tableParts]] in the rule's scope. */
   protected def tableParts(id: org.apache.spark.sql.catalyst.AliasIdentifier): (String, String, String) =
     PlanShapes.tableParts(id, scope)
 }
@@ -361,12 +369,6 @@ final case class RowFilterRule(
     user: String,
     policies: PolicyView,
     override val scope: TableScope,
-    /** true: rewrite every subtree, subquery plans included. false
-      * (extension mode): skip subtrees analyzed before this query, so a
-      * DataFrame handle taken before a policy keeps its plan; subquery
-      * plans get the rule from their own nested analysis.
-      */
-    postAnalysis: Boolean = true,
     /** true: inject ONLY deny decisions (condition `false` on denied
       * tables), skipping allow-filters — the deny gate the mask-only entry
       * points run, so `dfDataMask`/`rewriteDataMask` alone can never return
@@ -376,13 +378,9 @@ final case class RowFilterRule(
     denyOnly: Boolean = false
 ) extends Rule[LogicalPlan] with SecurityRuleSupport {
 
-  private def alreadyFiltered(child: LogicalPlan): Boolean = child match {
-    case f: Filter => f.getTagValue(SecurityTags.RowFilterApplied).contains(true)
-    case _ => false
-  }
-
+  // an already-filtered alias holds the injected Filter, not a base table
   private val pf: PartialFunction[LogicalPlan, LogicalPlan] = {
-    case sa @ SubqueryAlias(id, child) if isBaseTable(child) && !alreadyFiltered(child) =>
+    case sa @ SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
       val (cat, db, table) = tableParts(id)
       // deny checked FIRST and tagged as the deny it is (audit action
       // ROW_DENY): rowFilterConditions also collapses to `false` under an
@@ -396,16 +394,7 @@ final case class RowFilterRule(
       conds match {
         case Seq() => sa
         case conds =>
-          val cond = conds
-            .map { c =>
-              try spark.sessionState.sqlParser.parseExpression(c)
-              catch {
-                case e: Exception => throw new IllegalArgumentException(
-                  s"row-filter policy for user '$user' on $cat.$db.$table has " +
-                    s"an unparseable condition: $c", e)
-              }
-            }
-            .reduceLeft[Expression](And(_, _))
+          val cond = FilterConditions.parse(spark, user, cat, db, table, conds)
           val filter = spark.sessionState.executePlan(Filter(cond, child)).analyzed
             .asInstanceOf[Filter]
           filter.setTagValue(SecurityTags.RowFilterApplied, true)
@@ -418,20 +407,31 @@ final case class RowFilterRule(
       }
   }
 
-  private def hasRowFilter(cat: String, db: String, table: String): Boolean =
-    if (denyOnly) policies.isDenied(user, cat, db, table)
-    else policies.rowFilterConditions(user, cat, db, table).nonEmpty
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    applyToEmbeddedQuery(plan, apply, hasRowFilter).getOrElse {
-      // transformUpWithSubqueries also reaches plans inside EXISTS/IN/scalar
-      // subquery expressions — a policied table referenced there must be
-      // filtered too. (In extension mode the analyzer's nested subquery
-      // resolution runs the extension's rule, so resolveOperatorsUp on the
-      // outer plan suffices.)
-      if (postAnalysis) plan.transformUpWithSubqueries(pf)
-      else plan.resolveOperatorsUp(pf)
-    }
+    applyToEmbeddedQuery(plan, apply, (c, d, t) =>
+      if (denyOnly) policies.isDenied(user, c, d, t)
+      else policies.rowFilterConditions(user, c, d, t).nonEmpty
+    ).getOrElse(applyToTree(plan))
+
+  // one walk of the whole statement, view bodies and subquery plans
+  // included; the condition of an injected filter, new or from a reused
+  // handle, is never entered (definer rights)
+  private def applyToTree(plan: LogicalPlan): LogicalPlan =
+    PlanShapes.mapSubqueryPlans(plan)(applyToTree).transformUp(pf)
+}
+
+/** A row-filter policy's conditions parsed into their conjunction. */
+private object FilterConditions {
+  def parse(spark: SparkSession, user: String, cat: String, db: String,
+      table: String, conds: Seq[String]): Expression =
+    conds.map { c =>
+      try spark.sessionState.sqlParser.parseExpression(c)
+      catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"row-filter policy for user '$user' on $cat.$db.$table has " +
+            s"an unparseable condition: $c", e)
+      }
+    }.reduceLeft[Expression](And(_, _))
 }
 
 /** Injects masking projections for `user` (reference:
@@ -587,8 +587,7 @@ final case class DataMaskRule(
       // scan output, so maskedProject builds directly over the chain.
       def bottomIsBase(q: LogicalPlan): Boolean = q match {
         case g: Filter => bottomIsBase(g.child)
-        case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) => false
-        case b => isBaseTable(b)
+        case b => PlanShapes.isBaseTable(b)
       }
       if (bottomIsBase(f)) maskedProject(f, cat, db, table) else None
     case f: Filter =>
@@ -599,26 +598,18 @@ final case class DataMaskRule(
           case a: AttributeReference => masked.getOrElse(a, a)
         }, mapping)
       }
-    case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) =>
-      None // re-entrancy guard
-    case base if isBaseTable(base) => maskedProject(base, cat, db, table)
-    case _ => None
+    case base if PlanShapes.isBaseTable(base) => maskedProject(base, cat, db, table)
+    case _ => None // an injected mask Project included: re-entrancy guard
   }
 
-  private def hasMask(cat: String, db: String, table: String): Boolean =
-    policies.hasDataMask(user, cat, db, table)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    applyToEmbeddedQuery(plan, apply, hasMask).getOrElse(applyToTree(plan))
+    applyToEmbeddedQuery(plan, apply, policies.hasDataMask(user, _, _, _))
+      .getOrElse(applyToTree(plan))
 
   private def applyToTree(plan: LogicalPlan): LogicalPlan = {
     // mask tables referenced inside subquery expressions (EXISTS/IN/scalar)
     // first — transformUpWithNewOutput does not descend into them
-    val withSubqueries = plan.transformAllExpressions {
-      case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-        s.withNewPlan(apply(s.plan))
-    }
-    val masked = withSubqueries.transformUpWithNewOutput {
+    val masked = PlanShapes.mapSubqueryPlans(plan)(applyToTree).transformUpWithNewOutput {
       case sa @ SubqueryAlias(id, child) =>
         val (cat, db, table) = tableParts(id)
         injectUnderFilters(child, cat, db, table) match {
@@ -633,33 +624,41 @@ final case class DataMaskRule(
   }
 }
 
-/** The one enforcement path, run on an analyzed plan by both modes —
-  * [[graft.SecurityContext]]'s read entry points and the
+/** The one enforcement path, run once per statement on its analyzed plan
+  * by both modes — [[graft.SecurityContext]]'s read entry points and the
   * [[GraftSecurityExtensions]] analyzer rule: the column-deny gate
   * (`onDeny` sees the violations before the throw), then row filters (or,
   * with `rowFilters = false`, only the deny decisions), then masks in the
   * reference order or over raw filter values. The modes differ only in
-  * where the principal, the policy view and the scope come from, and in
-  * `postAnalysis` (see [[RowFilterRule]]). Returns the rewritten plan and
-  * the identity-only mask decisions ([[DataMaskRule.identityAudit]]).
+  * where the principal, the policy view and the scope come from. Returns
+  * the rewritten plan and the identity-only mask decisions
+  * ([[DataMaskRule.identityAudit]]).
   */
 object Enforcement {
+  // set while a pass runs on this thread: the analyses the pass starts
+  // itself (an injected filter's condition) belong to it
+  private val active = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+  private[plans] def running: Boolean = active.get
+
   def apply(spark: SparkSession, user: String, policies: PolicyView,
-      scope: TableScope, plan: LogicalPlan, postAnalysis: Boolean = true,
+      scope: TableScope, plan: LogicalPlan,
       rowFilters: Boolean = true, masks: Boolean = true, filterOnRaw: Boolean = false,
       onDeny: Seq[(String, Seq[String])] => Unit = _ => ()): (LogicalPlan, Seq[String]) = {
-    val denied = ColumnDenyCheck.violations(plan, user, policies, scope)
-    if (denied.nonEmpty) {
-      onDeny(denied)
-      throw graft.ColumnAccessDeniedException(user, denied, "the query")
-    }
-    val filtered = RowFilterRule(spark, user, policies, scope, postAnalysis,
-      denyOnly = !rowFilters)(plan)
-    if (!masks) (filtered, Nil)
-    else {
-      val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
-      (rule(filtered), rule.identityAudit.toSeq)
-    }
+    val outer = active.get
+    active.set(true)
+    try {
+      val denied = ColumnDenyCheck.violations(plan, user, policies, scope)
+      if (denied.nonEmpty) {
+        onDeny(denied)
+        throw graft.ColumnAccessDeniedException(user, denied, "the query")
+      }
+      val filtered = RowFilterRule(spark, user, policies, scope, denyOnly = !rowFilters)(plan)
+      if (!masks) (filtered, Nil)
+      else {
+        val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
+        (rule(filtered), rule.identityAudit.toSeq)
+      }
+    } finally active.set(outer)
   }
 }
 
@@ -712,8 +711,8 @@ final case class DmlSecurityRewrite(
     spark: SparkSession,
     user: String,
     policies: PolicyView,
-    override val scope: TableScope
-) extends SecurityRuleSupport {
+    scope: TableScope
+) {
 
   import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 
@@ -759,16 +758,9 @@ final case class DmlSecurityRewrite(
     val conds = policies.rowFilterConditions(user, cat, db, table)
     if (conds.isEmpty) None
     else {
-      val parsed = conds.map { c =>
-        try spark.sessionState.sqlParser.parseExpression(c)
-        catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"row-filter policy for user '$user' on $cat.$db.$table has " +
-              s"an unparseable condition: $c", e)
-        }
-      }
+      val cond = FilterConditions.parse(spark, user, cat, db, table, conds)
       dmlAudit += "ROW_FILTER" -> s"$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
-      Some(parsed.map(qualify(qualifier, _)).reduceLeft[Expression](And(_, _)))
+      Some(qualify(qualifier, cond))
     }
   }
 

@@ -10,8 +10,12 @@ with the full compare, no-oracle ones as {"err":"no_oracle"} rows-only
 entries. The round commits this as CORRECTNESS_self.json so a hard
 correctness receipt survives even when the driver's own artifact comes back
 empty (r03/r04/r07/r10/r17).
+
+Each oracle prints its line as soon as it is decided, behind a running
+[k/N] tally. A SIGTERM or SIGINT (a wrapper's timeout, ^C) prints the
+partial summary "checked k of N, f failed" at once and exits non-zero.
 """
-import duckdb, json, sys, glob, os
+import duckdb, json, sys, glob, os, signal, threading
 import pandas as pd
 
 args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -39,59 +43,85 @@ def entry(rows_match=None, schema_match=None, hash_match=None,
             "oracle_rows": oracle_rows, "err": err}
 
 
-fails = 0
-for name, sql in sorted(oracle.items()):
+def check(name, sql):
+    """Compare one dumped query with its oracle: (passed, entry, message)."""
     res_dir = f"{out_dir}/{name}"
     if not os.path.isdir(res_dir):
-        print(f"MISSING {name}"); fails += 1
-        report[name] = entry(err="missing: query not dumped")
-        continue
+        return False, entry(err="missing: query not dumped"), f"MISSING {name}"
     got = pd.read_parquet(res_dir)
     try:
         exp = con.execute(sql).df()
     except Exception as e:
-        print(f"ORACLE-ERR {name}: {e}"); fails += 1
-        report[name] = entry(spark_rows=len(got), err=f"oracle: {e}")
-        continue
+        return (False, entry(spark_rows=len(got), err=f"oracle: {e}"),
+                f"ORACLE-ERR {name}: {e}")
     got = got[sorted(got.columns)].reset_index(drop=True)
     exp = exp[sorted(exp.columns)].reset_index(drop=True)
     n_got, n_exp = len(got), len(exp)
     if list(got.columns) != list(exp.columns):
-        print(f"SCHEMA {name}: {list(got.columns)} vs {list(exp.columns)}"); fails += 1
-        report[name] = entry(rows_match=(n_got == n_exp), schema_match=False,
+        return (False, entry(rows_match=(n_got == n_exp), schema_match=False,
                              hash_match=False, spark_rows=n_got,
-                             oracle_rows=n_exp, err=None)
-        continue
+                             oracle_rows=n_exp, err=None),
+                f"SCHEMA {name}: {list(got.columns)} vs {list(exp.columns)}")
     if n_got != n_exp:
-        print(f"ROWS {name}: {n_got} vs {n_exp}"); fails += 1
-        report[name] = entry(rows_match=False, schema_match=True,
+        return (False, entry(rows_match=False, schema_match=True,
                              hash_match=False, spark_rows=n_got,
-                             oracle_rows=n_exp, err=None)
-        continue
+                             oracle_rows=n_exp, err=None),
+                f"ROWS {name}: {n_got} vs {n_exp}")
     # normalize dtypes for compare
     try:
         gd = got.astype(str); ed = exp.astype(str)
     except Exception as e:
-        print(f"CAST-ERR {name}: {e}"); fails += 1
-        report[name] = entry(rows_match=True, schema_match=True,
+        return (False, entry(rows_match=True, schema_match=True,
                              spark_rows=n_got, oracle_rows=n_exp,
-                             err=f"cast: {e}")
-        continue
+                             err=f"cast: {e}"),
+                f"CAST-ERR {name}: {e}")
     if not gd.equals(ed):
         neq = (gd != ed).any(axis=1)
         idx = neq[neq].index[:3]
-        print(f"VALUES {name}: first diffs at rows {list(idx)}")
+        lines = [f"VALUES {name}: first diffs at rows {list(idx)}"]
         for i in idx:
-            print(f"  got: {gd.loc[i].to_dict()}")
-            print(f"  exp: {ed.loc[i].to_dict()}")
-        fails += 1
-        report[name] = entry(rows_match=True, schema_match=True,
+            lines.append(f"  got: {gd.loc[i].to_dict()}")
+            lines.append(f"  exp: {ed.loc[i].to_dict()}")
+        return (False, entry(rows_match=True, schema_match=True,
                              hash_match=False, spark_rows=n_got,
-                             oracle_rows=n_exp, err=None)
-        continue
-    print(f"OK {name} ({n_got} rows)")
-    report[name] = entry(rows_match=True, schema_match=True, hash_match=True,
-                         spark_rows=n_got, oracle_rows=n_exp, err=None)
+                             oracle_rows=n_exp, err=None),
+                "\n".join(lines))
+    return (True, entry(rows_match=True, schema_match=True, hash_match=True,
+                        spark_rows=n_got, oracle_rows=n_exp, err=None),
+            f"OK {name} ({n_got} rows)")
+
+
+# one line per oracle as soon as it is decided, with a running tally. The
+# oracles run on a worker thread so the main thread stays free to take a
+# TERM or INT (a wrapper's timeout, ^C) at once, even while a long DuckDB
+# query is in flight, and print the partial summary before exiting.
+total = len(oracle)
+checked = fails = 0
+
+
+def check_all():
+    global checked, fails
+    for name, sql in sorted(oracle.items()):
+        ok, report[name], message = check(name, sql)
+        checked += 1
+        fails += not ok
+        print(f"[{checked}/{total}] {message}", flush=True)
+
+
+def interrupted(signum, _frame):
+    print(f"\ninterrupted by {signal.Signals(signum).name}: "
+          f"checked {checked} of {total}, {fails} failed", flush=True)
+    os._exit(128 + signum)
+
+
+signal.signal(signal.SIGTERM, interrupted)
+signal.signal(signal.SIGINT, interrupted)
+worker = threading.Thread(target=check_all, daemon=True)
+worker.start()
+while worker.is_alive():
+    worker.join(0.2)
+if checked < total:  # the worker died on an unexpected error (traceback above)
+    sys.exit(f"stopped: checked {checked} of {total}, {fails} failed")
 
 # dumped queries WITHOUT an oracle (sketch/recall families): rows-only
 # entries, exactly the driver's weaker check
