@@ -20,10 +20,12 @@ case class AuditEntry(seq: Long, principal: String, action: String,
 /** Thrown when a query references a column an active
   * [[graft.policy.ColumnDenyPolicy]] denies to the principal — analysis-time
   * and FAIL-CLOSED: a denied column never degrades to a silent null or a
-  * mask (a masked read is still a read). The denial is recorded in the
-  * audit trail (action COLUMN_DENY) before the throw.
+  * mask (a masked read is still a read). `violations` holds the denied
+  * (cat.db.table, columns); [[SecurityContext]] records each as a
+  * COLUMN_DENY audit row before passing the exception on.
   */
-class ColumnAccessDeniedException(message: String) extends RuntimeException(message)
+class ColumnAccessDeniedException(message: String,
+    val violations: Seq[(String, Seq[String])] = Nil) extends RuntimeException(message)
 
 object ColumnAccessDeniedException {
   /** The one wording of a column denial: `what` ("the query", "the DML
@@ -33,7 +35,7 @@ object ColumnAccessDeniedException {
       what: String): ColumnAccessDeniedException =
     new ColumnAccessDeniedException(s"user '$user' is denied column(s) " +
       violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-      s" — $what references them and fails closed")
+      s" — $what references them and fails closed", violations)
 }
 
 /** User-facing facade — the Spark-native equivalent of the reference's
@@ -108,19 +110,24 @@ final class SecurityContext(
   }
 
   /** The policy applications the rules tagged in a rewritten plan
-    * (`SecurityTags.*Audit` breadcrumbs at each injection site;
-    * collectWithSubqueries also reaches plans inside EXISTS/IN/scalar
-    * subquery expressions).
+    * (`SecurityTags.*Audit` breadcrumbs at each injection site), found in
+    * the statement's query ([[graft.plans.Enforcement.unwrap]], so a CTAS
+    * body counts); collectWithSubqueries also reaches plans inside
+    * EXISTS/IN/scalar subquery expressions.
     */
   private def planDecisions(plan: LogicalPlan): Seq[(String, String)] = {
     import graft.plans.SecurityTags._
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    plan.collectWithSubqueries {
+    Enforcement.unwrap(plan)._1.collectWithSubqueries {
       case f: Filter => f.getTagValue(RowFilterAudit).map("ROW_FILTER" -> _)
         .orElse(f.getTagValue(RowDenyAudit).map("ROW_DENY" -> _))
       case p: Project => p.getTagValue(MaskAudit).map("DATA_MASK" -> _)
     }.flatten
   }
+
+  /** The COLUMN_DENY audit rows of a denial. */
+  private def denials(e: ColumnAccessDeniedException): Seq[(String, String)] =
+    e.violations.map { case (obj, cols) => "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}" }
 
   /** The audit trail as a DataFrame (seq, principal, action, obj, detail),
     * in call order. Identity-only mask matches record as ordinary DATA_MASK
@@ -151,11 +158,13 @@ final class SecurityContext(
   private def rewrite(user: String, api: String, sql: String,
       rowFilters: Boolean = true, masks: Boolean = true,
       filterOnRaw: Boolean = false): LogicalPlan = {
-    val (plan, identityMasks) = Enforcement(spark, user, policyManager.view(), scope,
-      analyzed(parseSql(sql)), rowFilters = rowFilters, masks = masks,
-      filterOnRaw = filterOnRaw,
-      onDeny = vs => audit(user, api, sql,
-        vs.map { case (obj, cols) => "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}" }))
+    val (plan, identityMasks) =
+      try Enforcement(spark, user, policyManager.view(), scope, analyzed(parseSql(sql)),
+        rowFilters = rowFilters, masks = masks, filterOnRaw = filterOnRaw)
+      catch { case e: ColumnAccessDeniedException =>
+        audit(user, api, sql, denials(e))
+        throw e
+      }
     GraftSqlShims.checkedAnalyzed(spark, plan)
     audit(user, api, sql, planDecisions(plan) ++ identityMasks.map("DATA_MASK" -> _))
     plan
@@ -230,7 +239,7 @@ final class SecurityContext(
     val rewritten =
       try rule(parseSql(sql))
       catch { case e: ColumnAccessDeniedException =>
-        audit(user, "dml", sql, rule.dmlAudit.toSeq)
+        audit(user, "dml", sql, rule.dmlAudit.toSeq ++ denials(e))
         throw e
       }
     // source-side rule applications carry the ordinary plan tags; the

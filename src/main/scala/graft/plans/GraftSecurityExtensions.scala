@@ -23,10 +23,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * One post-hoc resolution rule runs [[Enforcement]], the path
   * [[graft.SecurityContext]] runs, once per statement: after the analyzer's
-  * fixed point and after `DataSourceAnalysis`, so INSERT bodies are already
-  * write commands whose query the rules reach; nested analyses defer to
-  * the outermost. An unset/empty `spark.graft.user` disables enforcement
-  * (internal queries, admin sessions).
+  * fixed point and after `DataSourceAnalysis`, so INSERT and CTAS bodies
+  * are already write commands whose query [[Enforcement.unwrap]] reaches;
+  * nested analyses defer to the outermost. An unset/empty `spark.graft.user`
+  * disables enforcement (internal queries, admin sessions).
   */
 class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

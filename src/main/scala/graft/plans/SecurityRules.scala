@@ -35,7 +35,8 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * analysis. [[Enforcement]] composes them for both enforcement modes.
   *
   * Re-entrancy (the reference's javassist `custom` flag hack,
-  * SecurityContext.java:67-90) is a plain TreeNodeTag here.
+  * SecurityContext.java:67-90) is a plain TreeNodeTag here, and each
+  * injected node also records the principal it was injected for.
   *
   * The rules read policies through a [[graft.policy.PolicyView]]. Callers
   * pass one [[graft.policy.PolicyManager.view]] per statement, in both
@@ -51,11 +52,13 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * tests): policies attach to catalog table identifiers, exactly like the
   * reference (and Ranger/Hive). Inside that boundary, enforcement covers any
   * reference to the table — joins, subqueries, EXISTS, UNION legs, CTAS/INSERT
-  * bodies — and new queries stay enforced even when a scan is answered from a
+  * bodies (the query a V1 command embeds gets the column-deny gate, the
+  * rules and the audit, through [[Enforcement.unwrap]]) — and new queries
+  * stay enforced even when a scan is answered from a
   * cache populated before the policy existed (the injected nodes sit above the
   * matched cache subtree). A Dataset's own actions keep the plan it was
-  * analyzed with; a query derived from it is enforced, but for the principal
-  * that first enforced the handle (the tags do not record it; ROADMAP item 1).
+  * analyzed with; a query derived from it is enforced for the principal that
+  * enforced the handle and fails closed for any other.
   * Outside the boundary: a direct `spark.read.parquet(path)` of the table's
   * files never passes through a catalog identifier and is NOT rewritten, and
   * a DataFrame handle built or cached before a policy was added keeps serving
@@ -69,6 +72,9 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 object SecurityTags {
   val RowFilterApplied: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.rowFilterApplied")
   val MaskApplied: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.maskApplied")
+  // the principal an injected node was injected for: a reused handle is
+  // never enforced again, so another principal must not inherit it
+  val Principal: TreeNodeTag[String] = TreeNodeTag[String]("graft.principal")
   // audit breadcrumbs ("cat.db.table|detail") left at each injection site;
   // SecurityContext.auditLog collects them post-rewrite (the Ranger model:
   // every policy application is an auditable access decision)
@@ -126,17 +132,17 @@ object PlanShapes {
       }
     }
 
-  /** (catalog, db, table) of a SubqueryAlias identifier; empty qualifiers
+  /** (catalog, db, table) of a table's name parts (`qualifier :+ name` of a
+    * SubqueryAlias, or a parsed relation's identifier); missing qualifiers
     * get the scope's defaults, like Flink's validator qualifying bare names.
-    * Shared by the rules (via [[SecurityRuleSupport.tableParts]]) and the
-    * column-deny check in [[graft.SecurityContext]].
+    * The one qualification the rules, the column-deny check, [[Enforcement]]
+    * and [[DmlSecurityRewrite]] share.
     */
-  def tableParts(id: org.apache.spark.sql.catalyst.AliasIdentifier,
-      scope: TableScope): (String, String, String) =
-    id.qualifier match {
-      case Seq() => (scope.catalog, scope.database, id.name)
-      case Seq(db) => (scope.catalog, db, id.name)
-      case parts => (parts.head, parts.last, id.name)
+  def tableParts(nameParts: Seq[String], scope: TableScope): (String, String, String) =
+    nameParts match {
+      case Seq(t) => (scope.catalog, scope.database, t)
+      case Seq(db, t) => (scope.catalog, db, t)
+      case ps => (ps.head, ps.init.last, ps.last)
     }
 }
 
@@ -192,7 +198,7 @@ object ColumnDenyCheck {
     if (!policies.hasColumnDenies) return Nil
     val scans = plan.collectWithSubqueries {
       case SubqueryAlias(id, child) if injectedChain(child).isDefined =>
-        (PlanShapes.tableParts(id, scope), injectedChain(child).get)
+        (PlanShapes.tableParts(id.qualifier :+ id.name, scope), injectedChain(child).get)
     }
     val denied = scans.map { case (parts, chain) =>
       (parts, chain, policies.deniedColumns(user, parts._1, parts._2, parts._3))
@@ -315,49 +321,6 @@ object ColumnDenyCheck {
   }
 }
 
-trait SecurityRuleSupport {
-  def scope: TableScope
-
-  /** V1 leaf commands (CTAS, save, insert-into-dir, ...) embed their query as
-    * an innerChild, NOT a child — tree traversals never see it, so without
-    * explicit recursion a `CREATE TABLE ... AS SELECT policied_table` would
-    * persist unfiltered, unmasked data. Rebuild the known command types with
-    * a rewritten query; for an UNKNOWN leaf that still embeds logical plans
-    * over policied tables, fail closed: an error beats a silent bypass.
-    */
-  protected def applyToEmbeddedQuery(plan: LogicalPlan,
-      rewrite: LogicalPlan => LogicalPlan,
-      isPolicied: (String, String, String) => Boolean): Option[LogicalPlan] = {
-    import org.apache.spark.sql.execution.command.{CreateDataSourceTableAsSelectCommand, InsertIntoDataSourceDirCommand}
-    import org.apache.spark.sql.execution.datasources.{InsertIntoDataSourceCommand, SaveIntoDataSourceCommand}
-    // these command constructors assert query.resolved; the rules emit
-    // resolved nodes, so the rewritten query goes in as it is
-    plan match {
-      case c: CreateDataSourceTableAsSelectCommand => Some(c.copy(query = rewrite(c.query)))
-      case c: InsertIntoDataSourceCommand => Some(c.copy(query = rewrite(c.query)))
-      case c: SaveIntoDataSourceCommand => Some(c.copy(query = rewrite(c.query)))
-      case c: InsertIntoDataSourceDirCommand => Some(c.copy(query = rewrite(c.query)))
-      case leaf if leaf.children.isEmpty =>
-        val policied = leaf.innerChildren.collect { case p: LogicalPlan => p }
-          .flatMap(_.collect {
-            case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
-              tableParts(id)
-          })
-          .filter((isPolicied.apply _).tupled)
-        if (policied.nonEmpty) throw new UnsupportedOperationException(
-          s"${leaf.nodeName} embeds a query over policied table(s) " +
-            s"${policied.map(_._3).distinct.mkString(", ")} that the security " +
-            "rules cannot rewrite — refusing to execute it unenforced")
-        None
-      case _ => None
-    }
-  }
-
-  /** [[PlanShapes.tableParts]] in the rule's scope. */
-  protected def tableParts(id: org.apache.spark.sql.catalyst.AliasIdentifier): (String, String, String) =
-    PlanShapes.tableParts(id, scope)
-}
-
 /** Injects row-level-security filters for `user` (reference:
   * RowFilterVisitor.java:45-125). Each injected `Filter(cond, scan)` is
   * analyzed on its own — the scan is already analyzed, so this costs
@@ -368,7 +331,7 @@ final case class RowFilterRule(
     spark: SparkSession,
     user: String,
     policies: PolicyView,
-    override val scope: TableScope,
+    scope: TableScope,
     /** true: inject ONLY deny decisions (condition `false` on denied
       * tables), skipping allow-filters — the deny gate the mask-only entry
       * points run, so `dfDataMask`/`rewriteDataMask` alone can never return
@@ -376,12 +339,12 @@ final case class RowFilterRule(
       * while still not smuggling row-filter semantics into a mask-only API.
       */
     denyOnly: Boolean = false
-) extends Rule[LogicalPlan] with SecurityRuleSupport {
+) extends Rule[LogicalPlan] {
 
   // an already-filtered alias holds the injected Filter, not a base table
   private val pf: PartialFunction[LogicalPlan, LogicalPlan] = {
     case sa @ SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
-      val (cat, db, table) = tableParts(id)
+      val (cat, db, table) = PlanShapes.tableParts(id.qualifier :+ id.name, scope)
       // deny checked FIRST and tagged as the deny it is (audit action
       // ROW_DENY): rowFilterConditions also collapses to `false` under an
       // active deny, but the trail must distinguish a deny decision from an
@@ -398,6 +361,7 @@ final case class RowFilterRule(
           val filter = spark.sessionState.executePlan(Filter(cond, child)).analyzed
             .asInstanceOf[Filter]
           filter.setTagValue(SecurityTags.RowFilterApplied, true)
+          filter.setTagValue(SecurityTags.Principal, user)
           if (denied)
             filter.setTagValue(SecurityTags.RowDenyAudit, s"$cat.$db.$table|DENY")
           else
@@ -407,17 +371,12 @@ final case class RowFilterRule(
       }
   }
 
+  // one walk of the whole query, view bodies and subquery plans included;
+  // the condition of an injected filter, new or from a reused handle, is
+  // never entered (definer rights). A command's embedded query is
+  // [[Enforcement]]'s to unwrap.
   override def apply(plan: LogicalPlan): LogicalPlan =
-    applyToEmbeddedQuery(plan, apply, (c, d, t) =>
-      if (denyOnly) policies.isDenied(user, c, d, t)
-      else policies.rowFilterConditions(user, c, d, t).nonEmpty
-    ).getOrElse(applyToTree(plan))
-
-  // one walk of the whole statement, view bodies and subquery plans
-  // included; the condition of an injected filter, new or from a reused
-  // handle, is never entered (definer rights)
-  private def applyToTree(plan: LogicalPlan): LogicalPlan =
-    PlanShapes.mapSubqueryPlans(plan)(applyToTree).transformUp(pf)
+    PlanShapes.mapSubqueryPlans(plan)(apply).transformUp(pf)
 }
 
 /** A row-filter policy's conditions parsed into their conjunction. */
@@ -445,7 +404,7 @@ final case class DataMaskRule(
     spark: SparkSession,
     user: String,
     policies: PolicyView,
-    override val scope: TableScope,
+    scope: TableScope,
     /** false (default): reference semantics — injected row filters sit above
       * the mask and evaluate over MASKED values (SecurityContext.java:154-167).
       * true: Ranger-style composition — the masked Project wraps the injected
@@ -458,7 +417,7 @@ final case class DataMaskRule(
       * accumulate.
       */
     auditIdentity: Boolean = false
-) extends Rule[LogicalPlan] with SecurityRuleSupport {
+) extends Rule[LogicalPlan] {
 
   /** Side channel for identity-only access decisions: when every matched
     * mask policy on a scan is MASK_NONE (or a CUSTOM passthrough), no
@@ -567,6 +526,7 @@ final case class DataMaskRule(
     } else {
       val p = Project(cols, base)
       p.setTagValue(SecurityTags.MaskApplied, true)
+      p.setTagValue(SecurityTags.Principal, user)
       p.setTagValue(SecurityTags.MaskAudit,
         s"$cat.$db.$table|${audited.result().mkString(",")}")
       Some((p, mapping.result()))
@@ -602,16 +562,12 @@ final case class DataMaskRule(
     case _ => None // an injected mask Project included: re-entrancy guard
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    applyToEmbeddedQuery(plan, apply, policies.hasDataMask(user, _, _, _))
-      .getOrElse(applyToTree(plan))
-
-  private def applyToTree(plan: LogicalPlan): LogicalPlan = {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
     // mask tables referenced inside subquery expressions (EXISTS/IN/scalar)
     // first — transformUpWithNewOutput does not descend into them
-    val masked = PlanShapes.mapSubqueryPlans(plan)(applyToTree).transformUpWithNewOutput {
+    val masked = PlanShapes.mapSubqueryPlans(plan)(apply).transformUpWithNewOutput {
       case sa @ SubqueryAlias(id, child) =>
-        val (cat, db, table) = tableParts(id)
+        val (cat, db, table) = PlanShapes.tableParts(id.qualifier :+ id.name, scope)
         injectUnderFilters(child, cat, db, table) match {
           case Some((newChild, mapping)) => (SubqueryAlias(id, newChild), mapping)
           case None => (sa, Nil)
@@ -626,39 +582,89 @@ final case class DataMaskRule(
 
 /** The one enforcement path, run once per statement on its analyzed plan
   * by both modes — [[graft.SecurityContext]]'s read entry points and the
-  * [[GraftSecurityExtensions]] analyzer rule: the column-deny gate
-  * (`onDeny` sees the violations before the throw), then row filters (or,
-  * with `rowFilters = false`, only the deny decisions), then masks in the
-  * reference order or over raw filter values. The modes differ only in
-  * where the principal, the policy view and the scope come from. Returns
-  * the rewritten plan and the identity-only mask decisions
+  * [[GraftSecurityExtensions]] analyzer rule. It unwraps the statement's
+  * query once ([[unwrap]]), then runs the column-deny gate (a denial throws
+  * [[graft.ColumnAccessDeniedException]] carrying its violations), row
+  * filters (or, with `rowFilters = false`, only the deny decisions), and
+  * masks in the reference order or over raw filter values, and rebuilds the
+  * command around the result. The modes differ only in where the
+  * principal, the policy view and the scope come from. Returns the
+  * rewritten plan and the identity-only mask decisions
   * ([[DataMaskRule.identityAudit]]).
   */
 object Enforcement {
+  import org.apache.spark.sql.execution.command.{CreateDataSourceTableAsSelectCommand, InsertIntoDataSourceDirCommand}
+  import org.apache.spark.sql.execution.datasources.{InsertIntoDataSourceCommand, SaveIntoDataSourceCommand}
+
   // set while a pass runs on this thread: the analyses the pass starts
   // itself (an injected filter's condition) belong to it
   private val active = ThreadLocal.withInitial[java.lang.Boolean](() => false)
   private[plans] def running: Boolean = active.get
 
+  /** The query a statement runs and how to put a rewritten one back. V1
+    * leaf commands (CTAS, save, insert-into-dir, ...) embed their query as
+    * an innerChild, NOT a child, so tree traversals never see it; for any
+    * other plan the query is the plan itself. The command constructors
+    * assert `query.resolved`, which the rules' output is.
+    */
+  def unwrap(plan: LogicalPlan): (LogicalPlan, LogicalPlan => LogicalPlan) = plan match {
+    case c: CreateDataSourceTableAsSelectCommand => (c.query, q => c.copy(query = q))
+    case c: InsertIntoDataSourceCommand => (c.query, q => c.copy(query = q))
+    case c: SaveIntoDataSourceCommand => (c.query, q => c.copy(query = q))
+    case c: InsertIntoDataSourceDirCommand => (c.query, q => c.copy(query = q))
+    case other => (other, identity)
+  }
+
   def apply(spark: SparkSession, user: String, policies: PolicyView,
-      scope: TableScope, plan: LogicalPlan,
-      rowFilters: Boolean = true, masks: Boolean = true, filterOnRaw: Boolean = false,
-      onDeny: Seq[(String, Seq[String])] => Unit = _ => ()): (LogicalPlan, Seq[String]) = {
+      scope: TableScope, plan: LogicalPlan, rowFilters: Boolean = true,
+      masks: Boolean = true, filterOnRaw: Boolean = false): (LogicalPlan, Seq[String]) = {
     val outer = active.get
     active.set(true)
     try {
-      val denied = ColumnDenyCheck.violations(plan, user, policies, scope)
-      if (denied.nonEmpty) {
-        onDeny(denied)
-        throw graft.ColumnAccessDeniedException(user, denied, "the query")
-      }
-      val filtered = RowFilterRule(spark, user, policies, scope, denyOnly = !rowFilters)(plan)
-      if (!masks) (filtered, Nil)
+      val (query, rebuild) = unwrap(plan)
+      failClosed(user, policies, scope, query, rowFilters, masks)
+      val denied = ColumnDenyCheck.violations(query, user, policies, scope)
+      if (denied.nonEmpty) throw graft.ColumnAccessDeniedException(user, denied, "the query")
+      val filtered = RowFilterRule(spark, user, policies, scope, denyOnly = !rowFilters)(query)
+      if (!masks) (rebuild(filtered), Nil)
       else {
         val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
-        (rule(filtered), rule.identityAudit.toSeq)
+        (rebuild(rule(filtered)), rule.identityAudit.toSeq)
       }
     } finally active.set(outer)
+  }
+
+  /** The two plans enforcement cannot rewrite, refused instead of run
+    * unenforced: a node injected for another principal (a handle enforced
+    * for one user, reused in a query derived under another, would keep the
+    * first user's filters and skip the second's), and an UNKNOWN leaf that
+    * embeds a query over a table this call would enforce anything on.
+    */
+  private def failClosed(user: String, policies: PolicyView, scope: TableScope,
+      query: LogicalPlan, rowFilters: Boolean, masks: Boolean): Unit = {
+    val reused = query.collectFirstWithSubqueries {
+      case p if PlanShapes.isInjected(p) && !p.getTagValue(SecurityTags.Principal).contains(user) => p
+    }
+    if (reused.isDefined) throw new UnsupportedOperationException(
+      s"the query reuses a plan enforced for another principal; user '$user' " +
+        "must run it afresh — refusing to execute it under that principal's policies")
+    def policied(c: String, d: String, t: String): Boolean =
+      policies.isDenied(user, c, d, t) ||
+        (rowFilters && policies.rowFilterConditions(user, c, d, t).nonEmpty) ||
+        (masks && policies.hasDataMask(user, c, d, t)) ||
+        policies.deniedColumns(user, c, d, t).nonEmpty
+    if (query.children.isEmpty) {
+      val tables = query.innerChildren.collect { case p: LogicalPlan => p }
+        .flatMap(_.collectWithSubqueries {
+          case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
+            PlanShapes.tableParts(id.qualifier :+ id.name, scope)
+        })
+        .filter((policied _).tupled)
+      if (tables.nonEmpty) throw new UnsupportedOperationException(
+        s"${query.nodeName} embeds a query over policied table(s) " +
+          s"${tables.map(_._3).distinct.mkString(", ")} that the security " +
+          "rules cannot rewrite — refusing to execute it unenforced")
+    }
   }
 }
 
@@ -722,22 +728,23 @@ final case class DmlSecurityRewrite(
     */
   val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
-  private def parts(rel: UnresolvedRelation): (String, String, String) =
-    rel.multipartIdentifier match {
-      case Seq(t) => (scope.catalog, scope.database, t)
-      case Seq(db, t) => (scope.catalog, db, t)
-      case ps => (ps.head, ps.init.last, ps.last)
-    }
-
-  /** (relation, qualifier-for-injected-conditions): the alias if the target
-    * is aliased, the table name otherwise.
+  /** (cat, db, table, reference qualifier) of a parsed named table: the
+    * qualifier is the alias if the table is aliased, the table name
+    * otherwise.
     */
-  private def targetOf(plan: LogicalPlan): (UnresolvedRelation, String) = plan match {
-    case SubqueryAlias(id, r: UnresolvedRelation) => (r, id.name)
-    case r: UnresolvedRelation => (r, r.multipartIdentifier.last)
-    case other => throw new UnsupportedOperationException(
-      s"row-level DML target must be a named table, got ${other.nodeName}")
+  private val named: PartialFunction[LogicalPlan, (String, String, String, String)] = {
+    case SubqueryAlias(id, r: UnresolvedRelation) => withQualifier(r, id.name)
+    case r: UnresolvedRelation => withQualifier(r, r.multipartIdentifier.last)
   }
+
+  private def withQualifier(r: UnresolvedRelation, q: String): (String, String, String, String) = {
+    val (c, d, t) = PlanShapes.tableParts(r.multipartIdentifier, scope)
+    (c, d, t, q)
+  }
+
+  private def targetOf(plan: LogicalPlan): (String, String, String, String) =
+    named.applyOrElse(plan, (other: LogicalPlan) => throw new UnsupportedOperationException(
+      s"row-level DML target must be a named table, got ${other.nodeName}"))
 
   private def qualify(q: String, e: Expression): Expression = e.transform {
     case a: UnresolvedAttribute if a.nameParts.length == 1 =>
@@ -801,37 +808,20 @@ final case class DmlSecurityRewrite(
       val h = hits(c, d, t, q)
       if (h.isEmpty) Nil else Seq(s"$c.$d.$t" -> h)
     }
-    if (violations.nonEmpty) {
-      violations.foreach { case (obj, cols) =>
-        dmlAudit += "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}"
-      }
+    if (violations.nonEmpty)
       throw graft.ColumnAccessDeniedException(user, violations, "the DML statement")
-    }
   }
-
-  /** Base tables of a (parsed) source subtree with their reference
-    * qualifier: the nearest alias if present, else the table name.
-    */
-  private def sourceTables(plan: LogicalPlan): Seq[(String, String, String, String)] =
-    plan.collect {
-      case SubqueryAlias(id, r: UnresolvedRelation) =>
-        val (c, d, t) = parts(r); (c, d, t, id.name)
-      case r: UnresolvedRelation =>
-        val (c, d, t) = parts(r); (c, d, t, r.multipartIdentifier.last)
-    }
 
   /** Source subtree through the read path, [[Enforcement]]: analyze it
     * standalone, then the column-deny gate, row filters and masks (all emit
     * resolved nodes), and splice it back. The surrounding (still-parsed)
-    * statement resolves around the already-analyzed subtree. Denials and
-    * identity-only mask decisions go into [[dmlAudit]].
+    * statement resolves around the already-analyzed subtree. Identity-only
+    * mask decisions go into [[dmlAudit]]; a denial throws out, as the
+    * statement's own column denials do.
     */
   private def secureSource(plan: LogicalPlan): LogicalPlan = {
     val (secured, identityMasks) = Enforcement(spark, user, policies, scope,
-      spark.sessionState.executePlan(plan).analyzed,
-      onDeny = _.foreach { case (obj, cols) =>
-        dmlAudit += "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}"
-      })
+      spark.sessionState.executePlan(plan).analyzed)
     dmlAudit ++= identityMasks.map("DATA_MASK" -> _)
     secured
   }
@@ -841,10 +831,9 @@ final case class DmlSecurityRewrite(
     */
   def apply(parsed: LogicalPlan): LogicalPlan = parsed match {
     case m: MergeIntoTable =>
-      val (rel, qualifier) = targetOf(m.targetTable)
-      val (cat, db, table) = parts(rel)
-      val srcs = sourceTables(m.sourceTable)
-      enforceColumnDeny((cat, db, table, qualifier), srcs,
+      val target @ (cat, db, table, qualifier) = targetOf(m.targetTable)
+      // every base table of the source, under its nearest alias and its name
+      enforceColumnDeny(target, m.sourceTable.collect(named),
         Seq(m.mergeCondition) ++
           (m.matchedActions ++ m.notMatchedActions ++ m.notMatchedBySourceActions)
             .flatMap(a => a.condition.toSeq ++ (a match {
@@ -860,18 +849,16 @@ final case class DmlSecurityRewrite(
       }
       constrained.copy(sourceTable = secureSource(m.sourceTable))
     case u: UpdateTable =>
-      val (rel, qualifier) = targetOf(u.table)
-      val (cat, db, table) = parts(rel)
-      enforceColumnDeny((cat, db, table, qualifier), Nil,
+      val target @ (cat, db, table, qualifier) = targetOf(u.table)
+      enforceColumnDeny(target, Nil,
         u.condition.toSeq ++ u.assignments.flatMap(a => Seq(a.key, a.value)))
       targetConstraint(cat, db, table, qualifier) match {
         case Some(f) => u.copy(condition = and(u.condition, f))
         case None => u
       }
     case d: DeleteFromTable =>
-      val (rel, qualifier) = targetOf(d.table)
-      val (cat, db, table) = parts(rel)
-      enforceColumnDeny((cat, db, table, qualifier), Nil, Seq(d.condition))
+      val target @ (cat, db, table, qualifier) = targetOf(d.table)
+      enforceColumnDeny(target, Nil, Seq(d.condition))
       targetConstraint(cat, db, table, qualifier) match {
         case Some(f) => d.copy(condition = And(d.condition, f))
         case None => d

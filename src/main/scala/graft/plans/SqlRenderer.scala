@@ -102,7 +102,7 @@ object SqlRenderer {
     */
   private def fromAndWhere(child: LogicalPlan): (String, String) = {
     val (userCond, fromTree) = child match {
-      case f: Filter if !isInjected(f) => (Some(f.condition), f.child)
+      case f: Filter if !PlanShapes.isInjected(f) => (Some(f.condition), f.child)
       case other => (None, other)
     }
     val (fromSql, hoisted) = renderFrom(fromTree)
@@ -117,9 +117,6 @@ object SqlRenderer {
     val where = if (conds.isEmpty) "" else s" WHERE ${conds.mkString(" AND ")}"
     (fromSql, where)
   }
-
-  private def isInjected(f: Filter): Boolean =
-    f.getTagValue(SecurityTags.RowFilterApplied).contains(true)
 
   /** Renders a FROM-position subtree; returns (sql, hoisted filter texts in
     * left-to-right table order).
@@ -152,7 +149,7 @@ object SqlRenderer {
     // descend: collect injected filters, find what the chain bottoms out in
     def walk(p: LogicalPlan, conds: Seq[Expression]):
         (LogicalPlan, Seq[Expression]) = p match {
-      case f: Filter if isInjected(f) => walk(f.child, conds :+ f.condition)
+      case f: Filter if PlanShapes.isInjected(f) => walk(f.child, conds :+ f.condition)
       case inner: SubqueryAlias => walk(inner.child, conds)
       case other => (other, conds)
     }
@@ -160,13 +157,12 @@ object SqlRenderer {
     val qualifiedConds = conds.map(c => exprText(c, forceQualifier = Some(aliasName)))
     bottom match {
       // masked table: derived-table text with the base table inside
-      case p @ Project(cols, base)
-        if p.getTagValue(SecurityTags.MaskApplied).contains(true) =>
+      case p @ Project(cols, base) if PlanShapes.isInjected(p) =>
         val baseName = tablePath(sa).orElse(leafName(base)).getOrElse(base.nodeName)
         val inner = cols.map(maskedColText).mkString(", ")
         (s"( SELECT $inner FROM $baseName ) AS $aliasName", qualifiedConds)
       // plain base table (filters, if any, hoisted)
-      case base if isBase(base) =>
+      case base if PlanShapes.isBaseTable(base) =>
         val baseName = tablePath(sa).orElse(leafName(base)).getOrElse(base.nodeName)
         (s"$baseName AS $aliasName", qualifiedConds)
       // user-written derived table
@@ -174,9 +170,6 @@ object SqlRenderer {
         (s"( ${renderSelect(other)} ) AS $aliasName", qualifiedConds)
     }
   }
-
-  // the rules' own predicate — one list, no drift (incl. streaming scans)
-  private def isBase(p: LogicalPlan): Boolean = PlanShapes.isBaseTable(p)
 
   /** The full catalog path of the table under an alias chain: the INNERMOST
     * SubqueryAlias's identifier (the analyzer records the resolved
@@ -187,8 +180,7 @@ object SqlRenderer {
     def innermost(p: LogicalPlan): Option[SubqueryAlias] = p match {
       case s: SubqueryAlias => innermost(s.child).orElse(Some(s))
       case f: Filter => innermost(f.child)
-      case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) =>
-        innermost(pr.child)
+      case pr: Project if PlanShapes.isInjected(pr) => innermost(pr.child)
       case _ => None
     }
     innermost(sa).map { s =>

@@ -17,8 +17,9 @@ class ModeParitySpec extends SparkFunSuite {
 
   private val User = "mp_u"
   private val Scope = "spark_catalog.default"
-  private val Tables = Seq("mp_t", "mp_allowed", "mp_masked", "mp_c", "mp_cm")
+  private val Tables = Seq("mp_t", "mp_allowed", "mp_masked", "mp_c", "mp_cm", "mp_ctas")
   private val Views = Seq("mp_v", "mp_bal")
+  private val Dir = new java.io.File("spark-warehouse/mp_dir").getAbsolutePath
 
   private def rows(rs: Seq[Row]): Seq[Seq[Any]] = rs.map(_.toSeq)
 
@@ -61,6 +62,7 @@ class ModeParitySpec extends SparkFunSuite {
         sec.sql(s"DROP TABLE IF EXISTS $t")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"spark-warehouse/$t"))
       }
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(Dir))
     }
     drop()
     Seq((1, "Jack", "bj", 10.0), (2, "Sally", "hz", 20.0))
@@ -131,6 +133,12 @@ class ModeParitySpec extends SparkFunSuite {
       Right(Seq(Seq(1)))),
     Case("a denied column read inside a subquery",
       "SELECT id FROM mp_ids WHERE id IN (SELECT id FROM mp_t WHERE bal > 0)",
+      denial(s"$Scope.mp_t" -> Seq("bal"))),
+    Case("a CTAS reading a denied column",
+      "CREATE TABLE mp_ctas USING parquet AS SELECT id, bal FROM mp_t",
+      denial(s"$Scope.mp_t" -> Seq("bal"))),
+    Case("INSERT OVERWRITE DIRECTORY reading a denied column",
+      s"INSERT OVERWRITE DIRECTORY '$Dir' USING parquet SELECT id, bal FROM mp_t",
       denial(s"$Scope.mp_t" -> Seq("bal"))))
 
   test("context mode and extension mode return the same rows or the same denial") {
@@ -157,6 +165,61 @@ class ModeParitySpec extends SparkFunSuite {
             s"${c.name}: expected ${c.expected}, context $viaContext, extension $viaExtension"
         }
         assert(wrong.isEmpty, wrong.mkString("\n", "\n", ""))
+        assert(!sec.catalog.tableExists("mp_ctas"), "a denied CTAS left its table behind")
+      }
+    }
+  }
+
+  test("a CTAS over a filtered and masked table persists the same rows in both modes, and the context audits its decisions") {
+    withExtensionSession { sec =>
+      withFixture(sec) {
+        val ctx = new SecurityContext(sec, GraftSecurityExtensions.policies)
+        val ctas = "CREATE TABLE mp_ctas USING parquet AS SELECT id, name, region FROM mp_t"
+        // read raw, with no user set
+        def persisted(): Seq[Seq[Any]] =
+          try rows(sec.table("mp_ctas").collect().toSeq) finally sec.sql("DROP TABLE mp_ctas")
+        ctx.mixedExecute(User, ctas)
+        val viaContext = persisted()
+        sec.conf.set(GraftSecurityExtensions.UserKey, User)
+        try sec.sql(ctas) finally sec.conf.unset(GraftSecurityExtensions.UserKey)
+        assert(Seq(viaContext, persisted()) == Seq.fill(2)(Seq(Seq(1, "Xxxx", "bj"))))
+        val trail = ctx.auditLog.collect().map(r => (r.getString(2), r.getString(3), r.getString(4)))
+        assert(trail.toSeq == Seq(("QUERY", "mixed", ctas),
+          ("ROW_FILTER", s"$Scope.mp_t", "region = 'bj'"),
+          ("DATA_MASK", s"$Scope.mp_t", "name=MASK")))
+      }
+    }
+  }
+
+  test("a handle enforced for one user fails closed when another user derives a query from it") {
+    withExtensionSession { sec =>
+      import sec.implicits._
+      def drop(): Unit = {
+        sec.sql("DROP TABLE IF EXISTS xu_t")
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("spark-warehouse/xu_t"))
+      }
+      def as[A](user: String)(body: => A): A = {
+        sec.conf.set(GraftSecurityExtensions.UserKey, user)
+        try body finally sec.conf.unset(GraftSecurityExtensions.UserKey)
+      }
+      drop()
+      Seq((1, "bj"), (2, "hz")).toDF("id", "region").write.saveAsTable("xu_t")
+      val pm = GraftSecurityExtensions.policies
+      val policies = Seq(
+        RowFilterPolicy("xu_a", "spark_catalog", "default", "xu_t", "region = 'bj'"),
+        RowFilterPolicy("xu_b", "spark_catalog", "default", "xu_t", "region = 'hz'"))
+      policies.foreach(pm.addPolicy)
+      try {
+        val handle = as("xu_a")(sec.sql("SELECT * FROM xu_t"))
+        val e = intercept[UnsupportedOperationException] {
+          as("xu_b")(handle.select("id").collect())
+        }
+        assert(e.getMessage.contains("enforced for another principal"), e.getMessage)
+        assert(as("xu_b")(rows(sec.sql("SELECT id FROM xu_t").collect().toSeq)) == Seq(Seq(2)))
+        assert(as("xu_a")(rows(handle.select("id").collect().toSeq)) == Seq(Seq(1)))
+      } finally {
+        policies.foreach(pm.removePolicy)
+        drop()
       }
     }
   }
