@@ -8,34 +8,77 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.StructType
 
+/** One access decision: `action` ROW_FILTER, ROW_DENY, DATA_MASK or
+  * COLUMN_DENY on table `obj` (cat.db.table); `detail` is the injected
+  * condition, `DENY`, the `col=MASK_TYPE` list or the denied columns.
+  */
+final case class AccessDecision(action: String, obj: String, detail: String)
+
 /** One audit record: a query submission (action QUERY, obj = which rewrite
-  * API, detail = the statement) or a policy application the rewrite
-  * performed (action ROW_FILTER / DATA_MASK, obj = cat.db.table, detail =
-  * the injected condition / the col=MASK_TYPE list). `seq` is the call
-  * order — deterministic for a fresh context.
+  * API, detail = the statement), then each [[AccessDecision]] it made
+  * (ROW_FILTER, ROW_DENY, DATA_MASK, COLUMN_DENY) in the order
+  * [[graft.plans.Enforcement]] makes them: row filters and denies
+  * first, then masks, each in the rules' walk order (subquery plans first,
+  * then the query bottom-up); row-level DML puts its target constraint
+  * first. Only decisions the statement made are recorded: a plan reused
+  * through a temp view over an already-enforced handle is not audited
+  * again. `seq` is the call order; the trail keeps the newest 16,384
+  * records, and `seq` keeps counting across evictions.
   */
 case class AuditEntry(seq: Long, principal: String, action: String,
     obj: String, detail: String)
 
-/** Thrown when a query references a column an active
-  * [[graft.policy.ColumnDenyPolicy]] denies to the principal — analysis-time
-  * and FAIL-CLOSED: a denied column never degrades to a silent null or a
-  * mask (a masked read is still a read). `violations` holds the denied
-  * (cat.db.table, columns); [[SecurityContext]] records each as a
-  * COLUMN_DENY audit row before passing the exception on.
+/** Thrown FAIL-CLOSED at analysis time when a query references a column an
+  * active [[graft.policy.ColumnDenyPolicy]] denies to the principal (a
+  * denied column never degrades to a silent null or a mask: a masked read
+  * is still a read), or when row-level DML targets a denied table.
+  * `decisions` holds its COLUMN_DENY (or ROW_DENY) decisions, which
+  * [[SecurityContext]] audits after the submission's QUERY row and any
+  * decision made before the refusal, then passes the exception on.
   */
 class ColumnAccessDeniedException(message: String,
-    val violations: Seq[(String, Seq[String])] = Nil) extends RuntimeException(message)
+    val decisions: Seq[AccessDecision] = Nil) extends RuntimeException(message)
 
 object ColumnAccessDeniedException {
   /** The one wording of a column denial: `what` ("the query", "the DML
-    * statement") references the (cat.db.table, columns) `violations`.
+    * statement") references the `denied` columns.
     */
-  def apply(user: String, violations: Seq[(String, Seq[String])],
+  def apply(user: String, denied: Seq[AccessDecision],
       what: String): ColumnAccessDeniedException =
     new ColumnAccessDeniedException(s"user '$user' is denied column(s) " +
-      violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-      s" — $what references them and fails closed", violations)
+      denied.map(d => s"${d.obj}.(${d.detail})").mkString("; ") +
+      s" — $what references them and fails closed", denied)
+
+  /** The same, from (cat.db.table, columns) pairs. */
+  def apply(user: String, cols: Seq[(String, Seq[String])], what: String)(implicit
+      d: DummyImplicit): ColumnAccessDeniedException =
+    apply(user, cols.map(c => AccessDecision("COLUMN_DENY", c._1, c._2.mkString(","))), what)
+}
+
+/** The newest `capacity` audit records, the oldest evicted first. `seq`
+  * counts every record since the last `clear`, so the retained tail stays
+  * dense. One monitor keeps a submission's records contiguous and every
+  * seq unique under concurrent rewrites.
+  */
+private[graft] final class AuditTrail(capacity: Int) {
+  private val entries = new java.util.ArrayDeque[AuditEntry]()
+  private var next = 0L
+
+  /** One submission (action QUERY) and the decisions it made. */
+  def record(user: String, api: String, sql: String,
+      decisions: Seq[AccessDecision]): Unit = synchronized {
+    def add(action: String, obj: String, detail: String): Unit = {
+      if (entries.size == capacity) entries.removeFirst()
+      entries.addLast(AuditEntry(next, user, action, obj, detail))
+      next += 1
+    }
+    add("QUERY", api, sql)
+    decisions.foreach(d => add(d.action, d.obj, d.detail))
+  }
+
+  def snapshot: Seq[AuditEntry] = synchronized(entries.toArray(Array.empty[AuditEntry]).toSeq)
+
+  def clear(): Unit = synchronized { entries.clear(); next = 0 }
 }
 
 /** User-facing facade — the Spark-native equivalent of the reference's
@@ -91,55 +134,15 @@ final class SecurityContext(
   // --- audit trail (the Ranger model the reference's PolicyManager names
   // as intent: every rewrite is an access decision worth recording) ---
 
-  private val auditBuf = scala.collection.mutable.ArrayBuffer.empty[AuditEntry]
+  private val trail = new AuditTrail(capacity = 1 << 14)
 
-  /** Record one submission (action QUERY) and the access decisions it
-    * produced, each an (action, "cat.db.table|detail") crumb. Driver-side,
-    * bounded by the number of policied scans in the plan — never
-    * data-sized. Appends take one monitor so concurrent rewrites through a
-    * shared context cannot corrupt the buffer or duplicate seq values (seq
-    * derives from size at append).
-    */
-  private def audit(user: String, api: String, sql: String,
-      decisions: Seq[(String, String)]): Unit = auditBuf.synchronized {
-    auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
-    decisions.foreach { case (action, crumb) =>
-      val Array(obj, detail) = crumb.split("\\|", 2)
-      auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-    }
-  }
-
-  /** The policy applications the rules tagged in a rewritten plan
-    * (`SecurityTags.*Audit` breadcrumbs at each injection site), found in
-    * the statement's query ([[graft.plans.Enforcement.unwrap]], so a CTAS
-    * body counts); collectWithSubqueries also reaches plans inside
-    * EXISTS/IN/scalar subquery expressions.
-    */
-  private def planDecisions(plan: LogicalPlan): Seq[(String, String)] = {
-    import graft.plans.SecurityTags._
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    Enforcement.unwrap(plan)._1.collectWithSubqueries {
-      case f: Filter => f.getTagValue(RowFilterAudit).map("ROW_FILTER" -> _)
-        .orElse(f.getTagValue(RowDenyAudit).map("ROW_DENY" -> _))
-      case p: Project => p.getTagValue(MaskAudit).map("DATA_MASK" -> _)
-    }.flatten
-  }
-
-  /** The COLUMN_DENY audit rows of a denial. */
-  private def denials(e: ColumnAccessDeniedException): Seq[(String, String)] =
-    e.violations.map { case (obj, cols) => "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}" }
-
-  /** The audit trail as a DataFrame (seq, principal, action, obj, detail),
-    * in call order. Identity-only mask matches record as ordinary DATA_MASK
-    * decisions (detail `col=MASK_NONE`) after their submission's
-    * plan-collected rows.
-    */
+  /** The audit trail as a DataFrame of [[AuditEntry]] rows, in call order. */
   def auditLog: DataFrame = {
     import spark.implicits._
-    auditBuf.synchronized(auditBuf.toSeq).toDF()
+    trail.snapshot.toDF()
   }
 
-  def clearAudit(): Unit = auditBuf.synchronized(auditBuf.clear())
+  def clearAudit(): Unit = trail.clear()
 
   /** Catalog schema lookup (reference getTable, SecurityContext.java:253-292). */
   def getTable(table: String): StructType = spark.table(table).schema
@@ -147,26 +150,23 @@ final class SecurityContext(
   /** The one read rewrite behind every entry point: parse, analyze, then
     * [[graft.plans.Enforcement]] against ONE policy view — a concurrent
     * policy write or a window closing mid-rewrite cannot split the query's
-    * decisions between two policy sets. A column denial records the
-    * submission and its COLUMN_DENY rows, then throws
-    * [[ColumnAccessDeniedException]]. The rewritten plan is checked once
-    * and marked analyzed; the audit then records the submission, the
-    * decisions tagged in the plan, and any identity-only mask decisions
-    * (MASK_NONE-only scans build no Project to tag —
-    * [[graft.plans.DataMaskRule.identityAudit]]) after them.
+    * decisions between two policy sets. The rewritten plan is checked once
+    * and marked analyzed. The audit records the submission and the
+    * decisions made, a denial's included, before a
+    * [[ColumnAccessDeniedException]] is passed on.
     */
   private def rewrite(user: String, api: String, sql: String,
       rowFilters: Boolean = true, masks: Boolean = true,
       filterOnRaw: Boolean = false): LogicalPlan = {
-    val (plan, identityMasks) =
+    val (plan, decisions) =
       try Enforcement(spark, user, policyManager.view(), scope, analyzed(parseSql(sql)),
         rowFilters = rowFilters, masks = masks, filterOnRaw = filterOnRaw)
       catch { case e: ColumnAccessDeniedException =>
-        audit(user, api, sql, denials(e))
+        trail.record(user, api, sql, e.decisions)
         throw e
       }
     GraftSqlShims.checkedAnalyzed(spark, plan)
-    audit(user, api, sql, planDecisions(plan) ++ identityMasks.map("DATA_MASK" -> _))
+    trail.record(user, api, sql, decisions)
     plan
   }
 
@@ -230,25 +230,21 @@ final class SecurityContext(
   // closed. ---
 
   /** Parse + security-rewrite + analyze one DML statement; audits the
-    * submission, the target constraint, and every source-side policy
-    * application. Throws [[ColumnAccessDeniedException]] fail-closed on
-    * denied tables/columns (after auditing the denial).
+    * submission, the target constraint, and every policy application of the
+    * source and of the statement's subqueries. Throws
+    * [[ColumnAccessDeniedException]] fail-closed on denied tables/columns
+    * (after auditing the denial).
     */
   def rewriteDml(user: String, sql: String): LogicalPlan = {
     val rule = DmlSecurityRewrite(spark, user, policyManager.view(), scope)
     val rewritten =
       try rule(parseSql(sql))
       catch { case e: ColumnAccessDeniedException =>
-        audit(user, "dml", sql, rule.dmlAudit.toSeq ++ denials(e))
+        trail.record(user, "dml", sql, rule.decisions.toSeq ++ e.decisions)
         throw e
       }
-    // source-side rule applications carry the ordinary plan tags; the
-    // target-side constraint (a condition rewrite, no plan node to tag)
-    // arrives through the rule's crumb buffer. The merge rewrite replays the
-    // source subtree into several plan positions (join leg, cardinality
-    // check) — one policy decision, one audit row.
     val plan = analyzed(rewritten)
-    audit(user, "dml", sql, rule.dmlAudit.toSeq ++ planDecisions(plan).distinct)
+    trail.record(user, "dml", sql, rule.decisions.toSeq)
     plan
   }
 

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.AccessDecision
 import graft.policy.PolicyView
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -38,6 +39,11 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * SecurityContext.java:67-90) is a plain TreeNodeTag here, and each
   * injected node also records the principal it was injected for.
   *
+  * Every injection or refusal is a [[graft.AccessDecision]], recorded by
+  * the rule (or the column-deny gate) that makes it; [[Enforcement]]
+  * returns a statement's decisions with its plan, and they are the audit
+  * trail's one source. No decision is read back from the plan.
+  *
   * The rules read policies through a [[graft.policy.PolicyView]]. Callers
   * pass one [[graft.policy.PolicyManager.view]] per statement, in both
   * modes, so every scan of it is decided against the same policy snapshot
@@ -53,7 +59,9 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * reference (and Ranger/Hive). Inside that boundary, enforcement covers any
   * reference to the table — joins, subqueries, EXISTS, UNION legs, CTAS/INSERT
   * bodies (the query a V1 command embeds gets the column-deny gate, the
-  * rules and the audit, through [[Enforcement.unwrap]]) — and new queries
+  * rules and the audit, through [[Enforcement.unwrap]]), the source and the
+  * condition and assignment subqueries of row-level DML
+  * ([[DmlSecurityRewrite]]) — and new queries
   * stay enforced even when a scan is answered from a
   * cache populated before the policy existed (the injected nodes sit above the
   * matched cache subtree). A Dataset's own actions keep the plan it was
@@ -75,15 +83,6 @@ object SecurityTags {
   // the principal an injected node was injected for: a reused handle is
   // never enforced again, so another principal must not inherit it
   val Principal: TreeNodeTag[String] = TreeNodeTag[String]("graft.principal")
-  // audit breadcrumbs ("cat.db.table|detail") left at each injection site;
-  // SecurityContext.auditLog collects them post-rewrite (the Ranger model:
-  // every policy application is an auditable access decision)
-  val RowFilterAudit: TreeNodeTag[String] = TreeNodeTag[String]("graft.rowFilterAudit")
-  val MaskAudit: TreeNodeTag[String] = TreeNodeTag[String]("graft.maskAudit")
-  // a DENY decision ([[graft.policy.DenyRowPolicy]]) — mechanically the same
-  // injected `false` filter, but the audit trail must read it as the deny it
-  // is, not as an ordinary allow-filter that happens to be `false`
-  val RowDenyAudit: TreeNodeTag[String] = TreeNodeTag[String]("graft.rowDenyAudit")
 }
 
 /** Resolves which (catalog, database) a bare single-part table reference
@@ -174,7 +173,8 @@ object ColumnDenyCheck {
     case _ => None
   }
 
-  /** (cat.db.table, referenced denied columns) per violating scan.
+  /** One COLUMN_DENY decision (cat.db.table, the referenced denied
+    * columns) per violating scan.
     *
     * VIEW semantics (the bypass a naive boundary leaves open): a view
     * projecting a denied column (`CREATE VIEW v AS SELECT price AS p FROM
@@ -192,7 +192,7 @@ object ColumnDenyCheck {
     * the fail-closed reading Hive's column authorization uses).
     */
   def violations(plan: LogicalPlan, user: String, policies: PolicyView,
-      scope: TableScope): Seq[(String, Seq[String])] = {
+      scope: TableScope): Seq[AccessDecision] = {
     // fast path: no column-deny policies at all -> skip the plan walk
     // (driver-side and plan-sized either way, but this runs per query)
     if (!policies.hasColumnDenies) return Nil
@@ -316,7 +316,8 @@ object ColumnDenyCheck {
       val hit = chain.flatMap(_.output)
         .filter(a => cols.exists(_.equalsIgnoreCase(a.name)) && ids.contains(a.exprId))
         .map(_.name).distinct
-      if (hit.isEmpty) None else Some((s"$cat.$db.$table", hit))
+      if (hit.isEmpty) None
+      else Some(AccessDecision("COLUMN_DENY", s"$cat.$db.$table", hit.mkString(",")))
     }
   }
 }
@@ -325,7 +326,8 @@ object ColumnDenyCheck {
   * RowFilterVisitor.java:45-125). Each injected `Filter(cond, scan)` is
   * analyzed on its own — the scan is already analyzed, so this costs
   * O(condition), not O(query) — and goes in resolved, IN/EXISTS/scalar
-  * subqueries, functions and type coercion included.
+  * subqueries, functions and type coercion included. Each injection
+  * appends its ROW_FILTER (or ROW_DENY) decision to [[decisions]].
   */
 final case class RowFilterRule(
     spark: SparkSession,
@@ -341,14 +343,17 @@ final case class RowFilterRule(
     denyOnly: Boolean = false
 ) extends Rule[LogicalPlan] {
 
+  /** The decisions this instance made, in walk order. */
+  val decisions = scala.collection.mutable.ArrayBuffer.empty[AccessDecision]
+
   // an already-filtered alias holds the injected Filter, not a base table
   private val pf: PartialFunction[LogicalPlan, LogicalPlan] = {
     case sa @ SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
       val (cat, db, table) = PlanShapes.tableParts(id.qualifier :+ id.name, scope)
-      // deny checked FIRST and tagged as the deny it is (audit action
-      // ROW_DENY): rowFilterConditions also collapses to `false` under an
-      // active deny, but the trail must distinguish a deny decision from an
-      // ordinary allow-filter that happens to be `false`
+      // deny checked FIRST and recorded as the deny it is (ROW_DENY):
+      // rowFilterConditions also collapses to `false` under an active deny,
+      // but the trail must distinguish a deny decision from an ordinary
+      // allow-filter that happens to be `false`
       val denied = policies.isDenied(user, cat, db, table)
       val conds =
         if (denied) Seq("false")
@@ -362,11 +367,9 @@ final case class RowFilterRule(
             .asInstanceOf[Filter]
           filter.setTagValue(SecurityTags.RowFilterApplied, true)
           filter.setTagValue(SecurityTags.Principal, user)
-          if (denied)
-            filter.setTagValue(SecurityTags.RowDenyAudit, s"$cat.$db.$table|DENY")
-          else
-            filter.setTagValue(SecurityTags.RowFilterAudit,
-              s"$cat.$db.$table|${conds.mkString(" AND ")}")
+          decisions +=
+            (if (denied) AccessDecision("ROW_DENY", s"$cat.$db.$table", "DENY")
+            else AccessDecision("ROW_FILTER", s"$cat.$db.$table", conds.mkString(" AND ")))
           SubqueryAlias(id, filter)
       }
   }
@@ -399,6 +402,8 @@ private object FilterConditions {
   * `CAST(transformer(col) AS originalType) AS col` with a fresh exprId,
   * other columns pass through. MASK_NULL -> typed null, MASK_NONE ->
   * passthrough (the reference would NPE on these, DataMaskVisitor.java:97-98).
+  * Each masked scan appends one DATA_MASK decision (its matched columns and
+  * mask types, in output order) to [[decisions]].
   */
 final case class DataMaskRule(
     spark: SparkSession,
@@ -412,23 +417,16 @@ final case class DataMaskRule(
       * query's output is masked (the divergence switch of SURVEY §7.3).
       */
     filterOnRaw: Boolean = false,
-    /** Collect identity-only access decisions into [[identityAudit]]. Off by
-      * default so a rule instance that is kept and never drained does not
-      * accumulate.
+    /** Also record identity-only scans in [[decisions]]: every matched
+      * policy MASK_NONE (or a CUSTOM passthrough), so no Project is built,
+      * yet a matched policy is still an access decision a Ranger-style
+      * trail records. [[Enforcement]] sets it.
       */
     auditIdentity: Boolean = false
 ) extends Rule[LogicalPlan] {
 
-  /** Side channel for identity-only access decisions: when every matched
-    * mask policy on a scan is MASK_NONE (or a CUSTOM passthrough), no
-    * Project is built, so there is no plan node to carry the audit tag —
-    * but a matched policy is still an access decision a Ranger-style trail
-    * must record. Auditing callers ([[graft.SecurityContext]]) drain this
-    * after applying the rule. One `cat.db.table|col=TYPE,...` crumb per
-    * identity-only scan, in visit order; per-rewrite instance, not
-    * thread-shared.
-    */
-  val identityAudit = scala.collection.mutable.ArrayBuffer.empty[String]
+  /** The decisions this instance made, in walk order. */
+  val decisions = scala.collection.mutable.ArrayBuffer.empty[AccessDecision]
 
   /** Resolve a parsed transformer template against the scan's output. The
     * mask family's builders insert their own input casts, so the result is
@@ -461,11 +459,9 @@ final case class DataMaskRule(
   private def maskedProject(base: LogicalPlan, cat: String, db: String,
       table: String): Option[(LogicalPlan, Seq[(Attribute, Attribute)])] = {
     val mapping = Seq.newBuilder[(Attribute, Attribute)]
-    // audit trail of applied policy decisions, in output-column order
-    // (MASK_NONE passthroughs are recorded too — a matched policy is an
-    // access decision even when the transformation is identity; when NO
-    // real mask builds a Project to tag, the decisions go out through the
-    // identityAudit side channel instead)
+    // the matched policies, in output-column order (MASK_NONE passthroughs
+    // too — a matched policy is an access decision even when the
+    // transformation is identity)
     val audited = Seq.newBuilder[String]
     var any = false
     val tz = spark.sessionState.conf.sessionLocalTimeZone
@@ -518,17 +514,14 @@ final case class DataMaskRule(
         case None => attr
       }
     }
-    if (!any) {
-      val ids = audited.result()
-      if (auditIdentity && ids.nonEmpty)
-        identityAudit += s"$cat.$db.$table|${ids.mkString(",")}"
-      None
-    } else {
+    val matched = audited.result()
+    if (any || (auditIdentity && matched.nonEmpty))
+      decisions += AccessDecision("DATA_MASK", s"$cat.$db.$table", matched.mkString(","))
+    if (!any) None
+    else {
       val p = Project(cols, base)
       p.setTagValue(SecurityTags.MaskApplied, true)
       p.setTagValue(SecurityTags.Principal, user)
-      p.setTagValue(SecurityTags.MaskAudit,
-        s"$cat.$db.$table|${audited.result().mkString(",")}")
       Some((p, mapping.result()))
     }
   }
@@ -589,8 +582,8 @@ final case class DataMaskRule(
   * masks in the reference order or over raw filter values, and rebuilds the
   * command around the result. The modes differ only in where the
   * principal, the policy view and the scope come from. Returns the
-  * rewritten plan and the identity-only mask decisions
-  * ([[DataMaskRule.identityAudit]]).
+  * rewritten plan and the decisions made: the row filters' (and denies')
+  * first, then the masks', each in the rules' walk order.
   */
 object Enforcement {
   import org.apache.spark.sql.execution.command.{CreateDataSourceTableAsSelectCommand, InsertIntoDataSourceDirCommand}
@@ -617,7 +610,7 @@ object Enforcement {
 
   def apply(spark: SparkSession, user: String, policies: PolicyView,
       scope: TableScope, plan: LogicalPlan, rowFilters: Boolean = true,
-      masks: Boolean = true, filterOnRaw: Boolean = false): (LogicalPlan, Seq[String]) = {
+      masks: Boolean = true, filterOnRaw: Boolean = false): (LogicalPlan, Seq[AccessDecision]) = {
     val outer = active.get
     active.set(true)
     try {
@@ -625,11 +618,12 @@ object Enforcement {
       failClosed(user, policies, scope, query, rowFilters, masks)
       val denied = ColumnDenyCheck.violations(query, user, policies, scope)
       if (denied.nonEmpty) throw graft.ColumnAccessDeniedException(user, denied, "the query")
-      val filtered = RowFilterRule(spark, user, policies, scope, denyOnly = !rowFilters)(query)
-      if (!masks) (rebuild(filtered), Nil)
+      val rows = RowFilterRule(spark, user, policies, scope, denyOnly = !rowFilters)
+      val filtered = rows(query)
+      if (!masks) (rebuild(filtered), rows.decisions.toSeq)
       else {
-        val rule = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
-        (rebuild(rule(filtered)), rule.identityAudit.toSeq)
+        val mask = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
+        (rebuild(mask(filtered)), (rows.decisions ++ mask.decisions).toSeq)
       }
     } finally active.set(outer)
   }
@@ -648,24 +642,31 @@ object Enforcement {
     if (reused.isDefined) throw new UnsupportedOperationException(
       s"the query reuses a plan enforced for another principal; user '$user' " +
         "must run it afresh — refusing to execute it under that principal's policies")
-    def policied(c: String, d: String, t: String): Boolean =
-      policies.isDenied(user, c, d, t) ||
-        (rowFilters && policies.rowFilterConditions(user, c, d, t).nonEmpty) ||
-        (masks && policies.hasDataMask(user, c, d, t)) ||
-        policies.deniedColumns(user, c, d, t).nonEmpty
     if (query.children.isEmpty) {
-      val tables = query.innerChildren.collect { case p: LogicalPlan => p }
-        .flatMap(_.collectWithSubqueries {
-          case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
-            PlanShapes.tableParts(id.qualifier :+ id.name, scope)
-        })
-        .filter((policied _).tupled)
+      val tables = policiedTables(user, policies, scope,
+        query.innerChildren.collect { case p: LogicalPlan => p }, rowFilters, masks)
       if (tables.nonEmpty) throw new UnsupportedOperationException(
         s"${query.nodeName} embeds a query over policied table(s) " +
-          s"${tables.map(_._3).distinct.mkString(", ")} that the security " +
+          s"${tables.mkString(", ")} that the security " +
           "rules cannot rewrite — refusing to execute it unenforced")
     }
   }
+
+  /** The names of the base tables `plans` read (view bodies and subquery
+    * plans included) that have anything to enforce for `user`.
+    */
+  private[plans] def policiedTables(user: String, policies: PolicyView,
+      scope: TableScope, plans: Seq[LogicalPlan], rowFilters: Boolean = true,
+      masks: Boolean = true): Seq[String] =
+    plans.flatMap(_.collectWithSubqueries {
+      case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
+        PlanShapes.tableParts(id.qualifier :+ id.name, scope)
+    }).collect {
+      case (c, d, t) if policies.isDenied(user, c, d, t) ||
+        (rowFilters && policies.rowFilterConditions(user, c, d, t).nonEmpty) ||
+        (masks && policies.hasDataMask(user, c, d, t)) ||
+        policies.deniedColumns(user, c, d, t).nonEmpty => t
+    }.distinct
 }
 
 /** Security rewrite for ROW-LEVEL DML — MERGE INTO / UPDATE / DELETE
@@ -689,11 +690,13 @@ object Enforcement {
   *     duplicate rather than protect.) Inserted values are not gated by the
   *     target's row filter, matching the reference's INSERT handling.
   *   - DENY on the target: the statement fails closed before planning.
-  *   - ROW FILTER / MASK / COLUMN DENY on the SOURCE (MERGE): the source
-  *     subtree is a read like any other and goes through [[Enforcement]],
-  *     so a policied source feeds only visible rows and masked values into
-  *     the merge, and a source subquery reading a denied column fails
-  *     closed.
+  *   - ROW FILTER / MASK / COLUMN DENY on the SOURCE (MERGE) and in the
+  *     statement's SUBQUERIES (`WHERE k IN (SELECT ...)`, a scalar
+  *     subquery in SET): each is a read like any other and goes through
+  *     [[Enforcement]], so it feeds only visible rows and masked values
+  *     into the statement, and one reading a denied column fails closed. A
+  *     correlated subquery cannot be analyzed on its own; it fails closed
+  *     when it reads a table with any policy for the user.
   *   - COLUMN DENY: any reference to a denied column of the target (or of
   *     a source base table) in the statement's expressions fails closed.
   *     References are collected pre-resolution, so a BARE name that could
@@ -720,13 +723,14 @@ final case class DmlSecurityRewrite(
     scope: TableScope
 ) {
 
+  import org.apache.spark.sql.AnalysisException
   import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 
-  /** Audit crumbs (action, "cat.db.table|detail") for decisions that have
-    * no plan node to tag (the target-side constraint rewrites CONDITIONS,
-    * not plans). Drained by [[graft.SecurityContext]] after the rewrite.
+  /** The statement's decisions, in the order made: the target constraint,
+    * then the source's and each subquery's ([[Enforcement]]). A denial
+    * carries its own decision on the exception it throws.
     */
-  val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  val decisions = scala.collection.mutable.ArrayBuffer.empty[AccessDecision]
 
   /** (cat, db, table, reference qualifier) of a parsed named table: the
     * qualifier is the alias if the table is aliased, the table name
@@ -756,17 +760,17 @@ final case class DmlSecurityRewrite(
     */
   private def targetConstraint(cat: String, db: String, table: String,
       qualifier: String): Option[Expression] = {
-    if (policies.isDenied(user, cat, db, table)) {
-      dmlAudit += "ROW_DENY" -> s"$cat.$db.$table|DENY"
+    if (policies.isDenied(user, cat, db, table))
       throw new graft.ColumnAccessDeniedException(
         s"user '$user' is denied rows of $cat.$db.$table — row-level DML " +
-          "against a denied table fails closed")
-    }
+          "against a denied table fails closed",
+        Seq(AccessDecision("ROW_DENY", s"$cat.$db.$table", "DENY")))
     val conds = policies.rowFilterConditions(user, cat, db, table)
     if (conds.isEmpty) None
     else {
       val cond = FilterConditions.parse(spark, user, cat, db, table, conds)
-      dmlAudit += "ROW_FILTER" -> s"$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
+      decisions += AccessDecision("ROW_FILTER", s"$cat.$db.$table",
+        s"${conds.mkString(" AND ")} (DML target constraint)")
       Some(qualify(qualifier, cond))
     }
   }
@@ -806,25 +810,49 @@ final case class DmlSecurityRewrite(
     }
     val violations = (target +: sources).flatMap { case (c, d, t, q) =>
       val h = hits(c, d, t, q)
-      if (h.isEmpty) Nil else Seq(s"$c.$d.$t" -> h)
+      if (h.isEmpty) Nil else Seq(AccessDecision("COLUMN_DENY", s"$c.$d.$t", h.mkString(",")))
     }
     if (violations.nonEmpty)
       throw graft.ColumnAccessDeniedException(user, violations, "the DML statement")
   }
 
-  /** Source subtree through the read path, [[Enforcement]]: analyze it
-    * standalone, then the column-deny gate, row filters and masks (all emit
-    * resolved nodes), and splice it back. The surrounding (still-parsed)
-    * statement resolves around the already-analyzed subtree. Identity-only
-    * mask decisions go into [[dmlAudit]]; a denial throws out, as the
+  /** A read of the statement (the MERGE source, a subquery), analyzed
+    * standalone, through the read path, [[Enforcement]]: the column-deny
+    * gate, row filters and masks (all emit resolved nodes). The surrounding
+    * (still-parsed) statement resolves around the returned subtree. Its
+    * decisions go into [[decisions]]; a denial throws out, as the
     * statement's own column denials do.
     */
-  private def secureSource(plan: LogicalPlan): LogicalPlan = {
-    val (secured, identityMasks) = Enforcement(spark, user, policies, scope,
-      spark.sessionState.executePlan(plan).analyzed)
-    dmlAudit ++= identityMasks.map("DATA_MASK" -> _)
+  private def enforced(analyzed: LogicalPlan): LogicalPlan = {
+    val (secured, made) = Enforcement(spark, user, policies, scope, analyzed)
+    decisions ++= made
     secured
   }
+
+  /** `statement` with every subquery plan in its own expressions read
+    * through [[Enforcement]]. A subquery that does not analyze on its own
+    * (a correlated one) is left to the statement's analysis when it reads
+    * no policied table, and fails closed when it does: its tables are
+    * resolved one by one, views expanded. Callers add the target constraint
+    * afterwards, so a policy condition keeps definer rights.
+    */
+  private def secureSubqueries[P <: LogicalPlan](statement: P): P =
+    statement.transformExpressions {
+      case s: SubqueryExpression => analyzedAlone(s.plan) match {
+        case Some(analyzed) => s.withNewPlan(enforced(analyzed))
+        case None =>
+          val tables = Enforcement.policiedTables(user, policies, scope,
+            s.plan.collectWithSubqueries { case r: UnresolvedRelation => r }.flatMap(analyzedAlone))
+          if (tables.nonEmpty) throw new UnsupportedOperationException(
+            "a correlated subquery of the DML statement reads policied table(s) " +
+              s"${tables.mkString(", ")} — refusing to execute it unenforced")
+          s
+      }
+    }.asInstanceOf[P]
+
+  private def analyzedAlone(plan: LogicalPlan): Option[LogicalPlan] =
+    try Some(spark.sessionState.executePlan(plan).analyzed)
+    catch { case _: AnalysisException => None }
 
   /** Rewrite one parsed row-level DML statement. Returns the modified
     * parsed plan (caller analyzes + executes).
@@ -841,28 +869,25 @@ final case class DmlSecurityRewrite(
               case i: InsertAction => i.assignments.flatMap(x => Seq(x.key, x.value))
               case _ => Nil
             })))
-      val constrained = targetConstraint(cat, db, table, qualifier) match {
-        case Some(f) => m.copy(
-          matchedActions = constrain(m.matchedActions, f),
-          notMatchedBySourceActions = constrain(m.notMatchedBySourceActions, f))
-        case None => m
-      }
-      constrained.copy(sourceTable = secureSource(m.sourceTable))
+      val constraint = targetConstraint(cat, db, table, qualifier)
+      val source = enforced(spark.sessionState.executePlan(m.sourceTable).analyzed)
+      val secured = secureSubqueries(m.copy(sourceTable = source))
+      constraint.fold(secured)(f => secured.copy(
+        matchedActions = constrain(secured.matchedActions, f),
+        notMatchedBySourceActions = constrain(secured.notMatchedBySourceActions, f)))
     case u: UpdateTable =>
       val target @ (cat, db, table, qualifier) = targetOf(u.table)
       enforceColumnDeny(target, Nil,
         u.condition.toSeq ++ u.assignments.flatMap(a => Seq(a.key, a.value)))
-      targetConstraint(cat, db, table, qualifier) match {
-        case Some(f) => u.copy(condition = and(u.condition, f))
-        case None => u
-      }
+      val constraint = targetConstraint(cat, db, table, qualifier)
+      val secured = secureSubqueries(u)
+      constraint.fold(secured)(f => secured.copy(condition = and(secured.condition, f)))
     case d: DeleteFromTable =>
       val target @ (cat, db, table, qualifier) = targetOf(d.table)
       enforceColumnDeny(target, Nil, Seq(d.condition))
-      targetConstraint(cat, db, table, qualifier) match {
-        case Some(f) => d.copy(condition = And(d.condition, f))
-        case None => d
-      }
+      val constraint = targetConstraint(cat, db, table, qualifier)
+      val secured = secureSubqueries(d)
+      constraint.fold(secured)(f => secured.copy(condition = And(secured.condition, f)))
     case other => throw new UnsupportedOperationException(
       s"not a row-level DML statement: ${other.nodeName} " +
         "(use the query rewrite entry points for reads, execute() for DDL/INSERT)")

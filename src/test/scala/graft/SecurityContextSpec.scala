@@ -657,6 +657,29 @@ class SecurityContextSpec extends SparkFunSuite {
     assert(byAction.contains(("DATA_MASK", "customer_name=MASK_NONE,region=MASK_HASH")))
   }
 
+  test("audit trail order: row filters before masks, subquery plans first, then the query bottom-up") {
+    ctx
+    val c = new SecurityContext(spark, defaultCatalog = CAT, defaultDatabase = DB)
+    val pm = c.policyManager
+    pm.addPolicy(RowFilterPolicy("user_A", CAT, DB, "orders", "region = 'beijing'"))
+    pm.addPolicy(DataMaskPolicy("user_A", CAT, DB, "orders", "customer_name", "MASK"))
+    pm.addPolicy(RowFilterPolicy("user_A", CAT, DB, "products", "name = 'hammer'"))
+    pm.addPolicy(DataMaskPolicy("user_A", CAT, DB, "products", "name", "MASK_SHOW_LAST_4"))
+    pm.addPolicy(RowFilterPolicy("user_A", CAT, DB, "shipments", "is_arrived = FALSE"))
+    val sql = "SELECT o.order_id, o.customer_name, p.name FROM orders o " +
+      "JOIN products p ON o.product_id = p.id " +
+      "WHERE o.order_id IN (SELECT order_id FROM shipments)"
+    c.dfMixed("user_A", sql)
+    val got = c.auditLog.collect().map(r => (r.getLong(0), r.getString(2), r.getString(3)))
+    assert(got.toSeq == Seq(
+      (0L, "QUERY", "mixed"),
+      (1L, "ROW_FILTER", "hive.default.shipments"),
+      (2L, "ROW_FILTER", "hive.default.orders"),
+      (3L, "ROW_FILTER", "hive.default.products"),
+      (4L, "DATA_MASK", "hive.default.orders"),
+      (5L, "DATA_MASK", "hive.default.products")))
+  }
+
   test("concurrent rewrites through one context keep the audit seq dense and unique") {
     ctx
     val c = new SecurityContext(spark, defaultCatalog = CAT, defaultDatabase = DB)

@@ -160,6 +160,84 @@ class SecurityDmlSpec extends SparkFunSuite {
       a == "ROW_FILTER" && o == "graft_mem.default.dml_free" })
   }
 
+  /** Fresh unpolicied target `name` and source `name_s`, both seeded with
+    * the four rows of [[freshTarget]]; returns a context with no policies.
+    */
+  private def freshPair(name: String): SecurityContext = {
+    Seq(name, s"${name}_s").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_mem.default.$t")
+      spark.sql(s"CREATE TABLE graft_mem.default.$t (k BIGINT, seg STRING, bal BIGINT)")
+      spark.sql(s"INSERT INTO graft_mem.default.$t VALUES " +
+        "(1,'A',10),(2,'B',20),(3,'A',30),(4,'B',40)")
+    }
+    new SecurityContext(spark)
+  }
+
+  private def actions(c: SecurityContext): Seq[(String, String)] =
+    c.auditLog.collect().toSeq.map(r => (r.getString(2), r.getString(3)))
+
+  test("a DELETE condition subquery reading a denied column fails closed") {
+    val c = freshPair("dq_cd")
+    c.policyManager.addPolicy(ColumnDenyPolicy(USER, "graft_mem", "default", "dq_cd_s", "bal"))
+    intercept[ColumnAccessDeniedException] {
+      c.executeDml(USER, "DELETE FROM graft_mem.default.dq_cd " +
+        "WHERE k IN (SELECT k FROM graft_mem.default.dq_cd_s WHERE bal > 25)")
+    }
+    assert(rowsOf("dq_cd").map(_._1) == Seq(1L, 2L, 3L, 4L)) // nothing deleted
+    assert(actions(c) == Seq(("QUERY", "dml"), ("COLUMN_DENY", "graft_mem.default.dq_cd_s")))
+  }
+
+  test("a DELETE condition subquery sees only the rows of its table's row filter") {
+    val c = freshPair("dq_rf")
+    c.policyManager.addPolicy(RowFilterPolicy(USER, "graft_mem", "default", "dq_rf_s", "seg = 'A'"))
+    c.executeDml(USER, "DELETE FROM graft_mem.default.dq_rf " +
+      "WHERE k IN (SELECT k FROM graft_mem.default.dq_rf_s)")
+    assert(rowsOf("dq_rf").map(_._1) == Seq(2L, 4L)) // only the visible k = 1, 3
+    assert(c.auditLog.collect().toSeq.map(r => (r.getString(2), r.getString(3), r.getString(4))) ==
+      Seq(("QUERY", "dml", "DELETE FROM graft_mem.default.dq_rf " +
+        "WHERE k IN (SELECT k FROM graft_mem.default.dq_rf_s)"),
+        ("ROW_FILTER", "graft_mem.default.dq_rf_s", "seg = 'A'")))
+  }
+
+  test("an UPDATE condition subquery over a row-denied table touches nothing") {
+    val c = freshPair("dq_rd")
+    c.policyManager.addPolicy(DenyRowPolicy(USER, "graft_mem", "default", "dq_rd_s"))
+    c.executeDml(USER, "UPDATE graft_mem.default.dq_rd SET bal = 0 " +
+      "WHERE k IN (SELECT k FROM graft_mem.default.dq_rd_s)")
+    assert(rowsOf("dq_rd").map(_._3) == Seq(10L, 20L, 30L, 40L))
+    assert(actions(c) == Seq(("QUERY", "dml"), ("ROW_DENY", "graft_mem.default.dq_rd_s")))
+  }
+
+  test("a correlated DML subquery fails closed over a policied table and runs over an unpolicied one") {
+    val c = freshPair("dq_co")
+    c.policyManager.addPolicy(RowFilterPolicy(USER, "graft_mem", "default", "dq_co_s", "seg = 'A'"))
+    val sql = "DELETE FROM graft_mem.default.dq_co t WHERE EXISTS " +
+      "(SELECT 1 FROM graft_mem.default.dq_co_s s WHERE s.k = t.k AND s.bal > 25)"
+    intercept[UnsupportedOperationException](c.executeDml(USER, sql))
+    assert(rowsOf("dq_co").map(_._1) == Seq(1L, 2L, 3L, 4L))
+    c.executeDml("admin", sql)
+    assert(rowsOf("dq_co").map(_._1) == Seq(1L, 2L))
+  }
+
+  test("a MERGE source self-joining a row-filtered table audits one ROW_FILTER per scan, as the read does") {
+    val c = freshPair("dq_sj")
+    c.policyManager.addPolicy(RowFilterPolicy(USER, "graft_mem", "default", "dq_sj_s", "seg = 'A'"))
+    val source = "SELECT a.k, a.seg, b.bal FROM graft_mem.default.dq_sj_s a " +
+      "JOIN graft_mem.default.dq_sj_s b ON a.k = b.k"
+    def filters(): Int = {
+      val n = actions(c).count(_ == ("ROW_FILTER", "graft_mem.default.dq_sj_s"))
+      c.clearAudit()
+      n
+    }
+    c.dfRowFilter(USER, source)
+    assert(filters() == 2)
+    c.executeDml(USER,
+      s"""MERGE INTO graft_mem.default.dq_sj AS t USING ($source) AS s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET bal = s.bal + 1""".stripMargin)
+    assert(filters() == 2)
+    assert(rowsOf("dq_sj").map(_._3) == Seq(11L, 20L, 31L, 40L))
+  }
+
   test("rewriteDml rejects a non-DML statement") {
     val c = freshTarget("dml_rej")
     intercept[UnsupportedOperationException] {
