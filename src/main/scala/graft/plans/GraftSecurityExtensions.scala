@@ -6,6 +6,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.AnalysisContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.command.{ResetCommand, SetCommand}
 
 /** Auto-enforcing mode (SURVEY §7.8): inject the security rules into the
   * analyzer so every query — including raw `spark.sql` — is policy-checked
@@ -27,10 +28,22 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * are already write commands whose query [[Enforcement.unwrap]] reaches;
   * nested analyses defer to the outermost. An unset/empty `spark.graft.user`
   * disables enforcement (internal queries, admin sessions).
+  *
+  * The principal is bound by the embedding application, never by SQL text
+  * (Lakeguard's session-bound identity). While a principal is set, one
+  * check rule refuses SQL that assigns or resets `spark.graft.user`,
+  * `spark.graft.catalog` or `spark.graft.database` (`SET key=value`,
+  * `RESET key`, a bare `RESET`) before it runs; `SET key` still reads a
+  * value. The application changes them through the `spark.conf` API. The
+  * two scope keys stay keys rather than being derived from the session's
+  * current catalog and namespace: they qualify a bare temp-view name for
+  * policy lookup, and a `USE` in SQL text must not move that scope.
   */
 class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPostHocResolutionRule(new GraftSecurityExtensions.Enforce(_))
+    e.injectCheckRule(s => GraftSecurityExtensions.bindPrincipal(s, _))
+  }
 }
 
 object GraftSecurityExtensions {
@@ -57,6 +70,23 @@ object GraftSecurityExtensions {
       case _ => plan
     }
   }
+
+  private val BoundKeys = Set(UserKey, CatalogKey, DatabaseKey)
+
+  /** The extension's one check rule: while a principal is set, a statement
+    * may not assign or reset the principal or scope keys.
+    */
+  private def bindPrincipal(session: SparkSession, plan: LogicalPlan): Unit =
+    if (currentUser(session).isDefined) plan match {
+      case SetCommand(Some((key, Some(_)))) if BoundKeys(key) => refuse(s"SET $key")
+      case ResetCommand(Some(key)) if BoundKeys(key) => refuse(s"RESET $key")
+      case ResetCommand(None) => refuse("RESET")
+      case _ =>
+    }
+
+  private def refuse(what: String): Nothing = throw new SecurityException(
+    s"$what is refused while $UserKey is set: the principal and its scope " +
+      "are set by the application, not by SQL")
 
   private def nested: Boolean = Enforcement.running ||
     AnalysisContext.get.nestedViewDepth > 0 || AnalysisContext.get.outerPlan.isDefined

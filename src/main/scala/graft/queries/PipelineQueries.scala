@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.operators.{AsofJoin, Boilerplate, ChangeLog, Clustering, Contamination, Dedup, LanguageModel, Multimodal, Packing, QualityModel, RangeJoin, Retrieval, Sampling, Sessionize, Similarity, SkewJoin, Snapshot, TextAnalysis, Vocab}
-import graft.streaming.StreamOps
+import graft.streaming.{StreamFixture, StreamOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,68 +29,6 @@ object PipelineQueries {
   }
   private def embs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "embeddings")
 
-  /** Write `slices` as one-file-per-micro-batch fixtures into `streamDir`
-    * (lexical names + descending-age mtimes pin arrival order), submitting
-    * the slice writes CONCURRENTLY — independent jobs on the shared
-    * scheduler; the fixture prep is ~10% of a streaming query's wall time
-    * and the single-file writes serialize poorly otherwise. Each writer
-    * captures its Throwable and the first one rethrows AFTER all joins, so
-    * a failed slice write fails HERE, at the write site, instead of as a
-    * downstream 1-file-stream mystery.
-    */
-  private def writeSliceFixtures(tmpRoot: java.io.File, streamDir: java.io.File,
-      slices: Seq[DataFrame]): Unit = {
-    if (slices.isEmpty) return
-    val now = System.currentTimeMillis()
-    // threading delegated to the shared SparkUtil.concurrently (join-all,
-    // first failure rethrown with the rest suppressed) — one copy of the
-    // fork/queue/join logic to keep correct, not two
-    graft.SparkUtil.concurrently(slices.head.sparkSession,
-      slices.zipWithIndex.map { case (sl, i) =>
-        s"fixture slice $i" -> (() => {
-          val part = new java.io.File(tmpRoot, s"part$i")
-          sl.coalesce(1).write.mode("overwrite").parquet(part.getPath)
-          val f = part.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(streamDir, s"b$i.parquet")
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(now - (slices.size - i) * 60000L)
-          ()
-        })
-      })
-  }
-
-  /** Move a staged batch file from the side dir into the live stream dir —
-    * the phased-arrival half of the restart gates: files are all written up
-    * front (ascending mtimes, [[writeSliceFixtures]]) but become visible to
-    * the file source only when a phase moves them in.
-    */
-  private def moveIn(side: java.io.File, streamDir: java.io.File,
-      name: String): Unit = {
-    java.nio.file.Files.move(new java.io.File(side, name).toPath,
-      new java.io.File(streamDir, name).toPath)
-    ()
-  }
-
-  /** Simulate the crash window Spark replays for: the newest micro-batch ran
-    * to COMPLETION (every side effect landed) but the engine died before
-    * recording its commit — delete the newest `commits/` entry (and its
-    * local-FS checksum sibling), so a restarted query re-executes that
-    * batchId over the same offsets-logged input. This is the documented
-    * recovery contract (offsets written before the batch, commits after),
-    * not an internals hack: any kill between those two writes leaves
-    * exactly this checkpoint state.
-    */
-  private[graft] def dropLatestCommit(ckpt: java.io.File): Unit = {
-    val commits = new java.io.File(ckpt, "commits")
-    val entries = Option(commits.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.nonEmpty && f.getName.forall(_.isDigit))
-    require(entries.nonEmpty, s"no commit entries under $commits")
-    val latest = entries.maxBy(_.getName.toLong)
-    val crc = new java.io.File(commits, s".${latest.getName}.crc")
-    if (crc.exists) { crc.delete(); () }
-    require(latest.delete(), s"could not delete $latest")
-  }
-
   /** Deterministic two-phase Debezium log with a MID-LOG DDL, for the
     * schema-evolution gates: segment 0 bootstraps the prev snapshot (all
     * inserts, old schema `(doc_id, lang, chars)`), segment 1 carries the
@@ -100,9 +38,11 @@ object PipelineQueries {
     * mid->next changes in the widened schema, each event's envelope
     * declaring its field list. Every snapshot is a closed-form filter over
     * `documents`, so a DuckDB oracle can restate the final state exactly.
-    * Returns (log directory, widened row schema).
+    * Writes the log under `root`; returns (log directory, widened row
+    * schema).
     */
-  private[graft] def schemaEvolveLog(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  private def schemaEvolveLog(s: SparkSession, dir: String,
+      root: java.io.File): (String, org.apache.spark.sql.types.StructType) = {
     val base = docs(s, dir).select(col("doc_id"), col("lang"),
       length(col("text")).as("chars"))
     def d = col("doc_id")
@@ -124,7 +64,7 @@ object PipelineQueries {
       "doc_id", Seq("lang", "chars")), oldCols = Seq("lang", "chars"),
       ch2 = ChangeLog.fromSnapshotsFull(midW, next, "doc_id",
         Seq("lang", "chars", "words")), newCols = Seq("lang", "chars", "words"),
-      prefix = "graft_ivme", widest = midW.schema)
+      root = root, widest = midW.schema)
   }
 
   /** [[schemaEvolveLog]]'s INVERSE: the row schema LOSES `words` mid-log
@@ -136,7 +76,8 @@ object PipelineQueries {
     * `n_rows`/`sum_chars` exact end-to-end. Snapshots are closed-form
     * filters over `documents` for the DuckDB oracle.
     */
-  private def schemaDropLog(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  private def schemaDropLog(s: SparkSession, dir: String,
+      root: java.io.File): (String, org.apache.spark.sql.types.StructType) = {
     val base = docs(s, dir).select(col("doc_id"), col("lang"),
       length(col("text")).as("chars"))
     def d = col("doc_id")
@@ -162,17 +103,18 @@ object PipelineQueries {
       oldCols = Seq("lang", "chars", "words"),
       ch2 = ChangeLog.fromSnapshotsFull(midN, nextN, "doc_id",
         Seq("lang", "chars")), newCols = Seq("lang", "chars"),
-      prefix = "graft_ivmdr", widest = prevW.schema)
+      root = root, widest = prevW.schema)
   }
 
   /** Shared transport builder for the two schema-evolution logs: bootstrap
     * segment 0, phase-1 changes segment 1 (both `oldCols`), phase-2 changes
     * segments 2-3 (`newCols`), each event's envelope declaring its field
-    * list; returns (log dir, the consumer's widest row schema).
+    * list, written under `root`; returns (log dir, the consumer's widest
+    * row schema).
     */
   private def buildEvolveSegments(boot: DataFrame, ch1: DataFrame,
       oldCols: Seq[String], ch2: DataFrame, newCols: Seq[String],
-      prefix: String, widest: org.apache.spark.sql.types.StructType): (String, org.apache.spark.sql.types.StructType) = {
+      root: java.io.File, widest: org.apache.spark.sql.types.StructType): (String, org.apache.spark.sql.types.StructType) = {
     def d = col("doc_id")
     val ev0 = graft.sources.KafkaShapedLog.encodeDebezium(boot, "doc_id",
       oldCols, db = "graft", table = "documents")
@@ -184,8 +126,7 @@ object PipelineQueries {
     val ev2 = graft.sources.KafkaShapedLog.encodeDebezium(ch2, "doc_id",
       newCols, db = "graft", table = "documents")
       .localCheckpoint(eager = true)
-    val tmpRoot = java.nio.file.Files.createTempDirectory(prefix).toFile
-    val logDir = new java.io.File(tmpRoot, "log")
+    val logDir = new java.io.File(root, "log")
     try appendSegmentsConcurrently(boot.sparkSession, logDir,
       topic = "graft.documents", keyCol = "doc_id",
       orderCols = Seq("doc_id", "op"),
@@ -314,34 +255,26 @@ object PipelineQueries {
       graft.operators.Contamination.buildBloom(bench, "text", n = 5, fpp = 0.001)
     })
 
-  /** Staged (b0, b1) slice files of the curate pair's planted corpus —
-    * byte-identical inputs for stream_curate and stream_curate_restart, so
-    * they are staged ONCE per dir and file-copied into each query's own
-    * stream/side dir (a filesystem copy, vs re-running the two
+  /** Staged (originals, clones) slices of the curate pair's planted corpus
+    * — byte-identical inputs for stream_curate and stream_curate_restart,
+    * so they are staged ONCE per dir and file-copied into each query's own
+    * fixture ([[StreamFixture.stageCopies]], vs re-running the two
     * corpus-sized slice writes per query). The staged originals are never
     * moved or mutated.
     */
   private val curateSliceCache =
-    scala.collection.concurrent.TrieMap.empty[String, (java.io.File, java.io.File)]
-  private def curateSlices(s: SparkSession, dir: String): (java.io.File, java.io.File) =
+    scala.collection.concurrent.TrieMap.empty[String, StreamFixture]
+  private def curateSlices(s: SparkSession, dir: String): StreamFixture =
     curateSliceCache.getOrElseUpdate(dir, {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val corpus = d.filter(col("doc_id") % 17 =!= 0)
       val base = corpus.unionAll(corpus.select(
         (col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" graftfuzz")).as("text")))
-      val root = java.nio.file.Files.createTempDirectory("graft_curate_slices").toFile
-      val staged = new java.io.File(root, "staged"); staged.mkdirs()
-      writeSliceFixtures(root, staged, Seq(
+      StreamFixture.untilExit("graft_curate_slices").stage(Seq(
         base.filter(col("doc_id") < 1000000),
         base.filter(col("doc_id") >= 1000000)))
-      (new java.io.File(staged, "b0.parquet"), new java.io.File(staged, "b1.parquet"))
     })
-  private def copySlice(src: java.io.File, dstDir: java.io.File, mtime: Long): Unit = {
-    val dst = new java.io.File(dstDir, src.getName)
-    java.nio.file.Files.copy(src.toPath, dst.toPath)
-    dst.setLastModified(mtime); ()
-  }
 
   /** Per-prefix truncated-code IVF index for the MRL pair, built once per
     * (dir, prefix) — ann_ivf_mrl_recall and its _check probe the SAME
@@ -1563,24 +1496,17 @@ object PipelineQueries {
     // the full-corpus ad-hoc BM25 — i.e. three stats-delta appends sum to
     // exactly what one batch append (text_bm25_incr) or a monolithic
     // build would produce. Same oracle as the ad-hoc path.
-    "stream_bm25_ingest" -> ((s, dir) => {
+    "stream_bm25_ingest" -> ((s, dir) => StreamFixture.within("graft_bm25s") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       Retrieval.bm25WriteBucketed(d.filter(col("doc_id") % 3 =!= 0),
         "graft_bm25_stream", "doc_id", "text")
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_bm25s").toFile
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
       val rest = d.filter(col("doc_id") % 3 === 0)
-      // same slice set/names/mtime order as the old inline loop, but the
-      // three single-file writes submit CONCURRENTLY (guide §2.6) — they
-      // ran back-to-back before, ~0.3-0.6 s apiece of mostly commit latency
-      writeSliceFixtures(tmpRoot, streamDir,
-        Seq(0, 3, 6).map(res => rest.filter(col("doc_id") % 9 === res)))
+      fx.stage(Seq(0, 3, 6).map(res => rest.filter(col("doc_id") % 9 === res)))
+        .arriveAll()
       // per-batch append jobs sized to the batch (the stream's session
       // clone snapshots the conf at start)
       graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(rest.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingBm25Ingest(stream, "graft_bm25_stream",
+        val q = StreamOps.streamingBm25Ingest(fx.stream(s), "graft_bm25_stream",
           "doc_id", "text")
         try q.processAllAvailable() finally q.stop()
       }
@@ -1599,27 +1525,20 @@ object PipelineQueries {
     // postings — spec-pinned in StreamingRestartSpec). Probes over the
     // final index must score identically to a from-scratch build: same
     // oracle as stream_bm25_ingest.
-    "stream_bm25_restart" -> ((s, dir) => {
+    "stream_bm25_restart" -> ((s, dir) => StreamFixture.within("graft_bm25r") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       Retrieval.bm25WriteBucketed(d.filter(col("doc_id") % 3 =!= 0),
         "graft_bm25_rst", "doc_id", "text")
       val rest = d.filter(col("doc_id") % 3 === 0)
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_bm25r").toFile
-      val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      val ckpt = new java.io.File(tmpRoot, "ckpt")
-      writeSliceFixtures(tmpRoot, side,
-        Seq(0, 3, 6).map(res => rest.filter(col("doc_id") % 9 === res)))
+      fx.stage(Seq(0, 3, 6).map(res => rest.filter(col("doc_id") % 9 === res)))
       def drain(): Unit = graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(rest.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingBm25Ingest(stream, "graft_bm25_rst",
-          "doc_id", "text", checkpointDir = Some(ckpt.getPath))
+        val q = StreamOps.streamingBm25Ingest(fx.stream(s), "graft_bm25_rst",
+          "doc_id", "text", checkpointDir = Some(fx.ckpt.getPath))
         try q.processAllAvailable() finally q.stop()
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
-      dropLatestCommit(ckpt)
-      moveIn(side, streamDir, "b1.parquet"); moveIn(side, streamDir, "b2.parquet")
+      fx.arrive(1); drain()
+      fx.crash()
+      fx.arrive(2)
       drain() // replay appends nothing (id guard), then batches 1-2 ingest
       val queries = s.createDataFrame(Seq((1, "hash"), (1, "join"),
         (2, "window"), (2, "sort"), (2, "order"), (3, "vector"), (3, "scan")))
@@ -2524,19 +2443,14 @@ object PipelineQueries {
     // coincide with the batch funnel's min-id policy, so the sink must
     // equal the batch keeper set (the pipeline_curate_full oracle, id
     // column only).
-    "stream_curate" -> ((s, dir) => {
+    "stream_curate" -> ((s, dir) => StreamFixture.within("graft_sc") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val bench = d.filter(col("doc_id") % 17 === 0)
       val corpus = d.filter(col("doc_id") % 17 =!= 0)
       val base = corpus.unionAll(corpus.select(
         (col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" graftfuzz")).as("text")))
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_sc").toFile
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      val (b0, b1) = curateSlices(s, dir)
-      val now = System.currentTimeMillis()
-      copySlice(b0, streamDir, now - 120000L)
-      copySlice(b1, streamDir, now - 60000L)
+      fx.stageCopies(curateSlices(s, dir)).arriveAll()
       val tables = Seq("sc_ex_idx", "sc_lsh_idx", "sc_lsh_idx_sets",
         "sc_lsh_idx_meta", "sc_sink")
       // DROP alone is not enough: a crashed earlier run can leave an orphaned
@@ -2560,9 +2474,7 @@ object PipelineQueries {
           "sc_ex_idx", "doc_id", "k", numBuckets = 4)
         Dedup.minhashWriteBucketed(base.limit(0), "sc_lsh_idx", "doc_id",
           "text", numBuckets = 4)
-        val stream = s.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingCurate(stream, "sc_ex_idx", "sc_lsh_idx",
+        val q = StreamOps.streamingCurate(fx.stream(s), "sc_ex_idx", "sc_lsh_idx",
           "doc_id", "text", "sc_sink", bench = Some(bench),
           minWords = 30, minStopHits = 1, maxBucket = Int.MaxValue,
           threshold = 0.9, batchShufflePartitions = Some(8),
@@ -2581,32 +2493,23 @@ object PipelineQueries {
     // then curates the clones against the batch-0 index. The sink must
     // still equal the batch funnel's keeper set: same oracle as
     // stream_curate.
-    "stream_curate_restart" -> ((s, dir) => {
+    "stream_curate_restart" -> ((s, dir) => StreamFixture.within("graft_scr") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val bench = d.filter(col("doc_id") % 17 === 0)
       val corpus = d.filter(col("doc_id") % 17 =!= 0)
       val base = corpus.unionAll(corpus.select(
         (col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" graftfuzz")).as("text")))
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_scr").toFile
-      val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      val ckpt = new java.io.File(tmpRoot, "ckpt")
-      val (sb0, sb1) = curateSlices(s, dir)
-      val now = System.currentTimeMillis()
-      copySlice(sb0, side, now - 120000L)
-      copySlice(sb1, side, now - 60000L)
+      fx.stageCopies(curateSlices(s, dir))
       Seq("scr_ex_idx", "scr_lsh_idx", "scr_lsh_idx_sets",
         "scr_lsh_idx_meta", "scr_sink", "scr_ledger")
         .foreach(graft.sources.Sources.dropForOverwrite(s, _))
       def drain(): Unit = graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingCurate(stream, "scr_ex_idx", "scr_lsh_idx",
+        val q = StreamOps.streamingCurate(fx.stream(s), "scr_ex_idx", "scr_lsh_idx",
           "doc_id", "text", "scr_sink", bench = Some(bench),
           minWords = 30, minStopHits = 1, maxBucket = Int.MaxValue,
           threshold = 0.9, batchShufflePartitions = Some(8),
-          checkpointDir = Some(ckpt.getPath),
+          checkpointDir = Some(fx.ckpt.getPath),
           ledgerTable = Some("scr_ledger"),
           benchBloomBytes = Some(curateBloom(s, dir)))
         try q.processAllAvailable() finally q.stop()
@@ -2617,9 +2520,9 @@ object PipelineQueries {
         Dedup.minhashWriteBucketed(base.limit(0), "scr_lsh_idx", "doc_id",
           "text", numBuckets = 4)
       }
-      moveIn(side, streamDir, "b0.parquet"); drain() // originals commit
-      dropLatestCommit(ckpt)                         // crash after completion
-      moveIn(side, streamDir, "b1.parquet")
+      fx.arrive(1); drain() // originals commit
+      fx.crash()            // crash after completion
+      fx.arrive(1)
       drain() // replay batch 0 (all four appends skipped), then the clones
       s.table("scr_sink").select(col("doc_id")).orderBy(col("doc_id"))
     }),
@@ -2630,7 +2533,7 @@ object PipelineQueries {
     // policy-scoped corpus is what decontaminates, quality-gates and
     // dedups. The oracle splices the predicate into the identical
     // curateFull CTE chain.
-    "sec_stream_curate" -> ((s, dir) => {
+    "sec_stream_curate" -> ((s, dir) => StreamFixture.within("graft_scs") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("text"), col("lang"))
       val bench = d.filter(col("doc_id") % 17 === 0).select("doc_id", "text")
       val corpus = d.filter(col("doc_id") % 17 =!= 0)
@@ -2638,11 +2541,9 @@ object PipelineQueries {
         (col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" graftfuzz")).as("text"), col("lang")))
       // two id-ordered batches (originals, clones) — see stream_curate
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_scs").toFile
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      writeSliceFixtures(tmpRoot, streamDir, Seq(
+      fx.stage(Seq(
         base.filter(col("doc_id") < 1000000),
-        base.filter(col("doc_id") >= 1000000)))
+        base.filter(col("doc_id") >= 1000000))).arriveAll()
       val tables = Seq("scs_ex_idx", "scs_lsh_idx", "scs_lsh_idx_sets",
         "scs_lsh_idx_meta", "scs_sink")
       tables.foreach(graft.sources.Sources.dropForOverwrite(s, _))
@@ -2651,9 +2552,7 @@ object PipelineQueries {
           "scs_ex_idx", "doc_id", "k", numBuckets = 4)
         Dedup.minhashWriteBucketed(base.limit(0), "scs_lsh_idx", "doc_id",
           "text", numBuckets = 4)
-        val stream = s.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        stream.createOrReplaceTempView("documents_stream_sec_q")
+        fx.stream(s).createOrReplaceTempView("documents_stream_sec_q")
         val ctx = new graft.SecurityContext(s)
         ctx.policyManager.addPolicy(graft.policy.RowFilterPolicy(
           "curator", "spark_catalog", "default", "documents_stream_sec_q",
@@ -2790,7 +2689,7 @@ object PipelineQueries {
     // key appears in exactly one batch) against a persisted bucketed state
     // table; after processAllAvailable the state must equal the recompute
     // over snapshot B. Same oracle as the batch path.
-    "stream_cdc_agg_maintain" -> ((s, dir) => {
+    "stream_cdc_agg_maintain" -> ((s, dir) => StreamFixture.within("graft_ivm") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         length(col("text")).as("chars"))
       val prev = d.filter(col("doc_id") % 3 =!= 0)
@@ -2807,17 +2706,11 @@ object PipelineQueries {
       val changes = ChangeLog.fromSnapshotsFull(prev, next, "doc_id",
         Seq("lang", "chars"))
         .localCheckpoint(eager = true)
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivm").toFile
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      // concurrent slice writes (guide §2.6) — same fixture helper the
-      // restart sibling already used; names/mtimes unchanged
-      try writeSliceFixtures(tmpRoot, streamDir,
-        Seq(0, 1, 2).map(res => changes.filter(col("doc_id") % 3 === res)))
+      try fx.stage(Seq(0, 1, 2).map(res => changes.filter(col("doc_id") % 3 === res)))
+        .arriveAll()
       finally org.apache.spark.sql.graft.GraftSqlShims.unpersistCheckpoint(changes)
       graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingAggMaintain(stream, "graft_ivm_state",
+        val q = StreamOps.streamingAggMaintain(fx.stream(s), "graft_ivm_state",
           "op", "lang", Seq("chars"))
         try q.processAllAvailable() finally q.stop()
       }
@@ -2836,7 +2729,7 @@ object PipelineQueries {
     // BatchLedger's whole-batch skip keeps the replay from double-applying
     // — then resume and drain the rest. Final state must equal the same
     // from-scratch recompute as the sibling: same oracle.
-    "stream_cdc_agg_maintain_restart" -> ((s, dir) => {
+    "stream_cdc_agg_maintain_restart" -> ((s, dir) => StreamFixture.within("graft_ivmr") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         length(col("text")).as("chars"))
       val prev = d.filter(col("doc_id") % 3 =!= 0)
@@ -2851,24 +2744,17 @@ object PipelineQueries {
         Seq("chars"), numBuckets = 4)
       val changes = ChangeLog.fromSnapshotsFull(prev, next, "doc_id",
         Seq("lang", "chars"))
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivmr").toFile
-      val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      val ckpt = new java.io.File(tmpRoot, "ckpt")
-      writeSliceFixtures(tmpRoot, side,
-        Seq(0, 1, 2).map(res => changes.filter(col("doc_id") % 3 === res)))
+      fx.stage(Seq(0, 1, 2).map(res => changes.filter(col("doc_id") % 3 === res)))
       def drain(): Unit = graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingAggMaintain(stream, "graft_ivmr_state",
+        val q = StreamOps.streamingAggMaintain(fx.stream(s), "graft_ivmr_state",
           "op", "lang", Seq("chars"),
-          checkpointDir = Some(ckpt.getPath),
+          checkpointDir = Some(fx.ckpt.getPath),
           ledgerTable = Some("graft_ivmr_ledger"))
         try q.processAllAvailable() finally q.stop()
       }
-      moveIn(side, streamDir, "b0.parquet"); drain() // batch 0 completes + commits
-      dropLatestCommit(ckpt)                         // crash: completed, uncommitted
-      moveIn(side, streamDir, "b1.parquet"); moveIn(side, streamDir, "b2.parquet")
+      fx.arrive(1); drain() // batch 0 completes + commits
+      fx.crash()            // crash: completed, uncommitted
+      fx.arrive(2)
       drain() // replays batch 0 (ledger no-op), resumes, drains 1-2
       s.table("graft_ivmr_state")
         .select(col("lang"), col("n_rows"), col("sum_chars"))
@@ -2882,7 +2768,7 @@ object PipelineQueries {
     // segments, re-read with readStream, envelope-DECODED with from_json,
     // and applied to the persisted state. Same oracle as the batch and
     // plain-parquet streaming paths: the transport must be invisible.
-    "stream_cdc_agg_maintain_log" -> ((s, dir) => {
+    "stream_cdc_agg_maintain_log" -> ((s, dir) => StreamFixture.within("graft_ivmk") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         length(col("text")).as("chars"))
       val prev = d.filter(col("doc_id") % 3 =!= 0)
@@ -2898,8 +2784,7 @@ object PipelineQueries {
       val changes = ChangeLog.fromSnapshotsFull(prev, next, "doc_id",
         Seq("lang", "chars"))
         .localCheckpoint(eager = true)
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivmk").toFile
-      val logDir = new java.io.File(tmpRoot, "log")
+      val logDir = new java.io.File(fx.root, "log")
       try appendSegmentsConcurrently(s, logDir, topic = "doc_changes",
         keyCol = "doc_id", orderCols = Seq("doc_id", "op"),
         segments = Seq(0, 1, 2).map(res =>
@@ -2925,7 +2810,7 @@ object PipelineQueries {
     // consumer side decodes the envelope back to the retract-stream
     // changelog and maintains the same persisted state; same oracle again:
     // envelope format, like transport, must be invisible.
-    "stream_cdc_debezium" -> ((s, dir) => {
+    "stream_cdc_debezium" -> ((s, dir) => StreamFixture.within("graft_ivmd") { fx =>
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         length(col("text")).as("chars"))
       val prev = d.filter(col("doc_id") % 3 =!= 0)
@@ -2943,8 +2828,7 @@ object PipelineQueries {
       val events = graft.sources.KafkaShapedLog.encodeDebezium(changes,
           "doc_id", Seq("lang", "chars"), db = "graft", table = "documents")
         .localCheckpoint(eager = true)
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivmd").toFile
-      val logDir = new java.io.File(tmpRoot, "log")
+      val logDir = new java.io.File(fx.root, "log")
       try appendSegmentsConcurrently(s, logDir, topic = "graft.documents",
         keyCol = "doc_id", orderCols = Seq("doc_id", "op"),
         segments = Seq(0, 1, 2).map(res =>
@@ -2973,8 +2857,8 @@ object PipelineQueries {
     // changes (new schema, two segments); state starts EMPTY and the final
     // maintained table must equal a from-scratch recompute over the final
     // snapshot — the oracle states that recompute.
-    "stream_cdc_schema_change" -> ((s, dir) => {
-      val (logDir, rowSchema) = schemaEvolveLog(s, dir)
+    "stream_cdc_schema_change" -> ((s, dir) => StreamFixture.within("graft_ivme") { fx =>
+      val (logDir, rowSchema) = schemaEvolveLog(s, dir, fx.root)
       Seq("graft_ivme_state", "graft_ivme_state_staged", "graft_ivme_state_old")
         .foreach(t => graft.sources.Sources.dropForOverwrite(s, t))
       val empty = docs(s, dir).select(col("doc_id"), col("lang"),
@@ -2998,8 +2882,8 @@ object PipelineQueries {
     // the pre-drop segments' wide events never mask the DDL. n_rows and
     // sum_chars stay exact end-to-end; the final state equals a recompute
     // over the final (narrow) snapshot, schema included.
-    "stream_cdc_schema_drop" -> ((s, dir) => {
-      val (logDir, rowSchema) = schemaDropLog(s, dir)
+    "stream_cdc_schema_drop" -> ((s, dir) => StreamFixture.within("graft_ivmdr") { fx =>
+      val (logDir, rowSchema) = schemaDropLog(s, dir, fx.root)
       Seq("graft_ivmdr_state", "graft_ivmdr_state_staged", "graft_ivmdr_state_old")
         .foreach(t => graft.sources.Sources.dropForOverwrite(s, t))
       val empty = docs(s, dir).select(col("doc_id"), col("lang"),
@@ -3025,7 +2909,9 @@ object PipelineQueries {
     // snapshot: values where a logged change set them, null where the
     // column was never touched, deleted keys absent
     "cdc_schema_change_mat" -> ((s, dir) => {
-      val (logDir, rowSchema) = schemaEvolveLog(s, dir)
+      // the returned batch read scans the log after this returns
+      val (logDir, rowSchema) = schemaEvolveLog(s, dir,
+        StreamFixture.untilExit("graft_ivme").root)
       val raw = s.read.schema(graft.sources.KafkaShapedLog.schema)
         .parquet(logDir)
       val decoded = graft.sources.KafkaShapedLog.decodeDebezium(
@@ -3146,7 +3032,7 @@ object PipelineQueries {
     // sessions merge across the restart, the fence flushes the tail. The
     // accumulated sink must equal the batch islands: oracle verbatim from
     // stream_session_window.
-    "stream_session_window_restart" -> ((s, dir) => {
+    "stream_session_window_restart" -> ((s, dir) => StreamFixture.within("graft_swr") { fx =>
       val ev = StreamOps.fencibleEvents(s, dir)
       val r = ev.agg(min(unix_timestamp(col("ts"))),
         max(unix_timestamp(col("ts")))).head()
@@ -3154,18 +3040,12 @@ object PipelineQueries {
       val cut = (mn + mx) / 2
       Seq("swr_sink", "swr_ledger")
         .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_swr").toFile
-      val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-      val ckpt = new java.io.File(tmpRoot, "ckpt")
-      writeSliceFixtures(tmpRoot, side, Seq(
+      fx.stage(Seq(
         ev.filter(unix_timestamp(col("ts")) < cut),
         ev.filter(unix_timestamp(col("ts")) >= cut),
         StreamOps.fenceRow(s, mx + 5400)))
       def drain(): Unit = {
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val agg = stream.withWatermark("ts", "0 seconds")
+        val agg = fx.stream(s).withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"),
@@ -3173,12 +3053,12 @@ object PipelineQueries {
             col("session_window.end").as("session_end"), col("n_events"))
         // state partition count must be IDENTICAL across incarnations
         // (fixed at first start) — the derived value is deterministic
-        StreamOps.drainToTable(s, agg, "swr_sink", ckpt.getPath, "swr_ledger",
+        StreamOps.drainToTable(s, agg, "swr_sink", fx.ckpt.getPath, "swr_ledger",
           statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)))
       }
-      moveIn(side, streamDir, "b0.parquet"); drain() // older half; sessions open in state
-      dropLatestCommit(ckpt)                         // crash: newest batch uncommitted
-      moveIn(side, streamDir, "b1.parquet"); moveIn(side, streamDir, "b2.parquet")
+      fx.arrive(1); drain() // older half; sessions open in state
+      fx.crash()            // crash: newest batch uncommitted
+      fx.arrive(2)
       drain() // rollback + replay, merge across restart, fence flush
       s.table("swr_sink").filter(col("user_id") =!= -1L)
         .select(col("user_id"), col("session_start"), col("session_end"),
@@ -3374,7 +3254,7 @@ object PipelineQueries {
     // re-fold the replayed batch from the rolled-back version, the ledger
     // skips the duplicate sink append, and the accumulated max-n rows
     // equal the batch aggregate — oracle verbatim from stream_tws_totals.
-    "stream_tws_totals_restart" -> ((s, dir) => {
+    "stream_tws_totals_restart" -> ((s, dir) => StreamFixture.within("graft_twsr") { fx =>
       graft.SparkUtil.withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -3384,34 +3264,26 @@ object PipelineQueries {
             col("event_id"))
         Seq("twsr_sink", "twsr_ledger")
           .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft_twsr").toFile
-        val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-        val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-        val ckpt = new java.io.File(tmpRoot, "ckpt")
         val mid = ev.agg((min(col("event_id")) + max(col("event_id"))) / 2)
           .head().getDouble(0)
-        writeSliceFixtures(tmpRoot, side, Seq(
+        fx.stage(Seq(
           ev.filter(col("event_id") < mid).drop("event_id"),
           ev.filter(col("event_id") >= mid).drop("event_id")))
         def drain(): Unit = {
           import s.implicits._
-          val stream = s.readStream
-            .schema(ev.drop("event_id").schema)
-            .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-            .as[(Long, Long)]
-          val totals = stream.groupByKey(_._1)
+          val totals = fx.stream(s).as[(Long, Long)].groupByKey(_._1)
             .transformWithState(new graft.streaming.RunningTotalsProcessor,
               org.apache.spark.sql.streaming.TimeMode.None(),
               org.apache.spark.sql.streaming.OutputMode.Update())
             .toDF("user_id", "n", "cents")
-          StreamOps.drainToTable(s, totals, "twsr_sink", ckpt.getPath,
+          StreamOps.drainToTable(s, totals, "twsr_sink", fx.ckpt.getPath,
             "twsr_ledger",
             statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)),
             outputMode = org.apache.spark.sql.streaming.OutputMode.Update())
         }
-        moveIn(side, streamDir, "b0.parquet"); drain() // first half commits
-        dropLatestCommit(ckpt)                         // crash window
-        moveIn(side, streamDir, "b1.parquet")
+        fx.arrive(1); drain() // first half commits
+        fx.crash()            // crash window
+        fx.arrive(1)
         drain() // rollback + replay batch 0, then fold the second half
         s.table("twsr_sink")
           .groupBy(col("user_id"))
@@ -3436,7 +3308,7 @@ object PipelineQueries {
     // sessions merge across the restart, fence flushes the tail. The
     // accumulated sink must equal the batch gaps-and-islands: oracle
     // verbatim from stream_sessionize.
-    "stream_tws_sessionize_restart" -> ((s, dir) => {
+    "stream_tws_sessionize_restart" -> ((s, dir) => StreamFixture.within("graft_twssr") { fx =>
       graft.SparkUtil.withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -3448,28 +3320,22 @@ object PipelineQueries {
         val cut = (mn + mx) / 2
         Seq("twssr_sink", "twssr_ledger")
           .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft_twssr").toFile
-        val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-        val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-        val ckpt = new java.io.File(tmpRoot, "ckpt")
-        writeSliceFixtures(tmpRoot, side, Seq(
+        fx.stage(Seq(
           ev.filter(unix_timestamp(col("ts")) < cut),
           ev.filter(unix_timestamp(col("ts")) >= cut),
           StreamOps.fenceRow(s, mx + 3 * gap)))
         def drain(): Unit = {
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-          val sessions = StreamOps.transformWithStateSessionsOn(s, stream, gap)
+          val sessions = StreamOps.transformWithStateSessionsOn(s, fx.stream(s), gap)
           // state partition count must be IDENTICAL across incarnations
           // (fixed at first start) — the derived value is deterministic
-          StreamOps.drainToTable(s, sessions, "twssr_sink", ckpt.getPath,
+          StreamOps.drainToTable(s, sessions, "twssr_sink", fx.ckpt.getPath,
             "twssr_ledger",
             statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)),
             outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
         }
-        moveIn(side, streamDir, "b0.parquet"); drain() // older half; timers fire/arm
-        dropLatestCommit(ckpt)                         // crash: newest batch uncommitted
-        moveIn(side, streamDir, "b1.parquet"); moveIn(side, streamDir, "b2.parquet")
+        fx.arrive(1); drain() // older half; timers fire/arm
+        fx.crash()            // crash: newest batch uncommitted
+        fx.arrive(2)
         drain() // rollback + timer re-fire on replay, merge, fence flush
         s.table("twssr_sink").filter(col("user_id") =!= -1L)
           .select(col("user_id"),
@@ -3492,7 +3358,7 @@ object PipelineQueries {
     // and restarts. Accumulated sink = the batch gaps-and-islands over ALL
     // events (every straggler admitted by the 2W argument), oracle
     // verbatim from stream_tws_sessionize_late.
-    "stream_tws_sessionize_late_restart" -> ((s, dir) => {
+    "stream_tws_sessionize_late_restart" -> ((s, dir) => StreamFixture.within("graft_twsslr") { fx =>
       graft.SparkUtil.withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -3509,31 +3375,25 @@ object PipelineQueries {
         val delayed = pmod(col("event_id"), lit(delayMod)) === 0
         Seq("twsslr_sink", "twsslr_ledger")
           .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft_twsslr").toFile
-        val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-        val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-        val ckpt = new java.io.File(tmpRoot, "ckpt")
         val slices = (0 until numSlices).map { k =>
           ev.filter(sliceOf === k && !delayed)
             .unionAll(ev.filter(sliceOf === (k - 1) && delayed))
         } :+ ev.filter(sliceOf === (numSlices - 1) && delayed)
           .unionAll(StreamOps.fenceRow(s, mx + delaySec + 3 * gap))
-        writeSliceFixtures(tmpRoot, side, slices)
+        fx.stage(slices)
         def drain(): Unit = {
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-          val sessions = StreamOps.transformWithStateSessionsOn(s, stream,
+          val sessions = StreamOps.transformWithStateSessionsOn(s, fx.stream(s),
             gap, watermarkDelay = s"$delaySec seconds")
           // state partition count must be IDENTICAL across incarnations
-          StreamOps.drainToTable(s, sessions, "twsslr_sink", ckpt.getPath,
+          StreamOps.drainToTable(s, sessions, "twsslr_sink", fx.ckpt.getPath,
             "twsslr_ledger",
             statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)),
             outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
         }
-        (0 until 4).foreach(k => moveIn(side, streamDir, s"b$k.parquet"))
+        fx.arrive(4)
         drain() // first half of the disorder schedule: stragglers folding
-        dropLatestCommit(ckpt) // crash: newest batch's commit record gone
-        (4 to numSlices).foreach(k => moveIn(side, streamDir, s"b$k.parquet"))
+        fx.crash() // crash: newest batch's commit record gone
+        fx.arriveAll()
         drain() // rollback, straggler re-merge on replay, fence flush
         s.table("twsslr_sink").filter(col("user_id") =!= -1L)
           .select(col("user_id"),
@@ -3573,7 +3433,7 @@ object PipelineQueries {
     // replayed batch that re-inserts against a rolled-back map but a
     // surviving counter (or vice versa) double-counts exactly the
     // replayed keys. Oracle verbatim from stream_tws_distinct.
-    "stream_tws_distinct_restart" -> ((s, dir) => {
+    "stream_tws_distinct_restart" -> ((s, dir) => StreamFixture.within("graft_twdr") { fx =>
       graft.SparkUtil.withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -3581,34 +3441,26 @@ object PipelineQueries {
           .select(col("user_id"), col("event_type"), col("event_id"))
         Seq("twdr_sink", "twdr_ledger")
           .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft_twdr").toFile
-        val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-        val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-        val ckpt = new java.io.File(tmpRoot, "ckpt")
         val mid = ev.agg((min(col("event_id")) + max(col("event_id"))) / 2)
           .head().getDouble(0)
-        writeSliceFixtures(tmpRoot, side, Seq(
+        fx.stage(Seq(
           ev.filter(col("event_id") < mid).drop("event_id"),
           ev.filter(col("event_id") >= mid).drop("event_id")))
         def drain(): Unit = {
           import s.implicits._
-          val stream = s.readStream
-            .schema(ev.drop("event_id").schema)
-            .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-            .as[(Long, String)]
-          val counts = stream.groupByKey(_._1)
+          val counts = fx.stream(s).as[(Long, String)].groupByKey(_._1)
             .transformWithState(new graft.streaming.DistinctValuesProcessor,
               org.apache.spark.sql.streaming.TimeMode.None(),
               org.apache.spark.sql.streaming.OutputMode.Update())
             .toDF("user_id", "n_types")
-          StreamOps.drainToTable(s, counts, "twdr_sink", ckpt.getPath,
+          StreamOps.drainToTable(s, counts, "twdr_sink", fx.ckpt.getPath,
             "twdr_ledger",
             statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)),
             outputMode = org.apache.spark.sql.streaming.OutputMode.Update())
         }
-        moveIn(side, streamDir, "b0.parquet"); drain() // first half inserts
-        dropLatestCommit(ckpt)                         // crash window
-        moveIn(side, streamDir, "b1.parquet")
+        fx.arrive(1); drain() // first half inserts
+        fx.crash()            // crash window
+        fx.arrive(1)
         drain() // rollback: map entries AND counter must restore together
         s.table("twdr_sink")
           .groupBy(col("user_id"))
@@ -3625,7 +3477,7 @@ object PipelineQueries {
     // count the FIRST slice's entries — which holds only if the ListState
     // buffer (and its eviction frontier) survived recovery. Oracle
     // verbatim from stream_tws_trailing.
-    "stream_tws_trailing_restart" -> ((s, dir) => {
+    "stream_tws_trailing_restart" -> ((s, dir) => StreamFixture.within("graft_twtrr") { fx =>
       graft.SparkUtil.withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -3636,31 +3488,23 @@ object PipelineQueries {
         val cut = (r.getLong(0) + r.getLong(1)) / 2
         Seq("twtrr_sink", "twtrr_ledger")
           .foreach(graft.sources.Sources.dropForOverwrite(s, _))
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft_twtrr").toFile
-        val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-        val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-        val ckpt = new java.io.File(tmpRoot, "ckpt")
-        writeSliceFixtures(tmpRoot, side, Seq(
-          ev.filter(col("te") < cut), ev.filter(col("te") >= cut)))
+        fx.stage(Seq(ev.filter(col("te") < cut), ev.filter(col("te") >= cut)))
         def drain(): Unit = {
           import s.implicits._
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-            .as[(Long, Long)]
-          val counts = stream.groupByKey(_._1)
+          val counts = fx.stream(s).as[(Long, Long)].groupByKey(_._1)
             .transformWithState(
               new graft.streaming.TrailingWindowCountProcessor(3600L),
               org.apache.spark.sql.streaming.TimeMode.None(),
               org.apache.spark.sql.streaming.OutputMode.Update())
             .toDF("user_id", "te", "cnt")
-          StreamOps.drainToTable(s, counts, "twtrr_sink", ckpt.getPath,
+          StreamOps.drainToTable(s, counts, "twtrr_sink", fx.ckpt.getPath,
             "twtrr_ledger",
             statePartitions = Some(StreamOps.sessionStatePartitions(s, dir)),
             outputMode = org.apache.spark.sql.streaming.OutputMode.Update())
         }
-        moveIn(side, streamDir, "b0.parquet"); drain() // older half buffers
-        dropLatestCommit(ckpt)                         // crash window
-        moveIn(side, streamDir, "b1.parquet")
+        fx.arrive(1); drain() // older half buffers
+        fx.crash()            // crash window
+        fx.arrive(1)
         drain() // rollback + replay, windows reach back across the cut
         s.table("twtrr_sink")
           .groupBy(col("user_id"), col("te"))
@@ -4109,7 +3953,7 @@ object PipelineQueries {
     // bucket-ordered in 3 mtime-ordered segments (each key's trailing
     // window lives in bounded group state) — must equal the batch window
     // computation, which is what the shared oracle states (zThresh 3.0)
-    "stream_anomaly" -> ((s, dir) => {
+    "stream_anomaly" -> ((s, dir) => StreamFixture.within("graft_anom") { fx =>
       val b = Tables.df(s, dir, "events")
         .select(col("event_type").as("key"),
           floor(unix_timestamp(col("ts")) / 86400).as("bucket"),
@@ -4124,19 +3968,14 @@ object PipelineQueries {
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
       val cut1 = lo + (hi - lo + 1) / 3
       val cut2 = lo + 2 * (hi - lo + 1) / 3
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft_anom").toFile
-      val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
       // concurrent slice writes (guide §2.6) over the materialized blocks
-      try writeSliceFixtures(tmpRoot, streamDir,
-        Seq(col("bucket") < cut1,
+      try fx.stage(Seq(col("bucket") < cut1,
           col("bucket") >= cut1 && col("bucket") < cut2,
-          col("bucket") >= cut2).map(pred => b.filter(pred)))
+          col("bucket") >= cut2).map(pred => b.filter(pred))).arriveAll()
       finally org.apache.spark.sql.graft.GraftSqlShims.unpersistCheckpoint(b)
       graft.SparkUtil.withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(b.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
         val scored = graft.operators.Timeseries.streamingAnomalies(
-          stream, stepSeconds = 86400L, lookback = 7, zThresh = 3.0)
+          fx.stream(s), stepSeconds = 86400L, lookback = 7, zThresh = 3.0)
         StreamOps.runToMemory(s, scored.toDF(), "stream_anomaly_out",
           outputMode = org.apache.spark.sql.streaming.OutputMode.Append())
           .orderBy(col("key"), col("bucket_ts"))

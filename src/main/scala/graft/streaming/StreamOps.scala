@@ -931,63 +931,13 @@ object StreamOps {
   }
 
   /** Stage `parts` as one-file-per-micro-batch streaming input, arrival
-    * order = sequence order (pinned by explicit mtimes + lexical names,
-    * `maxFilesPerTrigger=1`) — the offline way to script exact batch
-    * boundaries and watermark progression: fences, late arrivals,
-    * out-of-order replays. All parts must share a schema.
+    * order = sequence order ([[StreamFixture]]) — the offline way to script
+    * exact batch boundaries and watermark progression: fences, late
+    * arrivals, out-of-order replays. All parts must share a schema. The
+    * returned stream is read lazily, so its files are swept at JVM exit.
     */
   def stagedStream(spark: SparkSession, parts: Seq[DataFrame]): DataFrame =
-    readStaged(spark, stageParts(parts), parts.head.schema)
-
-  /** Write the staged one-file-per-batch fixture and return its directory. */
-  /** Every staged temp dir ever written (INCLUDING a duplicate staged by
-    * the losing side of a concurrent first [[stagedStreamCached]] call —
-    * TrieMap.getOrElseUpdate may evaluate the thunk on both sides and keep
-    * one), swept by a JVM shutdown hook so a long sbt session doesn't
-    * accumulate orphaned fixture dirs in /tmp.
-    */
-  private val stagedForCleanup =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val stagedCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedForCleanup.forEach(d =>
-        try deleteTempDir(java.nio.file.Paths.get(d))
-        catch { case _: Throwable => () })))
-
-  private def stageParts(parts: Seq[DataFrame]): String = {
-    require(parts.nonEmpty, "stagedStream needs at least one part")
-    stagedCleanupHook
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage").toFile
-    stagedForCleanup.add(stage.getPath)
-    val t0 = System.currentTimeMillis()
-    // the per-slice writes are independent single-file jobs (each slice is
-    // its own filter over the source — repartition(1), so single-threaded
-    // inside the job) and arrival order is pinned by NAME + MTIME computed
-    // from the slice INDEX, never by write completion order — submit them
-    // concurrently (guide §2.6): the sequential loop measured ~8.5 s per
-    // staging at ScaleUp-sf10 (r16 probe, PLANS.md), dominated by N back-to-
-    // back one-task jobs the scheduler can overlap
-    graft.SparkUtil.concurrently(parts.head.sparkSession,
-      parts.zipWithIndex.map { case (df, i) =>
-        s"stage slice $i" -> (() => {
-          val tmp = new java.io.File(stage, s"d$i")
-          df.repartition(1).write.parquet(tmp.getPath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(stage, f"$i%03d_part.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(t0 - (parts.size - i) * 60000L)
-          ()
-        })
-      })
-    stage.getPath
-  }
-
-  private def readStaged(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(dir)
+    StreamFixture.untilExit("graft_stage").stage(parts).arriveAll().stream(spark)
 
   /** Staged-fixture memo: one PHYSICAL staging per (variant, dir, params)
     * per JVM. The fixture write is repartition(1) — one file per
@@ -995,29 +945,23 @@ object StreamOps {
     * call, which the r16 attribution (PLANS.md) showed DOMINATING the
     * sessionize family's decade-3 readings (the engine drain itself scales
     * 1.4x/decade). The staged files are immutable once written and every
-    * reader gets its own checkpoint, so reuse is free. Driver-side PATH
-    * strings only (the memo-safety rule: no frames, no blocks).
+    * reader gets its own checkpoint, so reuse is free. The memo holds
+    * fixtures, which are driver-side paths and a schema (the memo-safety
+    * rule: no frames, no blocks).
     *
     * ASSUMPTION: the SOURCE parquet under `dir` is immutable for the JVM's
     * lifetime — the memo is keyed on (variant, dir, params) only, so
     * rewriting a source dir's data in-JVM would serve a stale fixture.
     * Every current source is a read-only /root/testdata or ScaleUp output
     * dir; a harness that rewrites one must use a fresh path. Staged dirs
-    * are swept at JVM exit ([[stagedForCleanup]]).
+    * are swept at JVM exit ([[StreamFixture.untilExit]]).
     */
-  private val stagedFixtures = new scala.collection.concurrent.TrieMap[String, String]()
+  private val stagedFixtures = new scala.collection.concurrent.TrieMap[String, StreamFixture]()
 
   private[graft] def stagedStreamCached(spark: SparkSession, key: String,
-      parts: => Seq[DataFrame]): DataFrame = {
-    val evaluated = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val dir = stagedFixtures.getOrElseUpdate(key, {
-      val p = parts; evaluated ++= p; stageParts(p)
-    })
-    val schema =
-      if (evaluated.nonEmpty) evaluated.head.schema
-      else spark.read.parquet(dir).schema // one footer read on the memo hit
-    readStaged(spark, dir, schema)
-  }
+      parts: => Seq[DataFrame]): DataFrame =
+    stagedFixtures.getOrElseUpdate(key,
+      StreamFixture.untilExit("graft_stage").stage(parts).arriveAll()).stream(spark)
 
   /** Streaming dedup: drop duplicate keys across micro-batches with
     * watermark-bounded state. Unlike [[graft.operators.Dedup.exact]] (which
@@ -1844,17 +1788,6 @@ object StreamOps {
     }
   }
 
-  private def deleteTempDir(dir: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      // toList materializes before close; deepest-first so dirs empty out
-      val all = try walk.iterator().asScala.toList finally walk.close()
-      all.sortBy(-_.getNameCount).foreach((p: Path) => Files.deleteIfExists(p))
-    }
-  }
-
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
       statePartitions: Option[Int] = None,
       outputMode: OutputMode = OutputMode.Complete(),
@@ -1885,7 +1818,7 @@ object StreamOps {
         // only (real restart gates manage their own dirs through
         // drainToTable directly) — delete it now, or a multi-hundred-query
         // sf10 sweep leaves an unbounded /tmp trail of state snapshots
-        deleteTempDir(ckpt)
+        StreamFixture.delete(ckpt.toFile)
       }
       // the ledger only guards replays DURING the drain; the returned frame
       // is a scan of the sink table alone, so the ledger can go now. The

@@ -278,32 +278,23 @@ object EpochOps {
     val drillChanges = graft.operators.ChangeLog.fromSnapshotsFull(
       drillBase.filter(col("doc_id") % 2 === 0), drillBase, "doc_id",
       Seq("lang", "chars"))
-    val drillRoot = java.nio.file.Files.createTempDirectory("ep_drill").toFile
-    val drillIn = new java.io.File(drillRoot, "in"); drillIn.mkdirs()
-    val drillCkpt = new java.io.File(drillRoot, "ckpt")
-    drillChanges.coalesce(1).write.parquet(new java.io.File(drillRoot, "p").getPath)
-    java.nio.file.Files.move(
-      new java.io.File(drillRoot, "p").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath,
-      new java.io.File(drillIn, "b0.parquet").toPath)
-    def drillDrain(): Unit = {
-      val st = spark.readStream.schema(drillChanges.schema).parquet(drillIn.getPath)
-      val q = graft.streaming.StreamOps.streamingAggMaintain(st,
-        "ep_drill_state", "op", "lang", Seq("chars"),
-        checkpointDir = Some(drillCkpt.getPath),
-        ledgerTable = Some("ep_drill_ledger"))
-      try q.processAllAvailable() finally q.stop()
+    val drillOk = graft.streaming.StreamFixture.within("ep_drill") { fx =>
+      fx.stage(Seq(drillChanges)).arriveAll()
+      def drillDrain(): Unit = {
+        val q = graft.streaming.StreamOps.streamingAggMaintain(fx.stream(spark),
+          "ep_drill_state", "op", "lang", Seq("chars"),
+          checkpointDir = Some(fx.ckpt.getPath),
+          ledgerTable = Some("ep_drill_ledger"))
+        try q.processAllAvailable() finally q.stop()
+      }
+      drillDrain()
+      val stateAfterOnce = spark.table("ep_drill_state").orderBy("lang")
+        .collect().toSeq
+      fx.crash()
+      drillDrain() // replay: ledger must make it a no-op
+      stateAfterOnce == spark.table("ep_drill_state").orderBy("lang")
+        .collect().toSeq
     }
-    drillDrain()
-    val stateAfterOnce = spark.table("ep_drill_state").orderBy("lang")
-      .collect().toSeq
-    // the shared crash simulation (deletes the commit AND its local-FS
-    // checksum sibling — a stale .crc fails the re-commit's atomic rename)
-    graft.queries.PipelineQueries.dropLatestCommit(drillCkpt)
-    drillDrain() // replay: ledger must make it a no-op
-    val stateAfterReplay = spark.table("ep_drill_state").orderBy("lang")
-      .collect().toSeq
-    val drillOk = stateAfterOnce == stateAfterReplay
     println(s"[recovery-drill] replay no-op: $drillOk " +
       s"(ledger batches: ${spark.table("ep_drill_ledger").count()})")
     if (!drillOk)

@@ -18,34 +18,19 @@ object MachineryProbe {
     import spark.implicits._
 
     val nBatches = 6
-    def stagedOneRowStream(tag: String): DataFrame = {
-      val dir = java.nio.file.Files.createTempDirectory(s"mach_$tag").toFile
-      val t0 = System.currentTimeMillis()
-      (0 until nBatches).foreach { i =>
-        val tmp = new java.io.File(dir, s"d$i")
-        Seq((i.toLong, s"row $i")).toDF("id", "text")
-          .repartition(1).write.parquet(tmp.getPath)
-        val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(dir, f"$i%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 - (nBatches - i) * 60000L)
-      }
-      val schema = spark.read.parquet(dir.listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.getPath).schema
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet").parquet(dir.getPath)
-    }
-
     def run(tag: String)(body: (DataFrame, Long) => Unit): Double = {
       val times = scala.collection.mutable.ArrayBuffer.empty[Long]
       val perBatch: (DataFrame, Long) => Unit = (b, bid) => {
         val t = System.nanoTime(); body(b, bid); times += (System.nanoTime() - t)
       }
-      val q = stagedOneRowStream(tag).writeStream.outputMode("append")
-        .foreachBatch(perBatch).start()
-      val t0 = System.nanoTime()
-      q.processAllAvailable(); q.stop()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = graft.streaming.StreamFixture.within("graft_mach") { fx =>
+        val rows = (0 until nBatches).map(i => Seq((i.toLong, s"row $i")).toDF("id", "text"))
+        val q = fx.stage(rows).arriveAll().stream(spark).writeStream.outputMode("append")
+          .foreachBatch(perBatch).start()
+        val t0 = System.nanoTime()
+        q.processAllAvailable(); q.stop()
+        (System.nanoTime() - t0) / 1e9
+      }
       println(f"$tag%-22s wall=$wall%6.2f s  bodyPerBatch=${times.map(_ / 1e9).sum / times.size}%6.3f s  nonBody=${(wall - times.map(_ / 1e9).sum) / nBatches}%6.3f s/batch")
       wall
     }

@@ -342,7 +342,7 @@ class SecurityContextSpec extends SparkFunSuite {
   }
 
   test("INSERT OVERWRITE DIRECTORY applies the rewrite (leaf command path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_iod").toString
+    val dir = tempDir("graft_iod").toString
     ctx.mixedExecute("user_A",
       s"INSERT OVERWRITE DIRECTORY '$dir' USING parquet SELECT order_id, customer_name, region FROM orders")
     val persisted = spark.read.parquet(dir).orderBy("order_id").collect()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (cheap, avoids repeated
@@ -21,6 +22,19 @@ object SparkTestBase {
   }
 }
 
-abstract class SparkFunSuite extends AnyFunSuite {
+abstract class SparkFunSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh temp directory, deleted after the suite's last test. */
+  protected def tempDir(prefix: String): java.io.File = synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(graft.streaming.StreamFixture.delete)
+    finally super.afterAll()
 }

@@ -51,7 +51,7 @@ class SourcesContractSpec extends SparkFunSuite {
   }
 
   test("KafkaShapedLog: segments replay in append order and decodeJson round-trips typed rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_klog").toFile
+    val dir = tempDir("graft_klog")
     val logDir = new java.io.File(dir, "log")
     val b0 = Seq((1L, "en", 10), (2L, "de", 20)).toDF("doc_id", "lang", "chars")
     val b1 = Seq((3L, "fr", 30)).toDF("doc_id", "lang", "chars")
@@ -101,7 +101,7 @@ class SourcesContractSpec extends SparkFunSuite {
     assert(byOp == Map("c" -> (true, false), "u" -> (false, false),
       "d" -> (false, true)))
     // through the log: value json is a genuine Debezium event
-    val dir = java.nio.file.Files.createTempDirectory("graft_dbz").toFile
+    val dir = tempDir("graft_dbz")
     KafkaShapedLog.appendSegment(events, dir.getPath + "/log", "t", 0,
       "doc_id", Seq("doc_id"))
     val raw = spark.read.schema(KafkaShapedLog.schema)
@@ -166,7 +166,7 @@ class SourcesContractSpec extends SparkFunSuite {
       Seq("lang"), db = "g", table = "d")
     val evNew = KafkaShapedLog.encodeDebezium(newChanges, "doc_id",
       Seq("lang", "words"), db = "g", table = "d")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ddl").toFile
+    val dir = tempDir("graft_ddl")
     KafkaShapedLog.appendSegment(evOld, dir.getPath + "/log", "t", 0, "doc_id", Seq("doc_id"))
     KafkaShapedLog.appendSegment(evNew, dir.getPath + "/log", "t", 1, "doc_id", Seq("doc_id"))
     val raw = spark.read.schema(KafkaShapedLog.schema).parquet(dir.getPath + "/log")
@@ -226,7 +226,7 @@ class SourcesContractSpec extends SparkFunSuite {
     val mem = MemoryStream[(Int, String)]
     val q = mem.toDF().toDF("k", "v").writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ps").toString)
+        tempDir("graft_ps").toString)
       .toTable("graft_mem.default.print_sink")
     try {
       mem.addData((1, "a")); q.processAllAvailable()
@@ -249,7 +249,7 @@ class SourcesContractSpec extends SparkFunSuite {
     val agg = mem.toDF().toDF("v").groupBy("v").count().toDF("v", "n")
     val q = agg.writeStream.outputMode("complete")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_cm").toString)
+        tempDir("graft_cm").toString)
       .toTable("graft_mem.default.counts")
     try {
       mem.addData("a"); q.processAllAvailable()

@@ -4,13 +4,11 @@ import graft.SparkFunSuite
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 class SourcesSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private val schema = StructType(Seq(
     StructField("id", LongType),

@@ -47,8 +47,7 @@ class RocksDbInvarianceSpec extends SparkFunSuite {
     family.foreach { name =>
       val q = graft.SparkEntry.queries(name)
       val dflt = q(spark, dir).collect().map(_.toString).toSeq
-      val ckptRoot = java.nio.file.Files
-        .createTempDirectory(s"graft_rdb_$name").toFile
+      val ckptRoot = tempDir(s"graft_rdb_$name")
       val rocks = graft.SparkUtil.withConfs(spark,
         "spark.sql.streaming.stateStore.providerClass" -> rocksProvider,
         "spark.sql.streaming.checkpointLocation" -> ckptRoot.getPath) {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkFunSuite
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Crash-recovery semantics of the stateful foreachBatch ingests (VERDICT
@@ -32,49 +31,6 @@ class StreamingRestartSpec extends SparkFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Write each slice as one parquet file b<i>.parquet under `side` with
-    * ascending mtimes (arrival order under maxFilesPerTrigger=1).
-    */
-  private def stageSlices(tmpRoot: java.io.File, side: java.io.File,
-      slices: Seq[DataFrame]): Unit = {
-    val now = System.currentTimeMillis()
-    slices.zipWithIndex.foreach { case (sl, i) =>
-      val part = new java.io.File(tmpRoot, s"part$i")
-      sl.coalesce(1).write.mode("overwrite").parquet(part.getPath)
-      val f = part.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(side, s"b$i.parquet")
-      java.nio.file.Files.move(f.toPath, dst.toPath)
-      dst.setLastModified(now - (slices.size - i) * 60000L)
-    }
-  }
-
-  private def moveIn(side: java.io.File, streamDir: java.io.File,
-      name: String): Unit = {
-    java.nio.file.Files.move(new java.io.File(side, name).toPath,
-      new java.io.File(streamDir, name).toPath)
-    ()
-  }
-
-  /** Crash simulation: newest batch completed, commit never recorded. */
-  private def dropLatestCommit(ckpt: java.io.File): Unit = {
-    val commits = new java.io.File(ckpt, "commits")
-    val entries = Option(commits.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.nonEmpty && f.getName.forall(_.isDigit))
-    assert(entries.nonEmpty, s"no commit entries under $commits")
-    val latest = entries.maxBy(_.getName.toLong)
-    val crc = new java.io.File(commits, s".${latest.getName}.crc")
-    if (crc.exists) { crc.delete(); () }
-    assert(latest.delete(), s"could not delete $latest")
-  }
-
-  private def mkDirs(prefix: String): (java.io.File, java.io.File, java.io.File, java.io.File) = {
-    val tmpRoot = java.nio.file.Files.createTempDirectory(prefix).toFile
-    val side = new java.io.File(tmpRoot, "side"); side.mkdirs()
-    val streamDir = new java.io.File(tmpRoot, "in"); streamDir.mkdirs()
-    val ckpt = new java.io.File(tmpRoot, "ckpt")
-    (tmpRoot, side, streamDir, ckpt)
-  }
-
   test("agg maintain: ledger makes commit-loss replay a no-op; WITHOUT it the state double-applies (negative control)") {
     import graft.operators.ChangeLog
     val d = spark.read.parquet(s"$dir/documents.parquet")
@@ -100,18 +56,17 @@ class StreamingRestartSpec extends SparkFunSuite {
       tables.foreach(graft.sources.Sources.dropForOverwrite(spark, _))
       ChangeLog.aggStateWriteBucketed(prev, state, "lang", Seq("chars"),
         numBuckets = 4)
-      val (tmpRoot, side, streamDir, ckpt) = mkDirs("graft_rst_ivm")
-      stageSlices(tmpRoot, side, Seq(changes))
-      def drain(): Unit = {
-        val stream = spark.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingAggMaintain(stream, state, "op", "lang",
-          Seq("chars"), checkpointDir = Some(ckpt.getPath), ledgerTable = ledger)
-        try q.processAllAvailable() finally q.stop()
+      StreamFixture.within("graft_rst_ivm") { fx =>
+        fx.stage(Seq(changes))
+        def drain(): Unit = {
+          val q = StreamOps.streamingAggMaintain(fx.stream(spark), state, "op", "lang",
+            Seq("chars"), checkpointDir = Some(fx.ckpt.getPath), ledgerTable = ledger)
+          try q.processAllAvailable() finally q.stop()
+        }
+        fx.arrive(1); drain()
+        if (crash) { fx.crash(); drain() } // replay, no new data
+        stateRows(state)
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
-      if (crash) { dropLatestCommit(ckpt); drain() } // replay, no new data
-      stateRows(state)
     }
 
     // control: uninterrupted single application
@@ -146,36 +101,33 @@ class StreamingRestartSpec extends SparkFunSuite {
     val tables = Seq("rst_cur_ex", "rst_cur_lsh", "rst_cur_lsh_sets",
       "rst_cur_lsh_meta", "rst_cur_sink", "rst_cur_quar", "rst_cur_ledger")
     tables.foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    try {
+    try StreamFixture.within("graft_rst_cur") { fx =>
       Dedup.exactWriteBucketed(base.limit(0).withColumn("k", col("text")),
         "rst_cur_ex", "doc_id", "k", numBuckets = 4)
       Dedup.minhashWriteBucketed(base.limit(0), "rst_cur_lsh", "doc_id",
         "text", numBuckets = 4)
-      val (tmpRoot, side, streamDir, ckpt) = mkDirs("graft_rst_cur")
-      stageSlices(tmpRoot, side, Seq(origs, clones))
+      fx.stage(Seq(origs, clones))
       def drain(): Unit = {
-        val stream = spark.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingCurate(stream, "rst_cur_ex", "rst_cur_lsh",
+        val q = StreamOps.streamingCurate(fx.stream(spark), "rst_cur_ex", "rst_cur_lsh",
           "doc_id", "text", "rst_cur_sink", bench = Some(bench),
           minWords = 30, minStopHits = 1, maxBucket = Int.MaxValue,
           threshold = 0.9, quarantineTable = Some("rst_cur_quar"),
-          checkpointDir = Some(ckpt.getPath), ledgerTable = Some("rst_cur_ledger"))
+          checkpointDir = Some(fx.ckpt.getPath), ledgerTable = Some("rst_cur_ledger"))
         try q.processAllAvailable() finally q.stop()
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
+      fx.arrive(1); drain()
       val counts0 = Seq("rst_cur_sink", "rst_cur_quar", "rst_cur_ex",
         "rst_cur_lsh", "rst_cur_lsh_sets", "rst_cur_ledger")
         .map(t => t -> spark.table(t).count()).toMap
       assert(counts0("rst_cur_sink") > 0 && counts0("rst_cur_ex") > 0 &&
         counts0("rst_cur_lsh") > 0, s"batch 0 premise: appends happened ($counts0)")
       // crash after completion; restart with NO new files -> pure replay
-      dropLatestCommit(ckpt); drain()
+      fx.crash(); drain()
       val counts1 = counts0.keys.map(t => t -> spark.table(t).count()).toMap
       assert(counts1 == counts0,
         s"replayed batch must be a no-op across every append: $counts0 -> $counts1")
       // then the clones arrive and curate against the batch-0 index
-      moveIn(side, streamDir, "b1.parquet"); drain()
+      fx.arrive(1); drain()
       val got = spark.table("rst_cur_sink").select("doc_id").as[Long].collect()
       assert(got.length == got.distinct.length, "nothing appended twice")
       assert(got.toSet == expect, "restart + replay still lands the batch keeper set")
@@ -194,41 +146,39 @@ class StreamingRestartSpec extends SparkFunSuite {
       max(unix_timestamp(col("ts")))).head()
     val (mn, mx) = (r.getLong(0), r.getLong(1))
     val cut = (mn + mx) / 2
-    def runProtocol(provider: Option[String], tag: String): Set[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)] = {
+    def runProtocol(provider: Option[String], tag: String): Set[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)] =
+        StreamFixture.within(s"graft_rst_sw_$tag") { fx =>
       val sink = s"rst_sw_$tag"; val ledger = s"rst_sw_${tag}_ledger"
       Seq(sink, ledger).foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-      val (tmpRoot, side, streamDir, ckpt) = mkDirs(s"graft_rst_sw_$tag")
-      stageSlices(tmpRoot, side, Seq(
+      fx.stage(Seq(
         ev.filter(unix_timestamp(col("ts")) < cut),
         ev.filter(unix_timestamp(col("ts")) >= cut),
         StreamOps.fenceRow(spark, mx + 5400)))
       def drain(): Unit = {
-        val stream = spark.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val agg = stream.withWatermark("ts", "0 seconds")
+        val agg = fx.stream(spark).withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"),
             col("session_window.start").as("session_start"),
             col("session_window.end").as("session_end"), col("n_events"))
         def run(): Unit = StreamOps.drainToTable(spark, agg, sink,
-          ckpt.getPath, ledger, statePartitions = Some(4))
+          fx.ckpt.getPath, ledger, statePartitions = Some(4))
         provider match {
           case Some(p) => graft.SparkUtil.withConfs(spark,
             "spark.sql.streaming.stateStore.providerClass" -> p)(run())
           case None => run()
         }
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
-      dropLatestCommit(ckpt)
-      moveIn(side, streamDir, "b1.parquet"); moveIn(side, streamDir, "b2.parquet")
+      fx.arrive(1); drain()
+      fx.crash()
+      fx.arrive(2)
       drain()
       if (provider.isDefined) {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory)
             Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
           else Seq(f)
-        val stateFiles = walk(new java.io.File(ckpt, "state")).map(_.getName)
+        val stateFiles = walk(new java.io.File(fx.ckpt, "state")).map(_.getName)
         assert(stateFiles.exists(n => n.endsWith(".zip") || n.endsWith(".changelog")),
           s"no RocksDB artifacts under state/: ${stateFiles.take(20)}")
         assert(!stateFiles.exists(_.endsWith(".delta")),
@@ -284,30 +234,27 @@ class StreamingRestartSpec extends SparkFunSuite {
       .select(col("doc_id"), col("text")).limit(100)
     Seq("rst_ex_idx", "rst_ex_sink", "rst_ex_ledger")
       .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    try {
+    try StreamFixture.within("graft_rst_ex") { fx =>
       Dedup.exactWriteBucketed(d.limit(0).withColumn("k", col("text")),
         "rst_ex_idx", "doc_id", "k", numBuckets = 4)
       // batch 0 = originals; batch 1 = byte-identical +1e6 copies (all must
       // drop against the extended index after the replayed batch 0)
       val copies = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      val (tmpRoot, side, streamDir, ckpt) = mkDirs("graft_rst_ex")
-      stageSlices(tmpRoot, side, Seq(d, copies))
+      fx.stage(Seq(d, copies))
       def drain(): Unit = {
-        val stream = spark.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
         val q = StreamOps.streamingExactDedup(
-          stream.withColumn("k", col("text")), "rst_ex_idx", "doc_id", "k",
-          "rst_ex_sink", checkpointDir = Some(ckpt.getPath),
+          fx.stream(spark).withColumn("k", col("text")), "rst_ex_idx", "doc_id", "k",
+          "rst_ex_sink", checkpointDir = Some(fx.ckpt.getPath),
           ledgerTable = Some("rst_ex_ledger"))
         try q.processAllAvailable() finally q.stop()
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
+      fx.arrive(1); drain()
       val sink0 = spark.table("rst_ex_sink").count()
       val idx0 = spark.table("rst_ex_idx").count()
-      dropLatestCommit(ckpt); drain() // pure replay
+      fx.crash(); drain() // pure replay
       assert(spark.table("rst_ex_sink").count() == sink0, "replay re-appended the sink")
       assert(spark.table("rst_ex_idx").count() == idx0, "replay re-extended the index")
-      moveIn(side, streamDir, "b1.parquet"); drain()
+      fx.arrive(1); drain()
       // every copy dropped against the (exactly-once) index; sink = originals
       val got = spark.table("rst_ex_sink").select("doc_id").as[Long].collect()
       assert(got.length == got.distinct.length)
@@ -322,23 +269,20 @@ class StreamingRestartSpec extends SparkFunSuite {
       .select(col("doc_id"), col("text")).limit(150)
     Retrieval.bm25WriteBucketed(d.filter(col("doc_id") % 3 =!= 0),
       "rst_bm25", "doc_id", "text")
-    try {
+    try StreamFixture.within("graft_rst_bm25") { fx =>
       val rest = d.filter(col("doc_id") % 3 === 0)
-      val (tmpRoot, side, streamDir, ckpt) = mkDirs("graft_rst_bm25")
-      stageSlices(tmpRoot, side, Seq(rest))
+      fx.stage(Seq(rest))
       def drain(): Unit = {
-        val stream = spark.readStream.schema(rest.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-        val q = StreamOps.streamingBm25Ingest(stream, "rst_bm25", "doc_id",
-          "text", checkpointDir = Some(ckpt.getPath))
+        val q = StreamOps.streamingBm25Ingest(fx.stream(spark), "rst_bm25", "doc_id",
+          "text", checkpointDir = Some(fx.ckpt.getPath))
         try q.processAllAvailable() finally q.stop()
       }
-      moveIn(side, streamDir, "b0.parquet"); drain()
+      fx.arrive(1); drain()
       val postings0 = spark.table("rst_bm25").count()
       def nDocs(): Long = spark.table("rst_bm25_stats")
         .agg(sum(col("n_docs"))).head().getLong(0)
       val nDocs0 = nDocs()
-      dropLatestCommit(ckpt); drain() // replay the ingested batch
+      fx.crash(); drain() // replay the ingested batch
       assert(spark.table("rst_bm25").count() == postings0,
         "replay must append zero postings (id guard)")
       assert(nDocs() == nDocs0, "stats must not double-count the replayed docs")

@@ -1489,50 +1489,37 @@ class StreamingSpec extends SparkFunSuite {
     // exist yet, so without the keys()-scan fallback the running count
     // would restart near zero and under-report forever (here: emit 1
     // instead of 3 for the second batch)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_twd_migrate").toFile
-    val in = new java.io.File(tmp, "in"); in.mkdirs()
-    val ckpt = new java.io.File(tmp, "ckpt")
-    val sink = "twd_migrate_sink"
-    val ledger = "twd_migrate_ledger"
-    Seq(sink, ledger).foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    def drain(proc: org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, String), (Long, Long)]): Unit =
-      graft.SparkUtil.withConfs(spark,
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val stream = spark.readStream
-          .schema("user_id LONG, event_type STRING")
-          .option("maxFilesPerTrigger", "1").parquet(in.getPath)
-          .as[(Long, String)]
-        val counts = stream.groupByKey(_._1)
-          .transformWithState(proc,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n_types")
-        StreamOps.drainToTable(spark, counts, sink, ckpt.getPath, ledger,
-          statePartitions = Some(2),
-          outputMode = org.apache.spark.sql.streaming.OutputMode.Update())
-      }
-    // the file stream source lists FILES, not nested dirs: write each slice
-    // to a scratch dir and move its single part file into the stream dir
-    def stage(rows: Seq[(Long, String)], name: String): Unit = {
-      val part = new java.io.File(tmp, s"part_$name")
-      rows.toDF("user_id", "event_type")
-        .coalesce(1).write.mode("overwrite").parquet(part.getPath)
-      val f = part.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(in, s"$name.parquet").toPath)
+    StreamFixture.within("graft_twd_migrate") { fx =>
+      val sink = "twd_migrate_sink"
+      val ledger = "twd_migrate_ledger"
+      Seq(sink, ledger).foreach(graft.sources.Sources.dropForOverwrite(spark, _))
+      def drain(proc: org.apache.spark.sql.streaming.StatefulProcessor[
+          Long, (Long, String), (Long, Long)]): Unit =
+        graft.SparkUtil.withConfs(spark,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+          val counts = fx.stream(spark).as[(Long, String)].groupByKey(_._1)
+            .transformWithState(proc,
+              org.apache.spark.sql.streaming.TimeMode.None(),
+              org.apache.spark.sql.streaming.OutputMode.Update())
+            .toDF("user_id", "n_types")
+          StreamOps.drainToTable(spark, counts, sink, fx.ckpt.getPath, ledger,
+            statePartitions = Some(2),
+            outputMode = org.apache.spark.sql.streaming.OutputMode.Update())
+        }
+      fx.stage(Seq(Seq((7L, "a"), (7L, "b")), Seq((7L, "b"), (7L, "c")))
+        .map(_.toDF("user_id", "event_type")))
+      fx.arrive(1)
+      drain(new LegacyDistinctProcessor) // old schema writes the checkpoint
+      fx.arrive(1)
+      drain(new DistinctValuesProcessor) // new schema restores from it
+      val byBatch = spark.table(sink)
+        .groupBy(col("_batch_id")).agg(max(col("n_types")).as("n"))
+        .orderBy(col("_batch_id"))
+        .select(col("n")).as[Long].collect().toSeq
+      assert(byBatch == Seq(2L, 3L),
+        s"expected running distinct counts Seq(2, 3) across the migration, got $byBatch")
     }
-    stage(Seq((7L, "a"), (7L, "b")), "b0")
-    drain(new LegacyDistinctProcessor) // old schema writes the checkpoint
-    stage(Seq((7L, "b"), (7L, "c")), "b1")
-    drain(new DistinctValuesProcessor) // new schema restores from it
-    val byBatch = spark.table(sink)
-      .groupBy(col("_batch_id")).agg(max(col("n_types")).as("n"))
-      .orderBy(col("_batch_id"))
-      .select(col("n")).as[Long].collect().toSeq
-    assert(byBatch == Seq(2L, 3L),
-      s"expected running distinct counts Seq(2, 3) across the migration, got $byBatch")
   }
 }
 
