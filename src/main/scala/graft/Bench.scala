@@ -116,10 +116,10 @@ object Bench {
     //    Run the suite's OWN entry points against the tiny dir — same code
     //    path, sf0.001-sized input, so the bench-SF per-query work (fixture
     //    staging is memoized PER DIR) stays on the timed books.
-    //    stream_tws_sessionize_late is warmed SEPARATELY from its eager
-    //    twin: the late pipeline is the only user of
-    //    WatermarkSessionizeProcessor + per-key interval ListState + timer
-    //    re-arm, so its first-call JIT/class-init otherwise lands on the
+    //    stream_tws_sessionize_late is warmed as well as
+    //    stream_tws_sessionize: both run WatermarkSessionizeProcessor, but
+    //    only the late pipeline stages the bounded-disorder feed under a
+    //    nonzero watermark, and its first-call cost otherwise lands on the
     //    timed bench-SF reading (r18 probe: 29.7 s cold vs 8.9 s warm
     //    rep-3 at sf0.1 — pure first-run cost, the drain itself is ~7.4 s).
     //    Warming at warmDir keeps the bench-SF fixture staging (memoized

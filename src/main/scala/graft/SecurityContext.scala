@@ -233,9 +233,12 @@ final class SecurityContext(
     * submission, the target constraint, and every policy application of the
     * source and of the statement's subqueries. Throws
     * [[ColumnAccessDeniedException]] fail-closed on denied tables/columns
-    * (after auditing the denial).
+    * (after auditing the denial). The whole rewrite is one enforcement
+    * pass ([[graft.plans.Enforcement.pass]]): in a session with
+    * [[graft.plans.GraftSecurityExtensions]] the extension's rule, which
+    * refuses row-level DML on a policied table, skips its analyses.
     */
-  def rewriteDml(user: String, sql: String): LogicalPlan = {
+  def rewriteDml(user: String, sql: String): LogicalPlan = Enforcement.pass {
     val rule = DmlSecurityRewrite(spark, user, policyManager.view(), scope)
     val rewritten =
       try rule(parseSql(sql))

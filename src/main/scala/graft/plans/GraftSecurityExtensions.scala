@@ -65,7 +65,7 @@ object GraftSecurityExtensions {
   final class Enforce(session: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
       case Some(u) if !nested =>
-        ensureFunctions(session)
+        MaskFunctions.register(session)
         Enforcement(session, u, policies.view(), scopeOf(session), plan)._1
       case _ => plan
     }
@@ -98,13 +98,4 @@ object GraftSecurityExtensions {
     TableScope(
       spark.conf.get(CatalogKey, "spark_catalog"),
       spark.conf.get(DatabaseKey, "default"))
-
-  // weak keys: this process-wide set must not pin sessions (and their whole
-  // sessionState) against garbage collection in long-lived multi-session apps
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  private def ensureFunctions(spark: SparkSession): Unit =
-    if (registered.add(spark)) MaskFunctions.register(spark)
 }

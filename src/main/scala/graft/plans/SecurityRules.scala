@@ -64,7 +64,10 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * ([[DmlSecurityRewrite]]) — and new queries
   * stay enforced even when a scan is answered from a
   * cache populated before the policy existed (the injected nodes sit above the
-  * matched cache subtree). A Dataset's own actions keep the plan it was
+  * matched cache subtree). Row-level DML (UPDATE, DELETE, MERGE) on a table
+  * with any policy for the principal runs only through
+  * `SecurityContext.rewriteDml`/`executeDml`; anywhere else, in either mode,
+  * [[Enforcement]] refuses it. A Dataset's own actions keep the plan it was
   * analyzed with; a query derived from it is enforced for the principal that
   * enforced the handle and fails closed for any other.
   * Outside the boundary: a direct `spark.read.parquet(path)` of the table's
@@ -608,12 +611,20 @@ object Enforcement {
     case other => (other, identity)
   }
 
-  def apply(spark: SparkSession, user: String, policies: PolicyView,
-      scope: TableScope, plan: LogicalPlan, rowFilters: Boolean = true,
-      masks: Boolean = true, filterOnRaw: Boolean = false): (LogicalPlan, Seq[AccessDecision]) = {
+  /** `body` as part of an enforcement pass: the extension's rule skips the
+    * analyses it starts. [[graft.SecurityContext.rewriteDml]] analyzes the
+    * statement it has already constrained this way.
+    */
+  private[graft] def pass[T](body: => T): T = {
     val outer = active.get
     active.set(true)
-    try {
+    try body finally active.set(outer)
+  }
+
+  def apply(spark: SparkSession, user: String, policies: PolicyView,
+      scope: TableScope, plan: LogicalPlan, rowFilters: Boolean = true,
+      masks: Boolean = true, filterOnRaw: Boolean = false): (LogicalPlan, Seq[AccessDecision]) =
+    pass {
       val (query, rebuild) = unwrap(plan)
       failClosed(user, policies, scope, query, rowFilters, masks)
       val denied = ColumnDenyCheck.violations(query, user, policies, scope)
@@ -625,17 +636,28 @@ object Enforcement {
         val mask = DataMaskRule(spark, user, policies, scope, filterOnRaw, auditIdentity = true)
         (rebuild(mask(filtered)), (rows.decisions ++ mask.decisions).toSeq)
       }
-    } finally active.set(outer)
-  }
+    }
 
-  /** The two plans enforcement cannot rewrite, refused instead of run
+  /** The plans enforcement cannot rewrite, refused instead of run
     * unenforced: a node injected for another principal (a handle enforced
     * for one user, reused in a query derived under another, would keep the
-    * first user's filters and skip the second's), and an UNKNOWN leaf that
-    * embeds a query over a table this call would enforce anything on.
+    * first user's filters and skip the second's), an UNKNOWN leaf that
+    * embeds a query over a table this call would enforce anything on, and a
+    * row-level write (UPDATE, DELETE, MERGE) to a table with any policy for
+    * the principal. The analyzer has already turned such a write into a
+    * group replacement (`ReplaceData`) or a delta (`WriteDelta`) that reads
+    * its target as a bare relation no rule sees, and a filter injected
+    * under that read would delete the rows it hides when the group is
+    * replaced; [[DmlSecurityRewrite]] constrains the parsed statement
+    * instead.
     */
   private def failClosed(user: String, policies: PolicyView, scope: TableScope,
       query: LogicalPlan, rowFilters: Boolean, masks: Boolean): Unit = {
+    rowLevelTarget(query, scope).foreach { case (c, d, t) =>
+      if (enforcesAny(user, policies, c, d, t)) throw new UnsupportedOperationException(
+        s"row-level ${query.nodeName} on $c.$d.$t, a table with policies for user " +
+          s"'$user', runs only through rewriteDml/executeDml — refusing to execute it unenforced")
+    }
     val reused = query.collectFirstWithSubqueries {
       case p if PlanShapes.isInjected(p) && !p.getTagValue(SecurityTags.Principal).contains(user) => p
     }
@@ -652,6 +674,38 @@ object Enforcement {
     }
   }
 
+  /** (catalog, db, table) of the V2 table a row-level write at the root of
+    * `plan` targets, rewritten by the analyzer or not; None for any other
+    * root.
+    */
+  private def rowLevelTarget(plan: LogicalPlan,
+      scope: TableScope): Option[(String, String, String)] = {
+    import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val target = plan match {
+      case w: RowLevelWrite => Some(w.originalTable)
+      case u: UpdateTable => Some(u.table)
+      case d: DeleteFromTable => Some(d.table)
+      case m: MergeIntoTable => Some(m.targetTable)
+      case _ => None
+    }
+    target.map(EliminateSubqueryAliases(_)).collect {
+      case DataSourceV2Relation(_, _, Some(cat), Some(id), _, _) =>
+        PlanShapes.tableParts((cat.name +: id.namespace.toSeq) :+ id.name, scope)
+    }
+  }
+
+  /** Whether `user` has anything to enforce on the table: a deny or a
+    * column deny, a row filter unless `rowFilters` is off, a mask unless
+    * `masks` is off.
+    */
+  private def enforcesAny(user: String, policies: PolicyView, c: String, d: String,
+      t: String, rowFilters: Boolean = true, masks: Boolean = true): Boolean =
+    policies.isDenied(user, c, d, t) ||
+      (rowFilters && policies.rowFilterConditions(user, c, d, t).nonEmpty) ||
+      (masks && policies.hasDataMask(user, c, d, t)) ||
+      policies.deniedColumns(user, c, d, t).nonEmpty
+
   /** The names of the base tables `plans` read (view bodies and subquery
     * plans included) that have anything to enforce for `user`.
     */
@@ -662,10 +716,7 @@ object Enforcement {
       case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
         PlanShapes.tableParts(id.qualifier :+ id.name, scope)
     }).collect {
-      case (c, d, t) if policies.isDenied(user, c, d, t) ||
-        (rowFilters && policies.rowFilterConditions(user, c, d, t).nonEmpty) ||
-        (masks && policies.hasDataMask(user, c, d, t)) ||
-        policies.deniedColumns(user, c, d, t).nonEmpty => t
+      case (c, d, t) if enforcesAny(user, policies, c, d, t, rowFilters, masks) => t
     }.distinct
 }
 

@@ -3184,9 +3184,9 @@ object PipelineQueries {
           .orderBy(col("user_id"))
       }
     }),
-    // TIMER leg of the arbitrary-state API: gap sessionization where the
-    // trailing open session is flushed by an EVENT-TIME TIMER registered
-    // at end+gap (re-armed per update, deleted on inline close) — the
+    // TIMER leg of the arbitrary-state API: gap sessionization where each
+    // session is flushed by an EVENT-TIME TIMER registered at end+gap
+    // (re-armed per update and per firing) once the watermark seals it — the
     // third sessionizer engine (after flatMapGroupsWithState and Catalyst
     // session_window) and the part of transformWithState the other two
     // tws queries don't touch. The fence drives the watermark past every
@@ -3212,15 +3212,15 @@ object PipelineQueries {
       }
     }),
     // NONZERO-WATERMARK sessionize (r15 verdict #1): the ordered gates above
-    // pin a 0-second watermark, so foldBatch's out-of-order interval sweep
-    // was only unit-spec'd — this feeds BOUNDED-DISORDER arrival (each batch
+    // pin a 0-second watermark, so the out-of-order interval sweep was only
+    // unit-spec'd — this feeds BOUNDED-DISORDER arrival (each batch
     // = its slice's on-time events + the previous slice's one-batch-late
     // stragglers) under a real withWatermark delay sized to ADMIT every
     // straggler (2 slice widths — see eventsStreamBoundedDisorder's proof,
     // incl. why no mergeable session has been timer-flushed when a
     // straggler lands). Late events that precede their session's on-time
     // opener must LOWER session_start (StreamingSpec pins that the fixture
-    // contains such events and that a 0-second watermark diverges); the
+    // contains such events and that a 0-second watermark is exact too); the
     // oracle is the batch gaps-and-islands over ALL events, identical to
     // stream_tws_sessionize.
     "stream_tws_sessionize_late" -> ((s, dir) => {

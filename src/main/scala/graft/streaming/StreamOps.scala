@@ -34,113 +34,32 @@ class RunningTotalsProcessor
 }
 
 /** TIMER flavor of the arbitrary-state API: a gap sessionizer whose
-  * trailing open session is flushed by an EVENT-TIME TIMER — the third
-  * leg of transformWithState (ValueState, MapState, timers) and the
-  * third sessionizer engine here (flatMapGroupsWithState, Catalyst
-  * session_window, and now typed-state + timers). Semantics match the
-  * flatMapGroupsWithState sessionizer exactly (inclusive floor-seconds
-  * gap, batch rows sorted per key before folding): sessions closed by a
-  * later event emit inline; the timer is re-armed at end + gap (clamped
-  * above the current watermark — a registration at-or-below the
-  * watermark would never fire or fire immediately against a stale end)
-  * after any previously armed timer is deleted, so exactly one flush
-  * timer is live per open session.
+  * sessions are closed by an EVENT-TIME TIMER — the third leg of
+  * transformWithState (ValueState, MapState, timers) and the third
+  * sessionizer engine here (flatMapGroupsWithState, Catalyst
+  * session_window, and typed state + timers). Inclusive floor-seconds gap,
+  * batch rows merged per key by the interval [[WatermarkSessionizeProcessor.sweep]].
+  *
+  * WATERMARK-PACED: the processor holds ALL intervals in a per-key
+  * ListState and emits an interval only once the event-time watermark
+  * passes `end + gap` — at which point no admissible event can extend or
+  * precede-within-gap it (an admitted event has ts >= the late-record
+  * watermark, which is at or above the eviction watermark of some earlier
+  * batch; the flush test is strict, so ts <= end+gap < wm is impossible).
+  * That is exactly how Catalyst's native session_window paces emission,
+  * and the argument holds at ANY watermark delay, 0 s included, so the
+  * processor is exact for every admitted event whatever the delay. State
+  * per key is bounded by the sessions inside one watermark lag — the
+  * inherent minimum for watermark-honest sessionization at any scale.
+  *
+  * One flush timer per key, armed at the EARLIEST unflushed `end + gap`
+  * (clamped above the current watermark — a registration at-or-below the
+  * watermark would never fire or fire immediately against a stale end);
+  * re-armed on every fold and every fire, so a quiet key still drains as
+  * the watermark advances.
   *
   * Input (userId, epochSec, eventTs) — the timestamp column carries the
   * watermark through the typed select; output (userId, start, end, n).
-  */
-class SessionizeProcessor(gapSeconds: Long)
-    extends StatefulProcessor[Long, (Long, Long, java.sql.Timestamp),
-      (Long, Long, Long, Long)] {
-  @transient private var open: ValueState[(Long, Long, Long)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    open = getHandle.getValueState[(Long, Long, Long)]("open",
-      Encoders.product[(Long, Long, Long)], TTLConfig.NONE)
-  }
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, java.sql.Timestamp)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-    val prev: Option[(Long, Long, Long)] =
-      if (open.exists()) Some(open.get()) else None
-    val (closed, cur) =
-      SessionizeProcessor.foldBatch(prev, rows.map(_._2).toArray, gapSeconds)
-    cur.foreach { c =>
-      open.update(c)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max((c._2 + gapSeconds) * 1000L + 1L,
-        timerValues.getCurrentWatermarkInMs() + 1L))
-    }
-    closed.iterator.map { case (s, e, n) => (key, s, e, n) }
-  }
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[(Long, Long, Long, Long)] = {
-    if (open.exists()) {
-      val (s0, e0, n0) = open.get()
-      open.clear()
-      Iterator.single((key, s0, e0, n0))
-    } else Iterator.empty
-  }
-}
-
-object SessionizeProcessor {
-  /** Pure gaps-and-islands fold of one key-batch against the open session:
-    * returns (sessions closed by this batch, in start order; the still-open
-    * last session). The open session participates in the interval sweep as
-    * an interval rather than as an "everything merges rightward" anchor, so
-    * an out-of-order event EARLIER than the open session is handled
-    * honestly: within gap of the interval it merges and LOWERS
-    * session_start; beyond gap it forms (and, being earlier than the open
-    * session, immediately closes) its own island — the signed
-    * `t - e0 <= gap` test that silently swallowed arbitrarily-early events
-    * is gone. Under a 0-delay watermark (the pinned gate plan, where every
-    * surviving event has t >= open end) this reduces exactly to the old
-    * fold; with a nonzero watermark delay it now matches the batch
-    * gaps-and-islands oracle for any event the watermark admits, except the
-    * inherent limit of already-EMITTED sessions (an event within gap of a
-    * session closed in an earlier batch starts a new island — no engine can
-    * retract an emitted row in append mode).
-    */
-  def foldBatch(open: Option[(Long, Long, Long)], events: Array[Long],
-      gapSeconds: Long): (Seq[(Long, Long, Long)], Option[(Long, Long, Long)]) = {
-    val merged = sweep(open.toSeq ++ events.map(t => (t, t, 1L)), gapSeconds)
-    if (merged.isEmpty) (Nil, None)
-    else (merged.init, Some(merged.last))
-  }
-
-  /** The interval sweep itself: merge (start, end, n) intervals whose gaps
-    * are within `gapSeconds`, in start order. [[foldBatch]] is this plus
-    * the eager close-all-but-last split; [[WatermarkSessionizeProcessor]]
-    * uses it directly and paces the closes by watermark instead.
-    */
-  def sweep(intervals: Seq[(Long, Long, Long)],
-      gapSeconds: Long): List[(Long, Long, Long)] =
-    intervals.sortBy(_._1).foldLeft(List.empty[(Long, Long, Long)]) {
-      case ((ps, pe, pn) :: rest, (s, e, n)) if s - pe <= gapSeconds =>
-        (ps, math.max(pe, e), pn + n) :: rest
-      case (acc, iv) => iv :: acc
-    }.reverse
-}
-
-/** WATERMARK-PACED gap sessionizer — the nonzero-delay twin of
-  * [[SessionizeProcessor]]. The eager processor closes every non-last
-  * interval the moment a later event lands, which is exact ONLY under
-  * ordered arrival (a 0-second watermark): when the watermark ADMITS
-  * late events, a one-batch-late straggler can belong to a session the
-  * eager fold already emitted, and no append-mode engine can retract it.
-  * This processor holds ALL intervals in a per-key ListState and emits an
-  * interval only once the event-time watermark passes `end + gap` — at
-  * which point no admissible event can extend or precede-within-gap it
-  * (an admitted event has ts >= the late-record watermark, which is at or
-  * above the eviction watermark of some earlier batch; the flush test is
-  * strict, so ts <= end+gap < wm is impossible). That is exactly how
-  * Catalyst's native session_window paces emission; state per key is
-  * bounded by the sessions inside one watermark lag — the inherent
-  * minimum for watermark-honest sessionization at any scale.
-  *
-  * One flush timer per key, armed at the EARLIEST unflushed `end + gap`
-  * (clamped above the current watermark); re-armed on every fold and every
-  * fire, so a quiet key still drains as the watermark advances.
   */
 class WatermarkSessionizeProcessor(gapSeconds: Long)
     extends StatefulProcessor[Long, (Long, Long, java.sql.Timestamp),
@@ -152,7 +71,7 @@ class WatermarkSessionizeProcessor(gapSeconds: Long)
   }
   /** Emit what the watermark has sealed, keep + re-time the rest.
     *
-    * `stateHoldsMerged`: true on the timer path, where `merged` IS the
+    * `consumed`: the firing timer on the timer path, where `merged` IS the
     * stored list (no new events folded in). When additionally nothing
     * sealed, the clear-and-put would rewrite an identical interval list,
     * so it is skipped and only the consumed timer re-armed. MEASURED
@@ -170,18 +89,20 @@ class WatermarkSessionizeProcessor(gapSeconds: Long)
     * writes (the DistinctValuesProcessor rationale).
     */
   private def flush(merged: Seq[(Long, Long, Long)], wmMs: Long,
-      stateHoldsMerged: Boolean): Iterator[(Long, Long, Long)] = {
+      consumed: Option[Long]): Iterator[(Long, Long, Long)] = {
     val (closed, kept) = merged.partition { case (_, e, _) =>
       WatermarkSessionizeProcessor.isSealed(e, gapSeconds, wmMs) }
-    if (!(closed.isEmpty && stateHoldsMerged)) {
+    if (!(closed.isEmpty && consumed.isDefined)) {
       ivls.clear()
       if (kept.nonEmpty) ivls.put(kept.toArray)
     }
     // the timer is single (earliest unflushed end+gap, clamped above the
-    // watermark) and was either consumed by this firing or may sit earlier
-    // than the new earliest seal point — delete-and-re-arm both ways; a
-    // timer write is one fixed-size entry, not the interval list
-    getHandle.listTimers().foreach(getHandle.deleteTimer)
+    // watermark) and may sit earlier than the new earliest seal point —
+    // delete-and-re-arm; a timer write is one fixed-size entry, not the
+    // interval list. The firing timer is left alone: the engine deletes it
+    // after this handler returns, and deleting it here too names a timer
+    // that no longer exists
+    getHandle.listTimers().filterNot(consumed.contains).foreach(getHandle.deleteTimer)
     if (kept.nonEmpty) {
       val next = kept.map { case (_, e, _) => (e + gapSeconds) * 1000L + 1L }.min
       getHandle.registerTimer(math.max(next, wmMs + 1L))
@@ -192,21 +113,37 @@ class WatermarkSessionizeProcessor(gapSeconds: Long)
       rows: Iterator[(Long, Long, java.sql.Timestamp)],
       timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
     val prior = if (ivls.exists()) ivls.get().toSeq else Nil
-    val merged = SessionizeProcessor.sweep(
+    val merged = WatermarkSessionizeProcessor.sweep(
       prior ++ rows.map(r => (r._2, r._2, 1L)), gapSeconds)
-    flush(merged, timerValues.getCurrentWatermarkInMs(), stateHoldsMerged = false)
+    flush(merged, timerValues.getCurrentWatermarkInMs(), consumed = None)
       .map { case (s, e, n) => (key, s, e, n) }
   }
   override def handleExpiredTimer(key: Long, timerValues: TimerValues,
       expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
       : Iterator[(Long, Long, Long, Long)] = {
     val prior = if (ivls.exists()) ivls.get().toSeq else Nil
-    flush(prior, timerValues.getCurrentWatermarkInMs(), stateHoldsMerged = true)
+    flush(prior, timerValues.getCurrentWatermarkInMs(),
+      consumed = Some(expiredTimerInfo.getExpiryTimeInMs()))
       .map { case (s, e, n) => (key, s, e, n) }
   }
 }
 
 object WatermarkSessionizeProcessor {
+  /** The pure gaps-and-islands interval sweep: merge (start, end, n)
+    * intervals whose gaps are within `gapSeconds`, in start order. Stored
+    * intervals take part as intervals, not as an "everything merges
+    * rightward" anchor, so an out-of-order event EARLIER than an interval
+    * is handled honestly: within gap it merges and LOWERS the start; beyond
+    * gap it forms its own island.
+    */
+  def sweep(intervals: Seq[(Long, Long, Long)],
+      gapSeconds: Long): List[(Long, Long, Long)] =
+    intervals.sortBy(_._1).foldLeft(List.empty[(Long, Long, Long)]) {
+      case ((ps, pe, pn) :: rest, (s, e, n)) if s - pe <= gapSeconds =>
+        (ps, math.max(pe, e), pn + n) :: rest
+      case (acc, iv) => iv :: acc
+    }.reverse
+
   /** True iff the watermark has SEALED the interval — no admissible event
     * (ts at or above the watermark) can extend or precede-within-gap it.
     * STRICT inequality: an event exactly AT end+gap still merges, so
@@ -613,11 +550,12 @@ object StreamOps {
       .toDF("user_id", "n", "cents")
   }
 
-  /** Gap sessionization through [[SessionizeProcessor]] (transformWithState
-    * + event-time timers): watermarked fenced events in, closed sessions
-    * out in Append mode — the fence drives the watermark past every real
-    * session's flush timer, so the drained stream converges to the batch
-    * gaps-and-islands result exactly (same oracle as stream_sessionize).
+  /** Gap sessionization through [[WatermarkSessionizeProcessor]]
+    * (transformWithState + event-time timers): watermarked fenced events
+    * in, closed sessions out in Append mode — the fence drives the
+    * watermark past every real session's flush timer, so the drained stream
+    * converges to the batch gaps-and-islands result exactly (same oracle as
+    * stream_sessionize).
     */
   def transformWithStateSessions(spark: SparkSession, dir: String,
       gapSeconds: Long, fenceAheadSec: Long): DataFrame =
@@ -634,37 +572,61 @@ object StreamOps {
         * gates exact; the bounded-disorder feed
         * ([[eventsStreamBoundedDisorder]]) passes its admission bound so
         * one-batch-late events reach the processor instead of being
-        * dropped — the regime [[SessionizeProcessor.foldBatch]]'s
-        * interval sweep exists for.
+        * dropped — the regime [[WatermarkSessionizeProcessor.sweep]]'s
+        * interval merge exists for.
         */
       watermarkDelay: String = "0 seconds"): DataFrame = {
     import spark.implicits._
-    val ev = events
+    events
       .withColumn("_ets", col("ts").cast("timestamp"))
       .withWatermark("_ets", watermarkDelay)
       .select(col("user_id").cast("long"),
         unix_timestamp(col("_ets")), col("_ets"))
       .as[(Long, Long, java.sql.Timestamp)]
-    // eager emission (close every non-last interval inline) is exact only
-    // under ordered arrival; an ADMITTING delay needs watermark-paced
-    // closes or a straggler can chase an already-emitted session — see
-    // WatermarkSessionizeProcessor
-    val proc =
-      if (watermarkDelay == "0 seconds") new SessionizeProcessor(gapSeconds)
-      else new WatermarkSessionizeProcessor(gapSeconds)
-    ev.groupByKey(_._1)
-      .transformWithState(proc,
+      .groupByKey(_._1)
+      .transformWithState(new WatermarkSessionizeProcessor(gapSeconds),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "session_start", "session_end", "n_events")
   }
 
-  /** Attach a checkpoint dir (real crash-recoverable state, vs the default
-    * temp checkpoint) to a writeStream when one is given.
+  /** The one start of a foreachBatch ingest: `body` runs per micro-batch
+    * under [[BatchLedger.once]] (unguarded when `ledgerTable` is None), in
+    * append mode, on `checkpointDir` when one is given (real
+    * crash-recoverable state, vs the default temp checkpoint).
     */
-  private def withCheckpoint(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      checkpointDir: Option[String]) =
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d))
+  private def startIngest(stream: DataFrame, checkpointDir: Option[String] = None,
+      ledgerTable: Option[String] = None)(body: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // explicit function type: foreachBatch's Scala/Java overloads are
+    // ambiguous for a SAM-converted lambda on Scala 2.13
+    val perBatch: (DataFrame, Long) => Unit = (batch, bid) =>
+      BatchLedger.once(batch.sparkSession, ledgerTable, bid)(body(batch, bid))
+    val w = stream.writeStream.outputMode("append").foreachBatch(perBatch)
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
+  }
+
+  /** The dedup ingests' one per-batch body: the batch's `survivors`,
+    * checkpointed once (the sink append and the index append both read
+    * them), appended to `sinkTable`, then to the index when `extendIndex`.
+    */
+  private def startDedupIngest(stream: DataFrame, sinkTable: String,
+      extendIndex: Boolean, checkpointDir: Option[String] = None,
+      ledgerTable: Option[String] = None)(survivors: DataFrame => DataFrame)(
+      appendToIndex: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(stream, checkpointDir, ledgerTable) { (batch, _) =>
+      val kept = survivors(batch).localCheckpoint(eager = false)
+      kept.write.mode(org.apache.spark.sql.SaveMode.Append)
+        .format("parquet").saveAsTable(sinkTable)
+      if (extendIndex) appendToIndex(kept)
+    }
+
+  /** `batch` without the rows an incremental probe flagged (its
+    * `batch_id` column names them).
+    */
+  private def withoutFlagged(batch: DataFrame, flagged: DataFrame,
+      idCol: String): DataFrame =
+    batch.join(flagged.select(col("batch_id").as(idCol)).distinct(),
+      Seq(idCol), "left_anti")
 
   /** Drain a (possibly stateful) streaming DataFrame into a parquet TABLE
     * via [[BatchLedger]]-guarded [[idempotentBatchAppend]] writes (each
@@ -902,8 +864,8 @@ object StreamOps {
     * timer-flushed: flushing needs end+gap < wm <= mn+(k-2)W-1, while a
     * mergeable session has end >= ts-gap >= mn+(k-1)W-gap, i.e. end+gap
     * >= mn+(k-1)W > wm. The straggler therefore always reaches a LIVE open
-    * session — the regime where [[SessionizeProcessor.foldBatch]]'s
-    * interval sweep must LOWER session_start when the straggler precedes
+    * session — the regime where [[WatermarkSessionizeProcessor.sweep]]
+    * must LOWER session_start when the straggler precedes
     * the session's on-time opener.
     *
     * The trailing fence sits D + 3*gap past max ts, so the final watermark
@@ -998,27 +960,17 @@ object StreamOps {
       maxBucket: Int = 100, threshold: Double = 0.7,
       extendIndex: Boolean = true,
       /** Real checkpoint + [[BatchLedger]] — the crash-restart discipline
-        * proven on the curate/IVM/BM25 gates, wired family-wide: a
-        * replayed batch skips the sink and index appends wholesale.
+        * proven on the curate/IVM/BM25 gates: a replayed batch skips the sink
+        * and index appends wholesale. Of the dedup ingests, this one and
+        * [[streamingExactDedup]] take a ledger; the other five do not.
         */
       checkpointDir: Option[String] = None,
       ledgerTable: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    // explicit function type: foreachBatch's Scala/Java overloads are
-    // ambiguous for a SAM-converted lambda on Scala 2.13
-    val perBatch: (DataFrame, Long) => Unit = (batch, bid) => BatchLedger.once(
-        batch.sparkSession, ledgerTable, bid) {
-      val dupIds = Dedup.minhashDedupIncremental(batch, indexTable, idCol,
-        textCol, maxBucket, threshold)
-        .select(col("batch_id").as(idCol)).distinct()
-      val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
-        .localCheckpoint(eager = false) // sink append + two index appends
-      survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex) Dedup.minhashAppendToIndex(survivors, indexTable, idCol, textCol)
-    }
-    withCheckpoint(docsStream.writeStream.outputMode("append")
-      .foreachBatch(perBatch), checkpointDir).start()
+    startDedupIngest(docsStream, sinkTable, extendIndex, checkpointDir, ledgerTable)(
+      batch => withoutFlagged(batch, Dedup.minhashDedupIncremental(batch, indexTable,
+        idCol, textCol, maxBucket, threshold), idCol))(
+      Dedup.minhashAppendToIndex(_, indexTable, idCol, textCol))
   }
 
   /** Streaming EXACT-dedup ingest over a [[graft.operators.Dedup.exactWriteBucketed]]
@@ -1037,16 +989,9 @@ object StreamOps {
       checkpointDir: Option[String] = None,
       ledgerTable: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val perBatch: (DataFrame, Long) => Unit = (batch, bid) => BatchLedger.once(
-        batch.sparkSession, ledgerTable, bid) {
-      val survivors = Dedup.exactDedupIncremental(batch, indexTable, idCol, keyCol)
-        .localCheckpoint(eager = false) // sink append + index append
-      survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex) Dedup.exactAppendToIndex(survivors, indexTable, idCol, keyCol)
-    }
-    withCheckpoint(docsStream.writeStream.outputMode("append")
-      .foreachBatch(perBatch), checkpointDir).start()
+    startDedupIngest(docsStream, sinkTable, extendIndex, checkpointDir, ledgerTable)(
+      Dedup.exactDedupIncremental(_, indexTable, idCol, keyCol))(
+      Dedup.exactAppendToIndex(_, indexTable, idCol, keyCol))
   }
 
   /** Streaming SUBSTRING-dedup ingest over a persisted
@@ -1067,18 +1012,10 @@ object StreamOps {
       maxBucket: Int = 100, minShared: Long = 1,
       extendIndex: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
-      val dupIds = Dedup.substringDedupIncremental(batch, indexTable, idCol,
-        textCol, maxBucket)
-        .filter(col("n_shared") >= minShared)
-        .select(col("batch_id").as(idCol)).distinct()
-      val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
-        .localCheckpoint(eager = false) // sink append + index append
-      survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex) Dedup.substringAppendToIndex(survivors, indexTable, idCol, textCol)
-    }
-    docsStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
+    startDedupIngest(docsStream, sinkTable, extendIndex)(
+      batch => withoutFlagged(batch, Dedup.substringDedupIncremental(batch, indexTable,
+        idCol, textCol, maxBucket).filter(col("n_shared") >= minShared), idCol))(
+      Dedup.substringAppendToIndex(_, indexTable, idCol, textCol))
   }
 
   /** Streaming SEMANTIC-dedup ingest over a persisted
@@ -1106,17 +1043,10 @@ object StreamOps {
       threshold: Double = 0.9, maxCell: Int = 100,
       extendIndex: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.{Dedup, Similarity}
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
-      val dupIds = Dedup.semanticDedupIncremental(batch, indexTable, idCol,
-        vecCol, threshold, maxCell)
-        .select(col("batch_id").as(idCol)).distinct()
-      val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
-        .localCheckpoint(eager = false) // sink append + index append
-      survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex) Similarity.ivfAppendToIndex(survivors, indexTable, idCol, vecCol)
-    }
-    vecsStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
+    startDedupIngest(vecsStream, sinkTable, extendIndex)(
+      batch => withoutFlagged(batch, Dedup.semanticDedupIncremental(batch, indexTable,
+        idCol, vecCol, threshold, maxCell), idCol))(
+      Similarity.ivfAppendToIndex(_, indexTable, idCol, vecCol))
   }
 
   /** Streaming CHUNK-dedup ingest over a persisted
@@ -1141,18 +1071,10 @@ object StreamOps {
       threshold: Double = 0.5, maxPostings: Int = Int.MaxValue,
       extendIndex: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Multimodal
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
-      val dupIds = Multimodal.chunkPairsIncremental(batch, indexTable, idCol,
-        payloadCol, threshold, maxPostings)
-        .select(col("batch_id").as(idCol)).distinct()
-      val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
-        .localCheckpoint(eager = false) // sink append + index append
-      survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex)
-        Multimodal.chunkAppendToIndex(survivors, indexTable, idCol, payloadCol)
-    }
-    mediaStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
+    startDedupIngest(mediaStream, sinkTable, extendIndex)(
+      batch => withoutFlagged(batch, Multimodal.chunkPairsIncremental(batch, indexTable,
+        idCol, payloadCol, threshold, maxPostings), idCol))(
+      Multimodal.chunkAppendToIndex(_, indexTable, idCol, payloadCol))
   }
 
   /** Streaming PARAGRAPH-dedup ingest over a persisted
@@ -1175,16 +1097,10 @@ object StreamOps {
       idCol: String, textCol: String, sinkTable: String,
       extendIndex: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
-      val cleaned = Dedup.dedupParagraphsIncremental(batch, indexTable, idCol, textCol)
-        .localCheckpoint(eager = false) // sink append + index append
-      cleaned.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex)
-        Dedup.paragraphAppendToIndex(cleaned.withColumnRenamed("clean_text", textCol),
-          indexTable, idCol, textCol)
-    }
-    docsStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
+    startDedupIngest(docsStream, sinkTable, extendIndex)(
+      Dedup.dedupParagraphsIncremental(_, indexTable, idCol, textCol))(cleaned =>
+      Dedup.paragraphAppendToIndex(cleaned.withColumnRenamed("clean_text", textCol),
+        indexTable, idCol, textCol))
   }
 
   /** Streaming duplicated-SPAN removal against a persisted
@@ -1203,16 +1119,10 @@ object StreamOps {
       idCol: String, textCol: String, sinkTable: String,
       extendIndex: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
-      val cleaned = Dedup.dedupSpansIncremental(batch, indexTable, idCol, textCol)
-        .localCheckpoint(eager = false) // sink append + index append
-      cleaned.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(sinkTable)
-      if (extendIndex)
-        Dedup.spanAppendToIndex(cleaned.withColumnRenamed("clean_text", textCol),
-          indexTable, idCol, textCol)
-    }
-    docsStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
+    startDedupIngest(docsStream, sinkTable, extendIndex)(
+      Dedup.dedupSpansIncremental(_, indexTable, idCol, textCol))(cleaned =>
+      Dedup.spanAppendToIndex(cleaned.withColumnRenamed("clean_text", textCol),
+        indexTable, idCol, textCol))
   }
 
   /** Apply a [[reconcileCurate]] drop set: rewrite the sink WITHOUT the
@@ -1250,11 +1160,10 @@ object StreamOps {
     * a fixed probe set, actuated by a staged re-train/rebuild).
     */
   def streamingIvfPqIngest(vecsStream: DataFrame, indexTable: String,
-      idCol: String, vecCol: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) =>
+      idCol: String, vecCol: String): org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(vecsStream) { (batch, _) =>
       graft.operators.Similarity.ivfpqAppendToIndex(batch, indexTable, idCol, vecCol)
-    vecsStream.writeStream.outputMode("append").foreachBatch(perBatch).start()
-  }
+    }
 
   /** Streaming ingest into a persisted
     * [[graft.operators.Retrieval.bm25WriteBucketed]] posting index: each
@@ -1277,12 +1186,10 @@ object StreamOps {
         * by construction — its id guard drops already-indexed docs, so a
         * replayed batch appends zero postings (spec-pinned).
         */
-      checkpointDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) =>
+      checkpointDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(docsStream, checkpointDir) { (batch, _) =>
       graft.operators.Retrieval.bm25AppendToIndex(batch, indexTable, idCol, textCol)
-    withCheckpoint(docsStream.writeStream.outputMode("append")
-      .foreachBatch(perBatch), checkpointDir).start()
-  }
+    }
 
   /** CONTINUOUS incremental view maintenance: a before/after changelog
     * stream ([[graft.operators.ChangeLog.fromSnapshotsFull]] shape, or any
@@ -1309,15 +1216,11 @@ object StreamOps {
         * double-apply without it (exercised by StreamingRestartSpec's
         * negative control and the `stream_cdc_agg_maintain_restart` gate).
         */
-      ledgerTable: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (DataFrame, Long) => Unit = (batch, bid) =>
-      BatchLedger.once(batch.sparkSession, ledgerTable, bid) {
-        graft.operators.ChangeLog.maintainAggTable(batch, stateTable, opCol,
-          groupCol, aggCols)
-      }
-    withCheckpoint(changeStream.writeStream.outputMode("append")
-      .foreachBatch(perBatch), checkpointDir).start()
-  }
+      ledgerTable: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(changeStream, checkpointDir, ledgerTable) { (batch, _) =>
+      graft.operators.ChangeLog.maintainAggTable(batch, stateTable, opCol,
+        groupCol, aggCols)
+    }
 
   /** [[streamingAggMaintain]] over the RAW Debezium transport with SCHEMA
     * EVOLUTION: the stream stays Kafka-shaped and each micro-batch decodes
@@ -1364,7 +1267,7 @@ object StreamOps {
       rowSchema: org.apache.spark.sql.types.StructType, keyCol: String,
       groupCol: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.types.StructType
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) => {
+    startIngest(rawLog) { (batch, _) =>
       val spark = batch.sparkSession
       val epochs = graft.sources.KafkaShapedLog.fieldEpochs(batch)
       val present: Seq[String] =
@@ -1404,7 +1307,6 @@ object StreamOps {
       graft.operators.ChangeLog.maintainAggTable(padded, stateTable, "op",
         groupCol, stateAgg)
     }
-    rawLog.writeStream.outputMode("append").foreachBatch(perBatch).start()
   }
 
   /** The COMPOSED streaming curation funnel — the continuous-ingest shape of
@@ -1519,8 +1421,7 @@ object StreamOps {
     val benchGrams = bench.map(b =>
       Contamination.benchNgrams(b, textCol, decontamN)
         .localCheckpoint(eager = true))
-    val perBatch: (DataFrame, Long) => Unit = (batch0, bid) => BatchLedger.once(
-        batch0.sparkSession, ledgerTable, bid) {
+    startIngest(gated, checkpointDir, ledgerTable) { (batch0, bid) =>
       val spark = batch0.sparkSession
       batchShufflePartitions.foreach(n =>
         spark.conf.set("spark.sql.shuffle.partitions", n.toString))
@@ -1609,8 +1510,8 @@ object StreamOps {
       // crash anywhere between the first append and the ledger record
       // replays the entire body), so append ORDER within the body never
       // mattered; the ledger record still runs strictly AFTER every append
-      // (all writers joined, first failure rethrown before [[BatchLedger]]
-      // can record).
+      // (`concurrently` joins all writers and rethrows the first failure
+      // before [[BatchLedger]] can record).
       val appends = Seq[(String, () => Unit)](
         "sink append" -> (() =>
           survivors.drop(fpKey).write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -1635,17 +1536,8 @@ object StreamOps {
               sets.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
               bandRows.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
               lshIndexTable, idCol, lshNumBuckets))))
-      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val writers = appends.map { case (label, body) =>
-        new Thread(() => {
-          try { phase(label); body() } // job description is thread-local
-          catch { case t: Throwable => failures.add(t); () }
-        })
-      }
-      writers.foreach(_.start()); writers.foreach(_.join())
-      if (!failures.isEmpty) throw new RuntimeException(
-        s"curate b$bid append failed (${failures.size} of ${appends.size})",
-        failures.peek())
+      graft.SparkUtil.concurrently(spark,
+        appends.map { case (label, body) => (s"curate b$bid: $label", body) })
       } finally {
         spark.sparkContext.setJobDescription(null)
         // every per-batch checkpoint is superseded once the four appends
@@ -1658,8 +1550,6 @@ object StreamOps {
         ()
       }
     }
-    withCheckpoint(gated.writeStream.outputMode("append")
-      .foreachBatch(perBatch), checkpointDir).start()
   }
 
   /** Close the streaming funnel's cross-batch transitive-chain gap as a

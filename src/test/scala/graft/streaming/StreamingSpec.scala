@@ -1196,35 +1196,31 @@ class StreamingSpec extends SparkFunSuite {
     assert(!spark.catalog.tableExists("resid_pn_b_t"))
   }
 
-  test("SessionizeProcessor.foldBatch: interval sweep handles out-of-order events honestly") {
-    import graft.streaming.SessionizeProcessor.foldBatch
+  test("WatermarkSessionizeProcessor.sweep: interval sweep handles out-of-order events honestly") {
+    import graft.streaming.WatermarkSessionizeProcessor.sweep
     val gap = 10L
-    // in-order (the pinned 0-watermark gate regime): identical to the old fold
-    assert(foldBatch(None, Array(1L, 5L, 30L, 35L), gap) ==
-      (Seq((1L, 5L, 2L)), Some((30L, 35L, 2L))))
-    assert(foldBatch(Some((100L, 105L, 3L)), Array(110L, 200L), gap) ==
-      (Seq((100L, 110L, 4L)), Some((200L, 200L, 1L))))
-    // out-of-order WITHIN gap of the open session: merges and LOWERS start
+    def events(ts: Long*): Seq[(Long, Long, Long)] = ts.map(t => (t, t, 1L))
+    // in-order (the pinned 0-watermark gate regime)
+    assert(sweep(events(1L, 5L, 30L, 35L), gap) == List((1L, 5L, 2L), (30L, 35L, 2L)))
+    assert(sweep((100L, 105L, 3L) +: events(110L, 200L), gap) ==
+      List((100L, 110L, 4L), (200L, 200L, 1L)))
+    // out-of-order WITHIN gap of a stored interval: merges and LOWERS start
     // (the signed t - e0 <= gap fold kept start frozen at s0)
-    assert(foldBatch(Some((100L, 105L, 3L)), Array(95L), gap) ==
-      (Nil, Some((95L, 105L, 4L))))
-    // event INSIDE the open interval: count grows, boundaries unchanged
-    assert(foldBatch(Some((100L, 120L, 3L)), Array(110L), gap) ==
-      (Nil, Some((100L, 120L, 4L))))
-    // out-of-order far EARLIER than the open session: its own island,
-    // closed immediately (the signed fold silently merged it and never
-    // lowered session_start — the ADVICE divergence)
-    assert(foldBatch(Some((100L, 105L, 3L)), Array(50L), gap) ==
-      (Seq((50L, 50L, 1L)), Some((100L, 105L, 3L))))
+    assert(sweep((100L, 105L, 3L) +: events(95L), gap) == List((95L, 105L, 4L)))
+    // event INSIDE a stored interval: count grows, boundaries unchanged
+    assert(sweep((100L, 120L, 3L) +: events(110L), gap) == List((100L, 120L, 4L)))
+    // out-of-order far EARLIER than a stored interval: its own island
+    // (the signed fold silently merged it and never lowered session_start —
+    // the ADVICE divergence)
+    assert(sweep((100L, 105L, 3L) +: events(50L), gap) ==
+      List((50L, 50L, 1L), (100L, 105L, 3L)))
     // and a later in-batch event still merges with that EARLIER island,
-    // not with the open session (full sweep, not an anchor fold)
-    assert(foldBatch(Some((100L, 105L, 3L)), Array(50L, 55L), gap) ==
-      (Seq((50L, 55L, 2L)), Some((100L, 105L, 3L))))
-    // earlier island bridging INTO the open session collapses to one
-    assert(foldBatch(Some((100L, 105L, 3L)), Array(85L, 93L), gap) ==
-      (Nil, Some((85L, 105L, 5L))))
-    val (closed0, open0) = foldBatch(None, Array.empty[Long], gap)
-    assert(closed0.isEmpty && open0.isEmpty)
+    // not with the stored interval (full sweep, not an anchor fold)
+    assert(sweep((100L, 105L, 3L) +: events(50L, 55L), gap) ==
+      List((50L, 55L, 2L), (100L, 105L, 3L)))
+    // earlier island bridging INTO a stored interval collapses to one
+    assert(sweep((100L, 105L, 3L) +: events(85L, 93L), gap) == List((85L, 105L, 5L)))
+    assert(sweep(Nil, gap).isEmpty)
   }
 
   test("TrailingWindowCountProcessor.sweep: RANGE counts, tie peers, window eviction") {
@@ -1358,7 +1354,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(!isSealed(1000L, gap, (1000L + gap) * 1000L - 1L))
   }
 
-  test("bounded-disorder sessionize: stragglers LOWER session_start under a nonzero watermark; 0-second watermark diverges") {
+  test("bounded-disorder sessionize: stragglers LOWER session_start under a nonzero watermark, and under a 0-second one") {
     import org.apache.spark.sql.streaming.OutputMode
     val gap = 1800L
     // --- fixture property: the disorder REACHES the lowering path --------
@@ -1400,8 +1396,12 @@ class StreamingSpec extends SparkFunSuite {
     val oracle = graft.SparkEntry.queries("stream_tws_sessionize")(spark, dir)
       .collect().map(_.toSeq).toSeq
     assert(got == oracle, "disordered feed diverged from the batch sessions")
-    // --- negative control: a 0-second watermark DROPS the stragglers -----
-    // (proving the nonzero delay is load-bearing, not decorative)
+    // --- a 0-second watermark is exact on this feed too -----------------
+    // each straggler arrives one batch late, inside the engine's late-record
+    // lag (late rows are judged by the PREVIOUS batch's watermark), so none
+    // is dropped; it is folded before its batch's timers fire, and a session
+    // flushed in an earlier batch had end + gap below that batch's watermark,
+    // which lies below the straggler's own slice — out of its reach
     val (disordered, _) = StreamOps.eventsStreamBoundedDisorder(spark, dir, gap)
     val zero = graft.SparkUtil.withConfs(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
@@ -1418,8 +1418,7 @@ class StreamingSpec extends SparkFunSuite {
     val full = oracle.map {
       case Seq(u, _, n, ss, se) => Seq(u, ss, se, n)
     }.toSet
-    assert(zero != full,
-      "0-second watermark matched the full oracle — the stragglers were not actually late")
+    assert(zero == full, "0-second watermark diverged from the batch sessions")
   }
 
   test("watermark-paced sessionize: randomized bounded-disorder equivalence with the batch fold") {
