@@ -192,10 +192,7 @@ object ChangeLog {
     */
   def widenAggState(spark: org.apache.spark.sql.SparkSession,
       stateTable: String, aggCols: Seq[String]): Unit = {
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(stateTable))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"$stateTable is not a bucketed agg-state table"))
+    val spec = graft.sources.Sources.bucketSpecOf(spark, stateTable)
     val state = spark.table(stateTable)
     val missing = aggCols.filterNot(c => state.columns.contains(s"sum_$c"))
     if (missing.nonEmpty) {
@@ -222,10 +219,7 @@ object ChangeLog {
     */
   def narrowAggState(spark: org.apache.spark.sql.SparkSession,
       stateTable: String, keepAggCols: Seq[String]): Unit = {
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(stateTable))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"$stateTable is not a bucketed agg-state table"))
+    val spec = graft.sources.Sources.bucketSpecOf(spark, stateTable)
     val state = spark.table(stateTable)
     val stale = state.columns.filter(_.startsWith("sum_"))
       .map(_.stripPrefix("sum_")).filterNot(keepAggCols.contains)
@@ -252,10 +246,7 @@ object ChangeLog {
   def maintainAggTable(changes: DataFrame, stateTable: String, opCol: String,
       groupCol: String, aggCols: Seq[String]): Unit = {
     val spark = changes.sparkSession
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(stateTable))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"$stateTable is not a bucketed agg-state table"))
+    val spec = graft.sources.Sources.bucketSpecOf(spark, stateTable)
     val next = applyAggDeltas(spark.table(stateTable),
         aggDeltas(changes, opCol, groupCol, aggCols), groupCol, aggCols)
       // EAGER: the new state reads the table the swap below replaces — it

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -119,15 +120,18 @@ object Dedup {
     */
   def paragraphWriteBucketed(corpus: DataFrame, table: String, idCol: String,
       textCol: String, numBuckets: Int = 16): Unit = {
-    graft.sources.Sources.dropForOverwrite(corpus.sparkSession, table)
-    val hashed = explodeParagraphs(corpus, idCol, textCol)
+    Sources.dropForOverwrite(corpus.sparkSession, table)
+    Sources.writeBucketed(paragraphRows(corpus, idCol, textCol), table,
+      Seq("content_hash"), numBuckets)
+  }
+
+  /** The paragraph index rows of `docs`, for the build and the append. */
+  private def paragraphRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    explodeParagraphs(docs, idCol, textCol)
       .groupBy(md5(col("_para")).as("content_hash"))
       .agg(min(struct(col(idCol), col("_idx"))).as("_first"))
       .select(col("content_hash"), col("_first")(idCol).as("first_id"),
         col("_first")("_idx").as("first_idx"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      numBuckets)
-  }
 
   /** Incremental paragraph cleaning against a [[paragraphWriteBucketed]]
     * index: a batch document keeps a paragraph iff its hash is NOT in the
@@ -167,22 +171,8 @@ object Dedup {
     * [[exactAppendToIndex]].
     */
   def paragraphAppendToIndex(docs: DataFrame, table: String, idCol: String,
-      textCol: String): Unit = {
-    val spark = docs.sparkSession
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed paragraph index"))
-      .numBuckets
-    val hashed = explodeParagraphs(docs, idCol, textCol)
-      .groupBy(md5(col("_para")).as("content_hash"))
-      .agg(min(struct(col(idCol), col("_idx"))).as("_first"))
-      .select(col("content_hash"), col("_first")(idCol).as("first_id"),
-        col("_first")("_idx").as("first_idx"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      numBuckets, org.apache.spark.sql.SaveMode.Append)
-  }
+      textCol: String): Unit =
+    Sources.appendBucketed(paragraphRows(docs, idCol, textCol), table)
 
   /** The positional token-window front end of the span-dedup family: every
     * document's words (lowercased, whitespace-split, empties dropped) plus
@@ -287,20 +277,20 @@ object Dedup {
       textCol: String, windowTokens: Int = 50, numBuckets: Int = 16): Unit = {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     val spark = corpus.sparkSession
-    Seq(table, s"${table}_meta")
-      .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
-    Seq((windowTokens, numBuckets)).toDF("window_tokens", "num_buckets")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}_meta")
-    val hashed = spanWindows(spanWords(corpus, idCol, textCol), idCol, windowTokens)
+    Sources.dropForOverwrite(spark, table)
+    Sources.writeIndexMeta(spark, table, "window_tokens" -> windowTokens)
+    Sources.writeBucketed(spanRows(corpus, idCol, textCol, windowTokens), table,
+      Seq("content_hash"), numBuckets)
+  }
+
+  /** The span index rows of `docs`, for the build and the append. */
+  private def spanRows(docs: DataFrame, idCol: String, textCol: String,
+      windowTokens: Int): DataFrame =
+    spanWindows(spanWords(docs, idCol, textCol), idCol, windowTokens)
       .groupBy(col("_h").as("content_hash"))
       .agg(min(struct(col(idCol), col("_p"))).as("_first"))
       .select(col("content_hash"), col("_first")(idCol).as("first_id"),
         col("_first")("_p").as("first_pos"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      numBuckets)
-  }
 
   /** Incremental span removal against a [[spanWriteBucketed]] index: a
     * batch token survives unless covered by a window that is in the INDEX
@@ -313,8 +303,7 @@ object Dedup {
   def dedupSpansIncremental(batch: DataFrame, table: String, idCol: String,
       textCol: String): DataFrame = {
     val spark = batch.sparkSession
-    val windowTokens = spark.table(s"${table}_meta").collect().head
-      .getAs[Int]("window_tokens")
+    val windowTokens = Sources.indexMeta(spark, table).getAs[Int]("window_tokens")
     val docs = spanWords(batch, idCol, textCol)
       .localCheckpoint(eager = false)
     val windows = spanWindows(docs, idCol, windowTokens)
@@ -343,18 +332,9 @@ object Dedup {
     * Replay accretion compacts via [[compactIndex]]'s content-hash rule.
     */
   def spanAppendToIndex(docs: DataFrame, table: String, idCol: String,
-      textCol: String): Unit = {
-    val spark = docs.sparkSession
-    val meta = spark.table(s"${table}_meta").collect().head
-    val hashed = spanWindows(spanWords(docs, idCol, textCol), idCol,
-        meta.getAs[Int]("window_tokens"))
-      .groupBy(col("_h").as("content_hash"))
-      .agg(min(struct(col(idCol), col("_p"))).as("_first"))
-      .select(col("content_hash"), col("_first")(idCol).as("first_id"),
-        col("_first")("_p").as("first_pos"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      meta.getAs[Int]("num_buckets"), org.apache.spark.sql.SaveMode.Append)
-  }
+      textCol: String): Unit =
+    Sources.appendBucketed(spanRows(docs, idCol, textCol,
+      Sources.indexMeta(docs.sparkSession, table).getAs[Int]("window_tokens")), table)
 
   /** Near-dup pairs via winnowing fingerprints
     * ([[TextAnalysis.winnowHashes]], Schleimer 2003): documents sharing ANY
@@ -377,7 +357,7 @@ object Dedup {
     VectorFunctions.register(df.sparkSession)
     val fp = TextAnalysis.winnowHashes(df, idCol, textCol, k, w)
       .localCheckpoint(eager = false) // both sides of the self-join
-    val pruned = capBuckets(fp, Seq("fp_hash"), maxBucket)
+    val pruned = Sources.capBuckets(fp, Seq("fp_hash"), maxBucket)
     val cands = pruned.select(col("fp_hash"), col(idCol).as("id_a"))
       .join(pruned.select(col("fp_hash"), col(idCol).as("id_b")), Seq("fp_hash"))
       .filter(col("id_a") < col("id_b"))
@@ -407,20 +387,19 @@ object Dedup {
       textCol: String, k: Int = 4, w: Int = 4, numBuckets: Int = 16): Unit = {
     val spark = corpus.sparkSession
     VectorFunctions.register(spark)
-    Seq(table, s"${table}_sets", s"${table}_meta")
-      .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
-    Seq((k, w, numBuckets)).toDF("k", "w", "num_buckets")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}_meta")
-    graft.sources.Sources.writeBucketed(
-      TextAnalysis.winnowHashes(corpus, idCol, textCol, k, w), table,
-      Seq("fp_hash"), numBuckets)
-    graft.sources.Sources.writeBucketed(
-      corpus.select(col(idCol),
-        expr(s"graft_shingle_hashes($textCol, 1)").as("wset")),
-      s"${table}_sets", Seq(idCol), numBuckets)
+    Seq(table, s"${table}_sets").foreach(Sources.dropForOverwrite(spark, _))
+    Sources.writeIndexMeta(spark, table, "k" -> k, "w" -> w)
+    Sources.writeBucketed(TextAnalysis.winnowHashes(corpus, idCol, textCol, k, w),
+      table, Seq("fp_hash"), numBuckets)
+    Sources.writeBucketed(wordSets(corpus, idCol, textCol), s"${table}_sets",
+      Seq(idCol), numBuckets)
   }
+
+  /** The `_sets` rows of the winnow index: each document's sorted word-hash
+    * set, for the exact-jaccard verify.
+    */
+  private def wordSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), expr(s"graft_shingle_hashes($textCol, 1)").as("wset"))
 
   /** Contiguous-overlap pairs of an increment against a
     * [[winnowWriteBucketed]] index: `(batch_id, corpus_id, jaccard)` for
@@ -438,23 +417,17 @@ object Dedup {
       s"winnow threshold must be in (0, 1], got $threshold")
     val spark = batch.sparkSession
     VectorFunctions.register(spark)
-    import spark.implicits._
-    val (k, w) = spark.table(s"${table}_meta")
-      .select(col("k"), col("w")).as[(Int, Int)].head()
-    val corpusFp = spark.table(table)
-    val cappedCorpus = if (maxBucket >= Int.MaxValue) corpusFp else {
-      val ok = corpusFp.groupBy(col("fp_hash")).agg(count(lit(1)).as("_n"))
-        .filter(col("_n") <= maxBucket).select(col("fp_hash"))
-      corpusFp.join(ok, Seq("fp_hash"), "left_semi")
-    }
+    val meta = Sources.indexMeta(spark, table)
+    val (k, w) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"))
+    val cappedCorpus = Sources.capBuckets(spark.table(table), Seq("fp_hash"), maxBucket)
     val batchFp = TextAnalysis.winnowHashes(batch, idCol, textCol, k, w)
       .select(col("fp_hash"), col(idCol).as("batch_id"))
     val candidates = cappedCorpus
       .select(col("fp_hash"), col(idCol).as("corpus_id"))
       .join(batchFp, Seq("fp_hash"))
       .select(col("batch_id"), col("corpus_id")).distinct()
-    val batchSets = batch.select(col(idCol).as("batch_id"),
-      expr(s"graft_shingle_hashes($textCol, 1)").as("_wb"))
+    val batchSets = wordSets(batch, idCol, textCol)
+      .select(col(idCol).as("batch_id"), col("wset").as("_wb"))
     val corpusSets = spark.table(s"${table}_sets")
       .select(col(idCol).as("corpus_id"), col("wset").as("_wc"))
     candidates
@@ -484,18 +457,11 @@ object Dedup {
     * unattended when accretion exceeds 1.1).
     */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Sources.bucketSpecOf(spark, table)
     require(spec.bucketColumnNames == Seq("content_hash"),
       s"$table is not a content-hash index (bucketed on ${spec.bucketColumnNames})")
     compactIndex(spark, table)
   }
-
-  private def bucketSpecOf(spark: org.apache.spark.sql.SparkSession,
-      table: String): org.apache.spark.sql.catalyst.catalog.BucketSpec =
-    spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed index"))
 
   /** The compaction KEY of an index table, dispatched on its bucket spec —
     * what "one row per ___" means for each persisted-index family:
@@ -529,25 +495,6 @@ object Dedup {
       s"no compaction rule for an index bucketed on ${other.mkString(", ")}")
   }
 
-  /** Skew guard shared by every batch candidate self-join (minhash bands,
-    * simhash chunks, substring windows, winnow fingerprints): drop rows
-    * whose bucket — the given key columns — holds more than `maxBucket`
-    * rows. Aggregate + left-semi join-back, the same form the incremental
-    * probes use against their bucketed indexes: the groupBy partially
-    * aggregates map-side so its shuffle carries one row per BUCKET, where
-    * the count window this replaces exchanged and sorted every ROW.
-    * `maxBucket >= Int.MaxValue` skips the machinery entirely —
-    * oracle-parity runs pay no tautological join.
-    */
-  private def capBuckets(rows: DataFrame, keys: Seq[String],
-      maxBucket: Int): DataFrame =
-    if (maxBucket >= Int.MaxValue) rows
-    else {
-      val ok = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
-        .filter(col("_n") <= maxBucket).select(keys.map(col): _*)
-      rows.join(ok, keys, "left_semi")
-    }
-
   /** Compact ANY accreted index of the persisted family — exact/paragraph
     * content-hash tables, the minhash band table, winnow fingerprint and
     * substring window-hash tables, and their `_sets` verify sides: replayed
@@ -561,7 +508,7 @@ object Dedup {
     * scheduled from [[indexAccretion]] — never paid per append.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Sources.bucketSpecOf(spark, table)
     val idx = spark.table(table)
     val cols = idx.columns.toIndexedSeq
     val (keys, keepMin) = compactionKey(spec.bucketColumnNames, cols)
@@ -575,10 +522,9 @@ object Dedup {
             if (keys.contains(c)) col(c) else col(s"_p.$c").as(c)): _*)
       }
     val staged = s"${table}_compact"
-    graft.sources.Sources.dropForOverwrite(spark, staged)
-    graft.sources.Sources.writeBucketed(compacted, staged,
-      spec.bucketColumnNames, spec.numBuckets)
-    graft.sources.Sources.swapStaged(spark, staged, table)
+    Sources.dropForOverwrite(spark, staged)
+    Sources.writeBucketed(compacted, staged, spec.bucketColumnNames, spec.numBuckets)
+    Sources.swapStaged(spark, staged, table)
   }
 
   /** Accretion ratio of an index table: rows / distinct compaction keys
@@ -587,7 +533,7 @@ object Dedup {
     * schedules [[compactIndex]] when this crosses its tolerance (1.1).
     */
   def indexAccretion(spark: org.apache.spark.sql.SparkSession, table: String): Double = {
-    val spec = bucketSpecOf(spark, table)
+    val spec = Sources.bucketSpecOf(spark, table)
     val idx = spark.table(table)
     val (keys, _) = compactionKey(spec.bucketColumnNames, idx.columns.toIndexedSeq)
     val row = idx.agg(count(lit(1)).as("_rows"),
@@ -604,13 +550,14 @@ object Dedup {
     */
   def exactWriteBucketed(corpus: DataFrame, table: String, idCol: String,
       keyCol: String, numBuckets: Int = 16): Unit = {
-    graft.sources.Sources.dropForOverwrite(corpus.sparkSession, table)
-    val hashed = corpus
-      .groupBy(md5(col(keyCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("id"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      numBuckets)
+    Sources.dropForOverwrite(corpus.sparkSession, table)
+    Sources.writeBucketed(exactRows(corpus, idCol, keyCol), table,
+      Seq("content_hash"), numBuckets)
   }
+
+  /** The exact index rows of `docs`, for the build and the append. */
+  private def exactRows(docs: DataFrame, idCol: String, keyCol: String): DataFrame =
+    docs.groupBy(md5(col(keyCol)).as("content_hash")).agg(min(col(idCol)).as("id"))
 
   /** New-batch exact dedup against a [[exactWriteBucketed]] index: returns
     * the batch rows whose content is NOT already in the corpus, collapsed to
@@ -639,22 +586,8 @@ object Dedup {
     * hashes are collapsed within `docs` but NOT re-checked against the index.
     */
   def exactAppendToIndex(docs: DataFrame, table: String, idCol: String,
-      keyCol: String): Unit = {
-    val spark = docs.sparkSession
-    // parse, don't wrap: a qualified name like "db.idx" must resolve as a
-    // 2-part identifier (TableIdentifier(raw) would look up "`db.idx`")
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed exact-dedup index"))
-      .numBuckets
-    val hashed = docs
-      .groupBy(md5(col(keyCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("id"))
-    graft.sources.Sources.writeBucketed(hashed, table, Seq("content_hash"),
-      numBuckets, org.apache.spark.sql.SaveMode.Append)
-  }
+      keyCol: String): Unit =
+    Sources.appendBucketed(exactRows(docs, idCol, keyCol), table)
 
   /** Incremental SEMANTIC dedup against a persisted [[Similarity.ivfWriteBucketed]]
     * index: each new vector is assigned to its argmax cell with the
@@ -691,22 +624,7 @@ object Dedup {
       .filter(col("_bnorm") > 0) // zero-norm guard — see Similarity.bruteForceTopK
       .select(col("_cell"), col(idCol).as("batch_id"), col(vecCol).as("_bv"),
         col("_bnorm"))
-    val indexed = spark.table(table)
-    val capped =
-      if (maxCell >= Int.MaxValue) indexed
-      else {
-        // groupBy on the bucketing key: aggregates within buckets, no
-        // exchange; the count join back is bucketed-to-bucketed, also free
-        // (same form as minhashDedupIncremental's cap — the window variant
-        // would sort the full index scan per partition)
-        val smallEnough = indexed
-          .groupBy(col("_cell"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxCell)
-          .select(col("_cell"))
-        indexed.join(smallEnough, Seq("_cell"))
-      }
-    capped
+    Sources.capBuckets(spark.table(table), Seq("_cell"), maxCell)
       .join(probes, "_cell")
       .select(col("batch_id"), col(idCol).as("corpus_id"),
         (expr(s"graft_vec_dot($vecCol, _bv)") / (col("_cnorm") * col("_bnorm")))
@@ -743,7 +661,7 @@ object Dedup {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     VectorFunctions.register(df.sparkSession)
     val rows = windowRows(df, idCol, textCol, windowTokens)
-    val capped = capBuckets(rows, Seq("h"), maxBucket)
+    val capped = Sources.capBuckets(rows, Seq("h"), maxBucket)
       .localCheckpoint(eager = false) // both sides of the self-join
     capped.select(col("h"), col(idCol).as("id_a"))
       .join(capped.select(col("h"), col(idCol).as("id_b")), "h")
@@ -777,14 +695,10 @@ object Dedup {
     require(windowTokens >= 1, s"windowTokens must be >= 1, got $windowTokens")
     val spark = corpus.sparkSession
     VectorFunctions.register(spark)
-    Seq(table, s"${table}_meta")
-      .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
-    Seq((windowTokens, numBuckets)).toDF("window_tokens", "num_buckets")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}_meta")
-    graft.sources.Sources.writeBucketed(
-      windowRows(corpus, idCol, textCol, windowTokens), table, Seq("h"), numBuckets)
+    Sources.dropForOverwrite(spark, table)
+    Sources.writeIndexMeta(spark, table, "window_tokens" -> windowTokens)
+    Sources.writeBucketed(windowRows(corpus, idCol, textCol, windowTokens), table,
+      Seq("h"), numBuckets)
   }
 
   /** Shared-substring report of a batch against a [[substringWriteBucketed]]
@@ -805,23 +719,11 @@ object Dedup {
       textCol: String, maxBucket: Int = 100): DataFrame = {
     val spark = batch.sparkSession
     VectorFunctions.register(spark)
-    val windowTokens = spark.table(s"${table}_meta").collect().head
-      .getAs[Int]("window_tokens")
+    val windowTokens = Sources.indexMeta(spark, table).getAs[Int]("window_tokens")
     val batchRows = windowRows(batch, idCol, textCol, windowTokens)
       .select(col("h"), col(idCol).as("batch_id"))
-    val corpusRows = spark.table(table)
-    val capped =
-      if (maxBucket >= Int.MaxValue) corpusRows
-      else {
-        // groupBy on the bucketing key: aggregates within buckets, no
-        // exchange; the count join back is bucketed-to-bucketed, also free
-        val smallEnough = corpusRows
-          .groupBy(col("h")).agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucket)
-          .select(col("h"))
-        corpusRows.join(smallEnough, Seq("h"))
-      }
-    capped.select(col("h"), col(idCol).as("corpus_id"))
+    Sources.capBuckets(spark.table(table), Seq("h"), maxBucket)
+      .select(col("h"), col(idCol).as("corpus_id"))
       .join(batchRows, "h")
       .groupBy(col("batch_id"), col("corpus_id"))
       .agg(count(lit(1)).as("n_shared"))
@@ -836,11 +738,8 @@ object Dedup {
       textCol: String): Unit = {
     val spark = docs.sparkSession
     VectorFunctions.register(spark)
-    val meta = spark.table(s"${table}_meta").collect().head
-    graft.sources.Sources.writeBucketed(
-      windowRows(docs, idCol, textCol, meta.getAs[Int]("window_tokens")),
-      table, Seq("h"), meta.getAs[Int]("num_buckets"),
-      org.apache.spark.sql.SaveMode.Append)
+    Sources.appendBucketed(windowRows(docs, idCol, textCol,
+      Sources.indexMeta(spark, table).getAs[Int]("window_tokens")), table)
   }
 
   /** MinHash-LSH candidate pairs (idA < idB), verified with exact Jaccard
@@ -906,10 +805,10 @@ object Dedup {
       threshold: Double = 0.7): DataFrame = {
     VectorFunctions.register(sets.sparkSession)
     // cap pathological buckets (boilerplate shingle collisions) — skew
-    // guard, shared [[capBuckets]] form. lazy checkpoint: `buckets` is both
-    // sides of the self-join below, and without it the banding explode
-    // (+ cap) runs twice
-    val buckets = capBuckets(bandRows, Seq("band", "band_hash"), maxBucket)
+    // guard, shared [[Sources.capBuckets]] form. lazy checkpoint: `buckets`
+    // is both sides of the self-join below, and without it the banding
+    // explode (+ cap) runs twice
+    val buckets = Sources.capBuckets(bandRows, Seq("band", "band_hash"), maxBucket)
       .localCheckpoint(eager = false)
 
     // candidate id pairs, deduped BEFORE the (expensive) exact verify so a
@@ -960,21 +859,16 @@ object Dedup {
       rowsPerBand: Int = 4, numBuckets: Int = 16): Unit = {
     val spark = corpus.sparkSession
     VectorFunctions.register(spark)
-    Seq(table, s"${table}_sets", s"${table}_meta")
-      .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
-    Seq((shingleSize, bands, rowsPerBand, numBuckets))
-      .toDF("shingle_size", "bands", "rows_per_band", "num_buckets")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}_meta")
+    Seq(table, s"${table}_sets").foreach(Sources.dropForOverwrite(spark, _))
+    Sources.writeIndexMeta(spark, table, "shingle_size" -> shingleSize,
+      "bands" -> bands, "rows_per_band" -> rowsPerBand)
     // checkpoint: the shingle scan (the expensive map work) feeds both tables
     val sets = corpus
       .select(col(idCol), expr(s"graft_shingle_hashes($textCol, $shingleSize)").as("sh"))
       .localCheckpoint(eager = false)
-    graft.sources.Sources.writeBucketed(
-      bandRowsOf(sets, idCol, bands, rowsPerBand), table,
+    Sources.writeBucketed(bandRowsOf(sets, idCol, bands, rowsPerBand), table,
       Seq("band", "band_hash"), numBuckets)
-    graft.sources.Sources.writeBucketed(sets, s"${table}_sets", Seq(idCol), numBuckets)
+    Sources.writeBucketed(sets, s"${table}_sets", Seq(idCol), numBuckets)
   }
 
   /** Dedup an increment against a [[minhashWriteBucketed]] index: emits
@@ -992,15 +886,14 @@ object Dedup {
     * O(batch + candidates), which is what makes per-increment dedup against
     * a full-history corpus affordable.
     */
-  /** (shingleSize, bands, rowsPerBand, numBuckets) from `<table>_meta`.
+  /** (shingleSize, bands, rowsPerBand) from `<table>_meta`.
     * `private[graft]`: the streaming funnel pins its batch-local banding
     * parameters to the index it probes, so one meta row governs both.
     */
   private[graft] def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Int, Int, Int, Int) = {
-    val m = spark.table(s"${table}_meta").collect().head
-    (m.getAs[Int]("shingle_size"), m.getAs[Int]("bands"),
-      m.getAs[Int]("rows_per_band"), m.getAs[Int]("num_buckets"))
+      table: String): (Int, Int, Int) = {
+    val m = Sources.indexMeta(spark, table)
+    (m.getAs[Int]("shingle_size"), m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))
   }
 
   /** Append new docs to a [[minhashWriteBucketed]] index in place: their
@@ -1035,27 +928,23 @@ object Dedup {
       readIndexMeta(sets.sparkSession, table))
 
   private def appendSetsWithMeta(sets: DataFrame, table: String, idCol: String,
-      meta: (Int, Int, Int, Int)): Unit = {
-    val (_, bands, rowsPerBand, numBuckets) = meta
+      meta: (Int, Int, Int)): Unit = {
+    val (_, bands, rowsPerBand) = meta
     minhashAppendToIndexFromBandRows(sets,
-      bandRowsOf(sets, idCol, bands, rowsPerBand), table, idCol, numBuckets)
+      bandRowsOf(sets, idCol, bands, rowsPerBand), table)
   }
 
   /** [[minhashAppendToIndexFromSets]] over PRECOMPUTED band rows (banded
     * from the SAME `sets` frame with the index's meta parameters — the
     * caller's responsibility, normally met by deriving both from one shared
-    * [[bandRowsOf]] checkpoint). `numBuckets` must come from the index's
-    * meta table, so the append can never be laid out differently from it.
+    * [[bandRowsOf]] checkpoint). Both tables append in their own catalog
+    * layout.
     */
   private[graft] def minhashAppendToIndexFromBandRows(sets: DataFrame,
-      bandRows: DataFrame, table: String, idCol: String,
-      numBuckets: Int): Unit = {
+      bandRows: DataFrame, table: String): Unit = {
     VectorFunctions.register(sets.sparkSession)
-    val append = org.apache.spark.sql.SaveMode.Append
-    graft.sources.Sources.writeBucketed(bandRows, table,
-      Seq("band", "band_hash"), numBuckets, append)
-    graft.sources.Sources.writeBucketed(sets, s"${table}_sets", Seq(idCol),
-      numBuckets, append)
+    Sources.appendBucketed(bandRows, table)
+    Sources.appendBucketed(sets, s"${table}_sets")
   }
 
   def minhashDedupIncremental(batch: DataFrame, table: String, idCol: String,
@@ -1082,8 +971,8 @@ object Dedup {
 
   private def probeSetsWithMeta(batchSets: DataFrame, table: String,
       idCol: String, maxBucket: Int, threshold: Double,
-      meta: (Int, Int, Int, Int)): DataFrame = {
-    val (_, bands, rowsPerBand, _) = meta
+      meta: (Int, Int, Int)): DataFrame = {
+    val (_, bands, rowsPerBand) = meta
     probeSetsWithBands(batchSets,
       bandRowsOf(batchSets, idCol, bands, rowsPerBand), table, idCol,
       maxBucket, threshold)
@@ -1101,20 +990,9 @@ object Dedup {
     VectorFunctions.register(spark)
     val batchBands = bandRows
       .select(col(idCol).as("batch_id"), col("band"), col("band_hash"))
-    val corpusBands = spark.table(table)
-    val capped =
-      if (maxBucket >= Int.MaxValue) corpusBands
-      else {
-        // groupBy on the bucketing keys: aggregates within buckets, no
-        // exchange; the count join back is bucketed-to-bucketed, also free
-        val smallEnough = corpusBands
-          .groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucket)
-          .select(col("band"), col("band_hash"))
-        corpusBands.join(smallEnough, Seq("band", "band_hash"))
-      }
-    val candidates = capped.join(batchBands, Seq("band", "band_hash"))
+    val candidates = Sources.capBuckets(spark.table(table), Seq("band", "band_hash"),
+        maxBucket)
+      .join(batchBands, Seq("band", "band_hash"))
       .select(col("batch_id"), col(idCol).as("corpus_id"))
       .distinct()
     candidates
@@ -1127,26 +1005,19 @@ object Dedup {
   }
 
   /** Append new docs' winnow fingerprints and word sets to a
-    * [[winnowWriteBucketed]] index in place ((k, w) and the bucket count
-    * from `<table>_meta`, same layout), completing the build/probe/append
-    * symmetry the other persisted families have: each batch's survivors
-    * extend the index the next batch probes.
+    * [[winnowWriteBucketed]] index in place ((k, w) from `<table>_meta`,
+    * same layout), completing the build/probe/append symmetry the other
+    * persisted families have: each batch's survivors extend the index the
+    * next batch probes.
     */
   def winnowAppendToIndex(docs: DataFrame, table: String, idCol: String,
       textCol: String): Unit = {
     val spark = docs.sparkSession
     VectorFunctions.register(spark)
-    import spark.implicits._
-    val (k, w, numBuckets) = spark.table(s"${table}_meta")
-      .select(col("k"), col("w"), col("num_buckets")).as[(Int, Int, Int)].head()
-    val append = org.apache.spark.sql.SaveMode.Append
-    graft.sources.Sources.writeBucketed(
-      TextAnalysis.winnowHashes(docs, idCol, textCol, k, w), table,
-      Seq("fp_hash"), numBuckets, append)
-    graft.sources.Sources.writeBucketed(
-      docs.select(col(idCol),
-        expr(s"graft_shingle_hashes($textCol, 1)").as("wset")),
-      s"${table}_sets", Seq(idCol), numBuckets, append)
+    val meta = Sources.indexMeta(spark, table)
+    Sources.appendBucketed(TextAnalysis.winnowHashes(docs, idCol, textCol,
+      meta.getAs[Int]("k"), meta.getAs[Int]("w")), table)
+    Sources.appendBucketed(wordSets(docs, idCol, textCol), s"${table}_sets")
   }
 
   /** 64-bit SimHash over the word multiset of `text` — one map pass, no
@@ -1181,10 +1052,10 @@ object Dedup {
       .select(col(idCol), col("simhash"), posexplode(
         expr(s"transform(sequence(0, ${chunks - 1}), c -> shiftrightunsigned(simhash, c * $width) & $chunkMask)"))
         .as(Seq("chunk", "chunk_val")))
-    // cap pathological buckets — shared [[capBuckets]] form. lazy
+    // cap pathological buckets — shared [[Sources.capBuckets]] form. lazy
     // checkpoint: both sides of the self-join read this, so the sketch
     // pass (+ cap) runs once
-    val buckets = capBuckets(sk, Seq("chunk", "chunk_val"), maxBucket)
+    val buckets = Sources.capBuckets(sk, Seq("chunk", "chunk_val"), maxBucket)
       .localCheckpoint(eager = false)
     val a = buckets.select(col("chunk"), col("chunk_val"), col(idCol).as("id_a"), col("simhash").as("sh_a"))
     val b = buckets.select(col("chunk"), col("chunk_val"), col(idCol).as("id_b"), col("simhash").as("sh_b"))

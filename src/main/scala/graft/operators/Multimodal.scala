@@ -429,23 +429,17 @@ object Multimodal {
       payloadCol: String, minSize: Int = 16, maxSize: Int = 64,
       maskBits: Int = 4, numBuckets: Int = 16): Unit = {
     val spark = media.sparkSession
-    Seq(table, s"${table}_meta")
-      .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
-    Seq((minSize, maxSize, maskBits, numBuckets))
-      .toDF("min_size", "max_size", "mask_bits", "num_buckets")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${table}_meta")
+    graft.sources.Sources.dropForOverwrite(spark, table)
+    graft.sources.Sources.writeIndexMeta(spark, table, "min_size" -> minSize,
+      "max_size" -> maxSize, "mask_bits" -> maskBits)
     graft.sources.Sources.writeBucketed(
       chunkFpRows(media, idCol, payloadCol, minSize, maxSize, maskBits),
       table, Seq("chunk_fp"), numBuckets)
   }
 
-  private def chunkIndexMeta(spark: SparkSession,
-      table: String): (Int, Int, Int, Int) = {
-    val m = spark.table(s"${table}_meta").collect().head
-    (m.getAs[Int]("min_size"), m.getAs[Int]("max_size"),
-      m.getAs[Int]("mask_bits"), m.getAs[Int]("num_buckets"))
+  private def chunkIndexMeta(spark: SparkSession, table: String): (Int, Int, Int) = {
+    val m = graft.sources.Sources.indexMeta(spark, table)
+    (m.getAs[Int]("min_size"), m.getAs[Int]("max_size"), m.getAs[Int]("mask_bits"))
   }
 
   /** Chunk-containment evidence of a new batch against a
@@ -478,7 +472,7 @@ object Multimodal {
       payloadCol: String, threshold: Double,
       maxPostings: Int = Int.MaxValue): DataFrame = {
     val spark = batch.sparkSession
-    val (minSize, maxSize, maskBits, _) = chunkIndexMeta(spark, table)
+    val (minSize, maxSize, maskBits) = chunkIndexMeta(spark, table)
     // the batch denominator |distinct fps| is the fp array's size, read in
     // the same row BEFORE the explode — no window, no exchange
     val bfp = chunkFingerprints(batch, idCol, payloadCol, minSize, maxSize,
@@ -488,15 +482,8 @@ object Multimodal {
           .as("_fps"))
       .select(col("id"), size(col("_fps")).as("_n"),
         explode(col("_fps")).as("chunk_fp"))
-    val index0 = spark.table(table)
-    val index =
-      if (maxPostings >= Int.MaxValue) index0
-      else {
-        val ok = index0.groupBy(col("chunk_fp"))
-          .agg(count(lit(1)).as("_p")).filter(col("_p") <= maxPostings)
-          .select(col("chunk_fp"))
-        index0.join(ok, Seq("chunk_fp"), "left_semi")
-      }
+    val index = graft.sources.Sources.capBuckets(spark.table(table), Seq("chunk_fp"),
+      maxPostings)
     // countDistinct, not count: an accreted index (replayed appends before
     // the next compaction) duplicates (chunk_fp, id) rows, and a plain count
     // would push containment past 1.0 — the probe stays correct under
@@ -510,7 +497,7 @@ object Multimodal {
   }
 
   /** Append new payloads' chunk fps to a [[chunkWriteBucketed]] index in
-    * place (parameters and bucket layout from `<table>_meta`), so the next
+    * place (parameters from `<table>_meta`, same bucket layout), so the next
     * [[chunkPairsIncremental]] batch probes the original corpus plus every
     * earlier batch's survivors. Replayed appends accrete duplicate rows;
     * [[Dedup.compactIndex]] collapses them (full-row distinct — many ids
@@ -518,11 +505,8 @@ object Multimodal {
     */
   def chunkAppendToIndex(media: DataFrame, table: String, idCol: String,
       payloadCol: String): Unit = {
-    val spark = media.sparkSession
-    val (minSize, maxSize, maskBits, numBuckets) = chunkIndexMeta(spark, table)
-    graft.sources.Sources.writeBucketed(
-      chunkFpRows(media, idCol, payloadCol, minSize, maxSize, maskBits),
-      table, Seq("chunk_fp"), numBuckets,
-      org.apache.spark.sql.SaveMode.Append)
+    val (minSize, maxSize, maskBits) = chunkIndexMeta(media.sparkSession, table)
+    graft.sources.Sources.appendBucketed(
+      chunkFpRows(media, idCol, payloadCol, minSize, maxSize, maskBits), table)
   }
 }

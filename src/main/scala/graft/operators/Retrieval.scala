@@ -105,9 +105,9 @@ object Retrieval {
     * distinct (term, document) pair, BUCKETED by `term` and sorted within
     * buckets, so a probe's posting-side aggregates are exchange-free and
     * its query-vocabulary filter prunes both buckets and parquet row
-    * groups. `<table>_meta` pins the scoring parameters (k1, b) and the
-    * bucket count; `<table>_stats` holds one `(n_docs, sum_dl, batch_fp)`
-    * row per build/append — N and avgdl are the SUM of that tiny table, so
+    * groups. `<table>_meta` pins the scoring parameters (k1, b);
+    * `<table>_stats` holds one `(n_docs, sum_dl, batch_fp)` row per
+    * build/append — N and avgdl are the SUM of that tiny table, so
     * appends maintain corpus statistics without ever re-reading the corpus
     * (`batch_fp`, the bit-XOR of per-doc id hashes — order-free, closed
     * under the 64-bit domain, self-inverse, same rationale as the Sampling
@@ -125,28 +125,25 @@ object Retrieval {
       textCol: String, k1: Double = 1.2, b: Double = 0.75,
       numBuckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    Seq(table, s"${table}_stats", s"${table}_meta")
+    Seq(table, s"${table}_stats")
       .foreach(graft.sources.Sources.dropForOverwrite(spark, _))
-    import spark.implicits._
     // the 1-row meta write is independent of the corpus-sized posting pass
     // — overlap them (guide §2.6) instead of paying its commit latency
     // up front serially
     graft.SparkUtil.concurrently(spark, Seq(
       "bm25 meta write" -> (() =>
-        Seq((k1, b, numBuckets)).toDF("k1", "b", "num_buckets")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .saveAsTable(s"${table}_meta")),
+        graft.sources.Sources.writeIndexMeta(spark, table, "k1" -> k1, "b" -> b)),
       "bm25 postings+stats build" -> (() =>
-        writePostings(docs, table, idCol, textCol, numBuckets,
+        writePostings(docs, table, idCol, textCol,
+          graft.sources.Sources.writeBucketed(_, table, Seq("term"), numBuckets),
           org.apache.spark.sql.SaveMode.Overwrite))))
   }
 
   /** Append new documents' postings + a stats delta row to a
-    * [[bm25WriteBucketed]] index in place (bucket layout from
-    * `<table>_meta`), completing the family's build/probe/append symmetry:
-    * each batch's survivors extend the index the next probe reads, and N /
-    * avgdl follow from the appended stats row — no corpus re-read, no
-    * index rewrite. The 'new documents only' contract is ENFORCED, not
+    * [[bm25WriteBucketed]] index in place (same bucket layout), completing
+    * the family's build/probe/append symmetry: each batch's survivors
+    * extend the index the next probe reads, and N / avgdl follow from the
+    * appended stats row — no corpus re-read, no index rewrite. The 'new documents only' contract is ENFORCED, not
     * prose: the batch is anti-joined against the ids already in the index
     * before anything is written (the Sampling-checksum discipline EpochOps
     * applies to exact-dedup survivors) — without it a replayed doc_id would
@@ -161,19 +158,21 @@ object Retrieval {
   def bm25AppendToIndex(docs: DataFrame, table: String, idCol: String,
       textCol: String): Unit = {
     val spark = docs.sparkSession
-    val numBuckets = spark.table(s"${table}_meta")
-      .collect().head.getAs[Int]("num_buckets")
     val already = spark.table(table).select(col(idCol))
       .join(broadcast(docs.select(col(idCol)).distinct()),
         Seq(idCol), "left_semi")
       .distinct()
     val fresh = docs.join(already, Seq(idCol), "left_anti")
-    writePostings(fresh, table, idCol, textCol, numBuckets,
+    writePostings(fresh, table, idCol, textCol,
+      graft.sources.Sources.appendBucketed(_, table),
       org.apache.spark.sql.SaveMode.Append)
   }
 
+  /** Write `docs`' postings through `writeRows` (the bucketed build or
+    * append), then their stats row to `<table>_stats` in `mode`.
+    */
   private def writePostings(docs: DataFrame, table: String, idCol: String,
-      textCol: String, numBuckets: Int,
+      textCol: String, writeRows: DataFrame => Unit,
       mode: org.apache.spark.sql.SaveMode): Unit = {
     // EAGER checkpoint: the tokenize scan feeds the posting aggregation AND
     // the 1-row stats aggregate; the postings WRITE and the stats COMPUTE
@@ -197,10 +196,8 @@ object Retrieval {
         new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.Row]()
       graft.SparkUtil.concurrently(spark, Seq(
         "bm25 postings write" -> (() =>
-          graft.sources.Sources.writeBucketed(
-            toks.groupBy(col("term"), col(idCol))
-              .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")),
-            table, Seq("term"), numBuckets, mode)),
+          writeRows(toks.groupBy(col("term"), col(idCol))
+            .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")))),
         "bm25 stats agg" -> (() => statsRow.set(statsAgg.head()))))
       // postings committed (a failure above rethrows before this line);
       // the 1-row stats append is the already-computed row, commit only
@@ -229,7 +226,7 @@ object Retrieval {
   def bm25TopKFromIndex(queries: DataFrame, table: String, idCol: String,
       k: Int): DataFrame = {
     val spark = queries.sparkSession
-    val meta = spark.table(s"${table}_meta").collect().head
+    val meta = graft.sources.Sources.indexMeta(spark, table)
     val (k1, b) = (meta.getAs[Double]("k1"), meta.getAs[Double]("b"))
     val qTerms = queries.select(col("query_id"), col("term")).distinct()
     val terms = qTerms.select(col("term")).distinct()

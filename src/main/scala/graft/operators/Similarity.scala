@@ -158,14 +158,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 
-  /** Materialize the IVF index as storage: the corpus with its `_cell`
-    * assignment and precomputed norm, written as a table BUCKETED by `_cell`,
-    * plus a `<table>_centroids` side table holding the quantizer. This is the
-    * 100 TB ANN deployment shape: assignment and norms are paid once at write
-    * time, and every later query batch reads only its probed cells' buckets
-    * (bucket pruning at the file scan — see [[ivfTopKFromBucketed]]), i.e.
-    * ~nprobe/nlist of the data instead of a full corpus scan per batch.
-    */
   /** Drop `table` and clear its leftover warehouse location. With an
     * in-memory catalog (a fresh session, no persistent metastore) a managed
     * table written by an earlier JVM is unknown to the catalog but its
@@ -175,6 +167,14 @@ object Similarity {
   private def dropForOverwrite(spark: SparkSession, table: String): Unit =
     graft.sources.Sources.dropForOverwrite(spark, table)
 
+  /** Materialize the IVF index as storage: the corpus with its `_cell`
+    * assignment and precomputed norm, written as a table BUCKETED by `_cell`,
+    * plus a `<table>_centroids` side table holding the quantizer. This is the
+    * 100 TB ANN deployment shape: assignment and norms are paid once at write
+    * time, and every later query batch reads only its probed cells' buckets
+    * (bucket pruning at the file scan — see [[ivfTopKFromBucketed]]), i.e.
+    * ~nprobe/nlist of the data instead of a full corpus scan per batch.
+    */
   def ivfWriteBucketed(corpus: DataFrame, table: String, idCol: String,
       vecCol: String, nlist: Int = 64, numBuckets: Int = 16): Unit = {
     val spark = corpus.sparkSession
@@ -189,11 +189,8 @@ object Similarity {
       .toDF("cell", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${table}_centroids")
-    val assigned = corpus
-      .withColumn("_cell", element_at(cellsCol(vecCol, centroids, 1), 1))
-      .withColumn("_cnorm", sqrt(expr(s"graft_vec_dot($vecCol, $vecCol)")))
-      .filter(col("_cnorm") > 0) // zero-norm guard — see bruteForceTopK
-    graft.sources.Sources.writeBucketed(assigned, table, Seq("_cell"), numBuckets)
+    graft.sources.Sources.writeBucketed(ivfRows(corpus, vecCol, centroids), table,
+      Seq("_cell"), numBuckets)
   }
 
   /** The persisted quantizer of a [[ivfWriteBucketed]] index, cell-ordered.
@@ -223,22 +220,20 @@ object Similarity {
       vecCol: String): Unit = {
     val spark = newVecs.sparkSession
     VectorFunctions.register(spark)
-    val centroids = readCentroids(spark, table)
-    // parse, don't wrap: a qualified name like "db.idx" must resolve as a
-    // 2-part identifier (TableIdentifier(raw) would look up "`db.idx`")
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed IVF index"))
-      .numBuckets
-    val assigned = newVecs
+    graft.sources.Sources.appendBucketed(
+      ivfRows(newVecs, vecCol, readCentroids(spark, table)), table)
+  }
+
+  /** IVF index rows: `corpus` with its argmax `_cell` under `centroids` and
+    * its norm `_cnorm` — the build, the append and the rebuild all write
+    * these.
+    */
+  private def ivfRows(corpus: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    corpus
       .withColumn("_cell", element_at(cellsCol(vecCol, centroids, 1), 1))
       .withColumn("_cnorm", sqrt(expr(s"graft_vec_dot($vecCol, $vecCol)")))
       .filter(col("_cnorm") > 0) // zero-norm guard — see bruteForceTopK
-    graft.sources.Sources.writeBucketed(assigned, table, Seq("_cell"),
-      numBuckets, org.apache.spark.sql.SaveMode.Append)
-  }
 
   /** Re-quantize a [[ivfWriteBucketed]] index in place — the ACTUATOR for
     * [[ivfCellStats]]' rebuild decision. Centroids are re-seeded from the
@@ -265,12 +260,7 @@ object Similarity {
   def ivfRebuild(spark: SparkSession, table: String, idCol: String,
       vecCol: String, nlist: Int = 0): Unit = {
     VectorFunctions.register(spark)
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed IVF index"))
-      .numBuckets
+    val numBuckets = graft.sources.Sources.bucketSpecOf(spark, table).numBuckets
     val n = if (nlist > 0) nlist else readCentroids(spark, table).length
     val corpus = spark.table(table).drop("_cell", "_cnorm")
     val centroids = seedCentroids(corpus, idCol, vecCol, n)
@@ -283,11 +273,8 @@ object Similarity {
       .toDF("cell", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(stagedCentroids)
-    val assigned = corpus
-      .withColumn("_cell", element_at(cellsCol(vecCol, centroids, 1), 1))
-      .withColumn("_cnorm", sqrt(expr(s"graft_vec_dot($vecCol, $vecCol)")))
-      .filter(col("_cnorm") > 0) // zero-norm guard — see bruteForceTopK
-    graft.sources.Sources.writeBucketed(assigned, staged, Seq("_cell"), numBuckets)
+    graft.sources.Sources.writeBucketed(ivfRows(corpus, vecCol, centroids), staged,
+      Seq("_cell"), numBuckets)
     graft.sources.Sources.swapStaged(spark, staged, table)
     graft.sources.Sources.swapStaged(spark, stagedCentroids, s"${table}_centroids")
   }
@@ -529,7 +516,6 @@ object Similarity {
       centroidsTable: String, codebooksTable: String, idCol: String,
       vecCol: String, centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], numBuckets: Int): Unit = {
-    import org.apache.spark.sql.graft.GraftSqlShims.{columnOf, expressionOf}
     val spark = corpus.sparkSession
     import spark.implicits._
     centroids.toSeq.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
@@ -541,12 +527,9 @@ object Similarity {
     }.toSeq.toDF("subspace", "code", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(codebooksTable)
-    val assigned = corpus
-      .filter(sqrt(expr(s"graft_vec_dot($vecCol, $vecCol)")) > 0)
-      .select(col(idCol),
-        element_at(cellsCol(vecCol, centroids, 1), 1).as("_cell"),
-        columnOf(graft.functions.PqCodes(expressionOf(col(vecCol)), codebooks)).as("_codes"))
-    graft.sources.Sources.writeBucketed(assigned, table, Seq("_cell"), numBuckets)
+    graft.sources.Sources.writeBucketed(
+      ivfpqRows(corpus, idCol, vecCol, centroids, codebooks), table, Seq("_cell"),
+      numBuckets)
   }
 
   /** Append new vectors to an [[ivfpqWriteBucketed]] index in place: the
@@ -560,24 +543,23 @@ object Similarity {
     */
   def ivfpqAppendToIndex(newVecs: DataFrame, table: String, idCol: String,
       vecCol: String): Unit = {
-    import org.apache.spark.sql.graft.GraftSqlShims.{columnOf, expressionOf}
     val spark = newVecs.sparkSession
     VectorFunctions.register(spark)
-    val centroids = readCentroids(spark, table)
-    val codebooks = readCodebooks(spark, table)
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed IVF-PQ index"))
-      .numBuckets
-    val assigned = newVecs
+    graft.sources.Sources.appendBucketed(ivfpqRows(newVecs, idCol, vecCol,
+      readCentroids(spark, table), readCodebooks(spark, table)), table)
+  }
+
+  /** IVF-PQ index rows `(idCol, _cell, _codes)` of `corpus` under both
+    * quantizers — the build, the append and the rebuild all write these.
+    */
+  private def ivfpqRows(corpus: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    import org.apache.spark.sql.graft.GraftSqlShims.{columnOf, expressionOf}
+    corpus
       .filter(sqrt(expr(s"graft_vec_dot($vecCol, $vecCol)")) > 0)
       .select(col(idCol),
         element_at(cellsCol(vecCol, centroids, 1), 1).as("_cell"),
         columnOf(graft.functions.PqCodes(expressionOf(col(vecCol)), codebooks)).as("_codes"))
-    graft.sources.Sources.writeBucketed(assigned, table, Seq("_cell"),
-      numBuckets, org.apache.spark.sql.SaveMode.Append)
   }
 
   /** Re-train an [[ivfpqWriteBucketed]] index's BOTH quantizers and
@@ -607,12 +589,7 @@ object Similarity {
       idCol: String, vecCol: String, nlist: Int = 0, m: Int = 0,
       ksub: Int = 0, sampleSize: Int = 1024, iters: Int = 5): Unit = {
     VectorFunctions.register(spark)
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table is not a bucketed IVF-PQ index"))
-      .numBuckets
+    val numBuckets = graft.sources.Sources.bucketSpecOf(spark, table).numBuckets
     val cur = readCodebooks(spark, table)
     val n = if (nlist > 0) nlist else readCentroids(spark, table).length
     val mm = if (m > 0) m else cur.length

@@ -59,17 +59,29 @@ object GraftSecurityExtensions {
 
   /** The extension's one analyzer rule: [[Enforcement]] for the session's
     * user against one policy view, skipped in a nested analysis (a view
-    * body, a subquery plan, or one [[Enforcement]] started). A column
-    * denial throws out of analysis.
+    * body, a subquery plan, or one [[Enforcement]] started) and on a plan
+    * that reads no relation (every Dataset action's encoder bind is one):
+    * such a plan holds no policied scan and no injected node, so it takes
+    * no policy view. A column denial throws out of analysis.
     */
   final class Enforce(session: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
       case Some(u) if !nested =>
         MaskFunctions.register(session)
-        Enforcement(session, u, policies.view(), scopeOf(session), plan)._1
+        if (!readsRelation(plan)) plan
+        else Enforcement(session, u, policies.view(), scopeOf(session), plan)._1
       case _ => plan
     }
   }
+
+  /** Whether `plan` scans a table or view, subqueries included, or embeds a
+    * query (a V1 command's `innerChildren`) that could.
+    */
+  private def readsRelation(plan: LogicalPlan): Boolean =
+    plan.collectFirstWithSubqueries {
+      case p if PlanShapes.isBaseTable(p) ||
+        p.innerChildren.exists(_.isInstanceOf[LogicalPlan]) => p
+    }.isDefined
 
   private val BoundKeys = Set(UserKey, CatalogKey, DatabaseKey)
 

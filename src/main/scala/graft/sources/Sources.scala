@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.types.StructType
 
 /** Batch + streaming connectors (SURVEY §2.B rows "Source" / "Sink").
@@ -119,6 +120,62 @@ object Sources {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+
+  /** The catalog's bucket spec of `table` — the one source of a persisted
+    * index's layout. Parse, don't wrap: a qualified name like "db.idx" must
+    * resolve as a 2-part identifier (TableIdentifier(raw) would look up
+    * "`db.idx`").
+    */
+  def bucketSpecOf(spark: SparkSession, table: String): BucketSpec =
+    spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .bucketSpec.getOrElse(throw new IllegalArgumentException(
+        s"$table is not a bucketed table"))
+
+  /** Append `rows` to a [[writeBucketed]] table in its own layout (bucket
+    * columns and count from [[bucketSpecOf]]), so an append can never be
+    * laid out differently from the table it lands in.
+    */
+  def appendBucketed(rows: DataFrame, table: String): Unit = {
+    val spec = bucketSpecOf(rows.sparkSession, table)
+    writeBucketed(rows, table, spec.bucketColumnNames, spec.numBuckets, SaveMode.Append)
+  }
+
+  /** Replace the one-row `<table>_meta` of a persisted index with `params`
+    * (name -> Int/Double/String value): the build parameters every probe
+    * and append re-reads through [[indexMeta]], so an increment can never
+    * be processed differently from its index. The layout is not a
+    * parameter: it lives in the catalog ([[bucketSpecOf]]).
+    */
+  def writeIndexMeta(spark: SparkSession, table: String, params: (String, Any)*): Unit = {
+    import org.apache.spark.sql.functions.lit
+    val meta = s"${table}_meta"
+    dropForOverwrite(spark, meta)
+    spark.range(0, 1, 1, 1).select(params.map { case (k, v) => lit(v).as(k) }: _*)
+      .write.mode(SaveMode.Overwrite).saveAsTable(meta)
+  }
+
+  /** The `<table>_meta` row [[writeIndexMeta]] wrote. */
+  def indexMeta(spark: SparkSession, table: String): Row =
+    spark.table(s"${table}_meta").head()
+
+  /** Skew guard of every bucket-keyed candidate join: drop `rows` whose
+    * bucket — the given key columns — holds more than `maxBucket` rows.
+    * Aggregate + left-semi join-back: the groupBy partially aggregates
+    * map-side, so its shuffle carries one row per BUCKET, and over a table
+    * bucketed on `keys` both the count and the join-back run
+    * bucketing-aligned — no exchange on that side at all.
+    * `maxBucket >= Int.MaxValue` skips the machinery entirely —
+    * oracle-parity runs pay no tautological join.
+    */
+  def capBuckets(rows: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
+    if (maxBucket >= Int.MaxValue) rows
+    else {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val ok = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+        .filter(col("_n") <= maxBucket).select(keys.map(col): _*)
+      rows.join(ok, keys, "left_semi")
+    }
 
   /** Range-clustered parquet layout: repartitionByRange on `clusterCols`
     * into `files` output files, sorted within each — every file owns a

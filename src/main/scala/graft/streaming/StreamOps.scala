@@ -1411,7 +1411,7 @@ object StreamOps {
     // the index exists by contract before the stream starts, and a stable pin
     // is the stronger guarantee — a mid-stream meta rewrite cannot make two
     // batches band differently
-    val (shingleSize, bands, rowsPerBand, lshNumBuckets) =
+    val (shingleSize, bands, rowsPerBand) =
       graft.operators.Dedup.readIndexMeta(docsStream.sparkSession, lshIndexTable)
     // the confirm's bench side, derived ONCE at stream start: the
     // explode + distinct over the bench corpus is batch-invariant, and
@@ -1535,7 +1535,7 @@ object StreamOps {
             Dedup.minhashAppendToIndexFromBandRows(
               sets.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
               bandRows.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
-              lshIndexTable, idCol, lshNumBuckets))))
+              lshIndexTable))))
       graft.SparkUtil.concurrently(spark,
         appends.map { case (label, body) => (s"curate b$bid: $label", body) })
       } finally {
@@ -1581,8 +1581,7 @@ object StreamOps {
       threshold: Double = 0.7): DataFrame = {
     import graft.operators.Dedup
     graft.functions.VectorFunctions.register(spark)
-    val (shingleSize, bands, rowsPerBand, _) =
-      Dedup.readIndexMeta(spark, lshIndexTable)
+    val (shingleSize, bands, rowsPerBand) = Dedup.readIndexMeta(spark, lshIndexTable)
     val sink = spark.table(sinkTable).select(col(idCol), col(textCol))
     val quarantine = spark.table(quarantineTable)
       .select(col(idCol), col(textCol)).distinct() // replays re-append

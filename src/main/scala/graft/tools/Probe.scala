@@ -18,7 +18,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * one untimed warm-up, then `reps` measured reps, each forced through the
   * noop sink and released like a Bench query. Every run prints its wall
   * time, job count, summed job time and driver gap (wall minus the union
-  * of job intervals: planning, commits and other driver-side work), then
+  * of job intervals: planning, commits and other driver-side work), the
+  * generated classes it compiled and their compile time (whole-JVM
+  * counters: in local mode the executors share the driver's JVM), then
   * the stage lines and plan head of each job of at least [[SlowJobMs]].
   * With `k=v` arguments each rep is an in-JVM A/B pair, A under the
   * session's confs and B with the overrides, so both arms share JIT,
@@ -95,6 +97,14 @@ object Probe {
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
+  /** (classes compiled, compile nanoseconds) so far in this JVM: one
+    * `CodegenMetrics` compilation-time sample per janino compile (cache
+    * hits compile nothing), and `CodeGenerator`'s compile-time counter.
+    */
+  private def codegen(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Probe <query,...> [dir,...] [reps] [k=v ...]")
     val names = args(0).split(",").toSeq
@@ -113,14 +123,17 @@ object Probe {
     /** One run: wall seconds, after printing its job breakdown. */
     def run(dir: String, name: String, label: String): Double = {
       listener.reset()
+      val (classes0, compileNs0) = codegen()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
       val wallMs = (System.nanoTime() - t0) / 1e6
       // listener events arrive asynchronously; let the bus drain
       Thread.sleep(500)
       val jobs = listener.jobs
+      val (classes1, compileNs1) = codegen()
       println(f"[probe] $dir $name $label wall=${wallMs / 1e3}%.2f s jobs=${jobs.size} " +
-        f"jobMs=${jobs.map(_.ms).sum} gapMs=${wallMs - unionMs(jobs)}%.0f")
+        f"jobMs=${jobs.map(_.ms).sum} gapMs=${wallMs - unionMs(jobs)}%.0f " +
+        f"compiles=${classes1 - classes0} compileMs=${(compileNs1 - compileNs0) / 1e6}%.0f")
       // start offsets show serialization vs overlap between jobs
       val epoch = jobs.map(_.startMs).minOption.getOrElse(0L)
       jobs.filter(_.ms >= SlowJobMs).foreach { j =>

@@ -57,8 +57,7 @@ class OperatorsSpec extends SparkFunSuite {
     Dedup.minhashWriteBucketed(docs.filter(col("doc_id") <= 2), "br_idx2",
       "doc_id", "text")
     Dedup.minhashAppendToIndexFromSets(batchSets, "br_idx", "doc_id")
-    Dedup.minhashAppendToIndexFromBandRows(batchSets, batchBands, "br_idx2",
-      "doc_id", numBuckets = 16)
+    Dedup.minhashAppendToIndexFromBandRows(batchSets, batchBands, "br_idx2")
     def tableSet(t: String) = spark.table(t).collect()
       .map(_.toSeq).toSet
     assert(tableSet("br_idx") == tableSet("br_idx2"))

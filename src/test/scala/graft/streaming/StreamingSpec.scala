@@ -1421,6 +1421,64 @@ class StreamingSpec extends SparkFunSuite {
     assert(zero == full, "0-second watermark diverged from the batch sessions")
   }
 
+  test("two-batch-late stragglers: a 0-second watermark drops them, the admission delay keeps the batch sessions") {
+    import spark.implicits._
+    // Stragglers held back TWO batches arrive past the engine's one-batch
+    // late-record lag, so a 0-second watermark judges them late. A delay of
+    // 3 slice widths W admits every one: in batch k the watermark is at
+    // most maxts(through slice k-1) - 3W, below slice k-2. And no session a
+    // straggler reaches is flushed before it: that needs end + gap below
+    // the same watermark, while such a session has end + gap >= the
+    // straggler's own time.
+    val rnd = new scala.util.Random(20261021L)
+    val gap = 1000L
+    val slices = 6
+    val events = (0 until 240).map(_ =>
+      (rnd.nextInt(8).toLong, rnd.nextInt(120000).toLong))
+    val (mn, mx) = (events.map(_._2).min, events.map(_._2).max)
+    val w = (mx - mn) / slices + 1
+    def sliceOf(t: Long): Int = ((t - mn) / w).toInt
+    val tagged = events.zipWithIndex.map { case (e, i) => (e, i % 4 == 0) }
+    def df(rows: Seq[(Long, Long)]) = rows
+      .map { case (u, t) => (u, new java.sql.Timestamp(t * 1000L)) }
+      .toDF("user_id", "ts")
+    // batch k: slice k on time plus slice k-2's stragglers; the last batch
+    // also carries a fence past every session's flush timer
+    val parts = (0 until slices + 2).map { k =>
+      df(tagged.collect {
+        case ((u, t), d) if (sliceOf(t) == k && !d) || (sliceOf(t) == k - 2 && d) => (u, t)
+      } ++ (if (k == slices + 1) Seq((-1L, mx + 3 * w + 3 * gap)) else Nil))
+    }
+    val oracle = events.groupBy(_._1).flatMap { case (u, es) =>
+      val ts = es.map(_._2).sorted
+      val islands = ts.tail.foldLeft(List((ts.head, ts.head, 1L))) {
+        case ((s, e, c) :: rest, t) =>
+          if (t - e <= gap) (s, t, c + 1) :: rest else (t, t, 1L) :: (s, e, c) :: rest
+        case (Nil, t) => List((t, t, 1L))
+      }
+      islands.map { case (s, e, c) => Seq[Any](u, s, e, c) }
+    }.toSet
+    StreamFixture.within("graft_late2") { fx =>
+      fx.stage(parts).arriveAll()
+      def sessions(delay: String, name: String) = graft.SparkUtil.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        StreamOps.runToMemory(spark,
+          StreamOps.transformWithStateSessionsOn(spark, fx.stream(spark), gap,
+            watermarkDelay = delay),
+          name, outputMode = OutputMode.Append(), allowNoDataBatches = true)
+          .filter(col("user_id") =!= -1L)
+          .select(col("user_id"), col("session_start"), col("session_end"),
+            col("n_events"))
+          .collect().map(_.toSeq).toSet
+      }
+      assert(sessions("0 seconds", "twss_late2_zero_out") != oracle,
+        "a 0-second watermark kept two-batch-late stragglers: the delay is not load-bearing")
+      assert(sessions(s"${3 * w} seconds", "twss_late2_delay_out") == oracle,
+        "the admission delay diverged from the batch sessions")
+    }
+  }
+
   test("watermark-paced sessionize: randomized bounded-disorder equivalence with the batch fold") {
     import spark.implicits._
     // seeded random corpora under random one-slice-late holdbacks: every
